@@ -341,9 +341,13 @@ def asof_join(
     Returns left columns + right value columns (null where no match within
     direction/tolerance). ``tolerance`` is in seconds.
 
-    ``num_groups``: coarse cogroup width for the default strategy — the
-    entity space is hash-folded into this many buckets and each Arrow batch
-    merges a whole bucket with ``merge_asof(by=on)``. Per-entity cogrouping
+    ``strategy`` defaults to ``'union'`` (JVM-only, no Python); see the
+    module docstring for the others.
+
+    ``num_groups``: coarse cogroup width for ``strategy='cogroup'`` (the
+    other strategies ignore it) — the entity space is hash-folded into
+    this many buckets and each Arrow batch merges a whole bucket with
+    ``merge_asof(by=on)``. Per-entity cogrouping
     (one pandas call per entity) would drown in per-group overhead at
     10^8 entities; bucketing amortizes it while the merge stays exactly
     per-entity. Defaults to 4x default parallelism.

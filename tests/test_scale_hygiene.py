@@ -1,10 +1,17 @@
 """M5 — skew salting + lineage checkpoint/resume tests."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
 from go_html_transform_spark.operators import skew
-from go_html_transform_spark.plans.lineage import CheckpointTable, partition_lineage
+from go_html_transform_spark.plans.lineage import (
+    LINEAGE_SCHEMA,
+    CheckpointTable,
+    local_frame,
+    partition_lineage,
+)
 
 
 @pytest.fixture()
@@ -49,6 +56,20 @@ def test_lineage_checksum_order_insensitive(spark):
     l1 = partition_lineage(df1, "s", n_buckets=4).select("bucket", "n_rows", "checksum")
     l2 = partition_lineage(df2, "s", n_buckets=4).select("bucket", "n_rows", "checksum")
     assert sorted(map(tuple, l1.collect())) == sorted(map(tuple, l2.collect()))
+
+
+def test_partition_lineage_rebuckets_a_bucketed_frame(spark):
+    """An existing ``__bucket`` does not override the caller's bucketing."""
+    from go_html_transform_spark.plans.lineage import with_bucket
+
+    df = spark.createDataFrame(
+        [(f"d{i:03d}", i) for i in range(40)], "doc_id string, v int"
+    )
+    counts = lambda d: sorted(  # noqa: E731
+        map(tuple, partition_lineage(d, "s", n_buckets=4)
+            .select("bucket", "n_rows").collect())
+    )
+    assert counts(with_bucket(df, n_buckets=64)) == counts(df)
 
 
 def test_checkpoint_resume_partition_granular(spark, tmp_path):
@@ -128,11 +149,150 @@ def test_run_stage_executes_plan_once(spark, tmp_path):
     assert acc.value <= 120, acc.value
 
 
-def test_pending_is_broadcast_anti_join(spark, tmp_path):
-    ckpt = CheckpointTable(spark, str(tmp_path / "lineage"))
+def _jobs_in(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return (result, job ids)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _count_reads(ckpt):
+    calls = []
+    read = ckpt.read
+
+    def counted():
+        calls.append(1)
+        return read()
+
+    ckpt.read = counted
+    return calls
+
+
+def test_pending_on_missing_checkpoint_runs_no_read(spark, tmp_path):
+    ckpt = CheckpointTable(spark, str(tmp_path / "missing"))
+    reads = _count_reads(ckpt)
     df = spark.createDataFrame([("a", 1)], "doc_id string, v int")
-    plan = ckpt.pending(df, "s")._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
+    todo, jobs = _jobs_in(spark, "pending-missing", lambda: ckpt.pending(df, "s"))
+    assert reads == [] and jobs == []
+    assert todo.columns == ["doc_id", "v"]
+
+
+def test_pending_plan_is_one_bucket_filter_without_join(spark, tmp_path):
+    ckpt = CheckpointTable(spark, str(tmp_path / "lineage"))
+    ckpt.append(
+        local_frame(
+            spark,
+            [("s", 3, 1, 7, "", "r", 0), ("s", 1, 0, 0, "", "r", 0),
+             ("other", 5, 1, 7, "", "r", 0), ("s", 6, 1, 7, "snap2", "r", 0)],
+            LINEAGE_SCHEMA,
+        )
+    )
+    df = spark.createDataFrame(
+        [(f"d{i:03d}", i) for i in range(40)], "doc_id string, v int"
+    )
+    todo = ckpt.pending(df, "s", n_buckets=8)
+    qe = todo._jdf.queryExecution()
+    assert "Join" not in qe.executedPlan().toString()
+    filters = re.findall(r"NOT __bucket#\d+ IN \(([^)]*)\)", qe.analyzed().toString())
+    assert filters == ["1,3"], qe.analyzed().toString()
+    left = {r.b for r in todo.select(
+        F.pmod(F.xxhash64("doc_id"), F.lit(8)).cast("int").alias("b")).collect()}
+    assert left and not left & {1, 3}
+
+
+def test_run_stage_reads_checkpoint_at_most_once(spark, tmp_path):
+    """Fresh checkpoint: no read, and no job before the sink write.
+    Existing checkpoint: one read, also through run_stage_with_metrics."""
+    from go_html_transform_spark.plans.lineage import (
+        MetricsTable,
+        run_stage_with_metrics,
+    )
+
+    ckpt = CheckpointTable(spark, str(tmp_path / "lineage"))
+    reads = _count_reads(ckpt)
+    df = spark.createDataFrame(
+        [(f"d{i:03d}", i) for i in range(50)], "doc_id string, v int"
+    )
+    sink = str(tmp_path / "out")
+    n, jobs = _jobs_in(
+        spark, "stage-fresh", lambda: ckpt.run_stage(df, "s", sink, n_buckets=8)
+    )
+    assert n == 50 and reads == []
+    first = spark.sparkContext.statusTracker().getJobInfo(min(jobs))
+    assert "parquet" in spark.sparkContext.statusTracker().getStageInfo(
+        max(first.stageIds)).name
+    assert ckpt.run_stage(df, "s", sink, n_buckets=8) == 0
+    assert len(reads) == 1
+    met = MetricsTable(spark, str(tmp_path / "metrics"))
+    assert run_stage_with_metrics(
+        ckpt, met, df, "s", str(tmp_path / "out2"), {"v": F.sum("v")},
+        n_buckets=8, snapshot_id="snap2",
+    ) == 50
+    assert len(reads) == 2
+
+
+def test_lineage_checksum_ignores_session_time_zone(spark):
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [("a", dt.datetime(2026, 3, 8, 1, 30)), ("b", dt.datetime(2026, 7, 1, 12))],
+        "doc_id string, t timestamp",
+    )
+    by_string = F.xxhash64(F.col("t").cast("string"))
+    tz = spark.conf.get("spark.sql.session.timeZone")
+
+    def under(zone, digest=None):
+        spark.conf.set("spark.sql.session.timeZone", zone)
+        lin = partition_lineage(df, "s", n_buckets=2, digest_expr=digest)
+        return sorted(map(tuple, lin.select("bucket", "checksum").collect()))
+
+    try:
+        assert under("UTC") == under("America/Los_Angeles")
+        # the string form this digest replaced does depend on it
+        assert under("UTC", by_string) != under("America/Los_Angeles", by_string)
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+
+
+def test_run_stage_over_map_column_is_order_insensitive(spark, tmp_path):
+    rows = [(f"d{i:03d}", i, {"k": str(i % 3)}) for i in range(30)]
+    schema = "doc_id string, v int, attrs map<string,string>"
+
+    def lineage(tag, data):
+        ckpt = CheckpointTable(spark, str(tmp_path / f"ckpt-{tag}"))
+        df = spark.createDataFrame(data, schema)
+        assert ckpt.run_stage(df, "s", str(tmp_path / f"out-{tag}"), n_buckets=4) == 30
+        return sorted(
+            map(tuple, ckpt.read().select("bucket", "n_rows", "checksum").collect())
+        )
+
+    assert lineage("fwd", rows) == lineage("rev", rows[::-1])
+
+
+def test_local_frame_runs_no_job(spark):
+    for rows in ([], [("s", 1, 2, 3, "", "r", 4)]):
+        df, jobs = _jobs_in(
+            spark, f"local-{len(rows)}",
+            lambda: local_frame(spark, rows, LINEAGE_SCHEMA),
+        )
+        assert jobs == []
+        assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
+        assert [tuple(r) for r in df.collect()] == rows
+
+
+def test_metrics_read_raises_on_unreadable_table(spark, tmp_path):
+    from go_html_transform_spark.plans.lineage import MetricsTable
+
+    assert MetricsTable(spark, str(tmp_path / "missing")).read().collect() == []
+    bad = tmp_path / "metrics"
+    bad.mkdir()
+    (bad / "part-0.parquet").write_bytes(b"not parquet")
+    with pytest.raises(Exception):
+        MetricsTable(spark, str(bad)).read().collect()
 
 
 def test_run_stage_with_metrics_single_pass_and_resume(spark, tmp_path):

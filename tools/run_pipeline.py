@@ -22,7 +22,7 @@ import time
 sys.path.insert(0, ".")
 
 
-def main() -> None:
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
     ap = argparse.ArgumentParser()
     ap.add_argument("--input", default="/root/testdata/sf0.1")
     ap.add_argument("--output", required=True)
@@ -31,8 +31,11 @@ def main() -> None:
     ap.add_argument("--rolling-k", type=int, default=3)
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--run-id", default=None)
-    args = ap.parse_args()
+    return ap.parse_args(argv)
 
+
+def run(spark, args: argparse.Namespace) -> str:
+    """Run the ``features_v1`` stage on ``spark``; return the summary line."""
     from go_html_transform_spark.operators import transforms as X
     from go_html_transform_spark.operators.asof import asof_join
     from go_html_transform_spark.operators.window import add_features
@@ -42,11 +45,9 @@ def main() -> None:
         run_stage_with_metrics,
     )
     from go_html_transform_spark.plans.pipeline import Transformer
-    from go_html_transform_spark.session import get_spark
     from go_html_transform_spark.sources import tables as S
     from go_html_transform_spark.sources.sinks import snapshot_id
 
-    spark = get_spark(app_name="ghts-pipeline")
     run_id = args.run_id or f"run-{int(time.time())}"
     snap = snapshot_id(spark, f"{args.input}/events.parquet")
 
@@ -86,15 +87,23 @@ def main() -> None:
         snapshot_id=snap,
         run_id=run_id,
     )
-    done = ckpt.completed_buckets("features_v1", snapshot_id=snap).count()
+    done = len(ckpt.completed_buckets("features_v1", snapshot_id=snap))
     mrows = {
         r.metric: r.value
         for r in metrics.read().filter(F.col("run_id") == run_id).collect()
     }
-    print(
+    return (
         f"run_id={run_id} snapshot={snap} wrote_rows={n} "
         f"completed_buckets={done}/{args.n_buckets} metrics={mrows}"
     )
+
+
+def main(argv: list[str] | None = None) -> None:
+    from go_html_transform_spark.session import get_spark
+
+    args = parse_args(argv)
+    spark = get_spark(app_name="ghts-pipeline")
+    print(run(spark, args))
     spark.stop()
 
 
