@@ -747,7 +747,7 @@ def _asof_spark(
     sf_dir,
     direction,
     tolerance=None,
-    strategy="cogroup",
+    strategy="union",
     allow_exact_matches=True,
 ):
     from go_html_transform_spark.operators.asof import asof_join
@@ -804,6 +804,46 @@ _ASOF_NEAREST_CTES = """
 """
 
 
+# CTEs shared by the direction, tolerance and bucketed matrices (each
+# expects _LAB_DEDUP before it)
+_ASOF_FWD_CTE = """
+        fwd AS (SELECT s.event_id, ROUND(l.label_value, 4) AS label_value
+                FROM seq s ASOF LEFT JOIN labd l
+                  ON s.doc_id = l.doc_id AND s.event_time <= l.obs_time)
+"""
+
+_ASOF_NEAREST_TOL600_CTES = """
+        ntb AS (SELECT s.event_id, s.event_time,
+                       CASE WHEN epoch_us(s.event_time) - epoch_us(l.obs_time)
+                            <= 600 * 1000000 THEN l.obs_time END AS bt,
+                       CASE WHEN epoch_us(s.event_time) - epoch_us(l.obs_time)
+                            <= 600 * 1000000 THEN l.label_value END AS bv
+                FROM seq s ASOF LEFT JOIN labd l
+                  ON s.doc_id = l.doc_id AND s.event_time >= l.obs_time),
+        ntf AS (SELECT s.event_id,
+                       CASE WHEN epoch_us(l.obs_time) - epoch_us(s.event_time)
+                            <= 600 * 1000000 THEN l.obs_time END AS ft,
+                       CASE WHEN epoch_us(l.obs_time) - epoch_us(s.event_time)
+                            <= 600 * 1000000 THEN l.label_value END AS fv
+                FROM seq s ASOF LEFT JOIN labd l
+                  ON s.doc_id = l.doc_id AND s.event_time <= l.obs_time),
+        ntol AS (SELECT b.event_id,
+                        ROUND(CASE
+                          WHEN b.bt IS NULL THEN f.fv
+                          WHEN f.ft IS NULL THEN b.bv
+                          WHEN epoch_us(b.event_time) - epoch_us(b.bt)
+                               <= epoch_us(f.ft) - epoch_us(b.event_time) THEN b.bv
+                          ELSE f.fv END, 4) AS label_value
+                 FROM ntb b JOIN ntf f ON b.event_id = f.event_id)
+"""
+
+_ASOF_BSTRICT_CTE = """
+        bstrict AS (SELECT s.event_id, ROUND(l.label_value, 4) AS label_value
+                    FROM seq s ASOF LEFT JOIN labd l
+                      ON s.doc_id = l.doc_id AND s.event_time > l.obs_time)
+"""
+
+
 def _tagged(df: DataFrame, variant: str) -> DataFrame:
     return df.select(F.lit(variant).alias("variant"), "*")
 
@@ -815,9 +855,7 @@ def _tagged(df: DataFrame, variant: str) -> DataFrame:
         bwd AS (SELECT s.event_id, ROUND(l.label_value, 4) AS label_value
                 FROM seq s ASOF LEFT JOIN labd l
                   ON s.doc_id = l.doc_id AND s.event_time >= l.obs_time),
-        fwd AS (SELECT s.event_id, ROUND(l.label_value, 4) AS label_value
-                FROM seq s ASOF LEFT JOIN labd l
-                  ON s.doc_id = l.doc_id AND s.event_time <= l.obs_time),
+        {_ASOF_FWD_CTE},
         {_ASOF_NEAREST_CTES},
         labhi AS (SELECT doc_id, obs_time, MAX(label_value) AS label_value
                   FROM lab WHERE label_value >= 50.0
@@ -942,31 +980,8 @@ def asof_direction_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
                               THEN l.label_value END, 4) AS label_value
                  FROM seq s ASOF LEFT JOIN labd l
                    ON s.doc_id = l.doc_id AND s.event_time <= l.obs_time),
-        ntb AS (SELECT s.event_id, s.event_time,
-                       CASE WHEN epoch_us(s.event_time) - epoch_us(l.obs_time)
-                            <= 600 * 1000000 THEN l.obs_time END AS bt,
-                       CASE WHEN epoch_us(s.event_time) - epoch_us(l.obs_time)
-                            <= 600 * 1000000 THEN l.label_value END AS bv
-                FROM seq s ASOF LEFT JOIN labd l
-                  ON s.doc_id = l.doc_id AND s.event_time >= l.obs_time),
-        ntf AS (SELECT s.event_id,
-                       CASE WHEN epoch_us(l.obs_time) - epoch_us(s.event_time)
-                            <= 600 * 1000000 THEN l.obs_time END AS ft,
-                       CASE WHEN epoch_us(l.obs_time) - epoch_us(s.event_time)
-                            <= 600 * 1000000 THEN l.label_value END AS fv
-                FROM seq s ASOF LEFT JOIN labd l
-                  ON s.doc_id = l.doc_id AND s.event_time <= l.obs_time),
-        ntol AS (SELECT b.event_id,
-                        ROUND(CASE
-                          WHEN b.bt IS NULL THEN f.fv
-                          WHEN f.ft IS NULL THEN b.bv
-                          WHEN epoch_us(b.event_time) - epoch_us(b.bt)
-                               <= epoch_us(f.ft) - epoch_us(b.event_time) THEN b.bv
-                          ELSE f.fv END, 4) AS label_value
-                 FROM ntb b JOIN ntf f ON b.event_id = f.event_id),
-        bstrict AS (SELECT s.event_id, ROUND(l.label_value, 4) AS label_value
-                    FROM seq s ASOF LEFT JOIN labd l
-                      ON s.doc_id = l.doc_id AND s.event_time > l.obs_time)
+        {_ASOF_NEAREST_TOL600_CTES},
+        {_ASOF_BSTRICT_CTE}
         SELECT 'backward_tol600' AS variant, * FROM btol
         UNION ALL SELECT 'forward_tol600' AS variant, * FROM ftol
         UNION ALL SELECT 'nearest_tol600' AS variant, * FROM ntol
@@ -1033,20 +1048,47 @@ def asof_backward_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "asof_backward_cogroup",
+    "asof_bucketed_matrix",
     _cte(
-        f""", {_LAB_DEDUP}
-        SELECT s.event_id, ROUND(l.label_value, 4) AS label_value
-        FROM seq s ASOF LEFT JOIN labd l
-          ON s.doc_id = l.doc_id AND s.event_time >= l.obs_time
+        f""", {_LAB_DEDUP},
+        {_ASOF_FWD_CTE},
+        {_ASOF_NEAREST_TOL600_CTES},
+        {_ASOF_BSTRICT_CTE}
+        SELECT 'forward' AS variant, * FROM fwd
+        UNION ALL SELECT 'nearest_tol600' AS variant, * FROM ntol
+        UNION ALL SELECT 'backward_strict' AS variant, * FROM bstrict
         """
     ),
 )
-def asof_backward_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same join through the Arrow/pandas cogroup strategy
-    (merge_asof(by=entity) per hash bucket) — the reference implementation
-    the JVM union strategy is verified against."""
-    return _asof_spark(spark, sf_dir, "backward", strategy="cogroup")
+def asof_bucketed_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bucketed plan (entity x time-bucket keys plus edge carries)
+    beyond backward, in one union: forward (forward carries), nearest
+    with a 600 s tolerance (both carries, tolerance per side) and strict
+    backward — each checked against the same DuckDB ASOF JOIN as the
+    union plan's direction and tolerance matrices."""
+    return (
+        _tagged(_asof_spark(spark, sf_dir, "forward", strategy="bucketed"), "forward")
+        .unionByName(
+            _tagged(
+                _asof_spark(
+                    spark, sf_dir, "nearest", tolerance=600, strategy="bucketed"
+                ),
+                "nearest_tol600",
+            )
+        )
+        .unionByName(
+            _tagged(
+                _asof_spark(
+                    spark,
+                    sf_dir,
+                    "backward",
+                    strategy="bucketed",
+                    allow_exact_matches=False,
+                ),
+                "backward_strict",
+            )
+        )
+    )
 
 
 @register(

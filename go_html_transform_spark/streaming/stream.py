@@ -313,8 +313,8 @@ def streaming_asof_enrich_stateful(
     are sorted by (t, tag) with labels before events at equal t
     (inclusive semantics), the label value is forward-filled, and the
     carried state is just (last_label_t, last_label_v). Duplicate labels
-    at the same (entity, t) resolve to max(value) — the batch engine's
-    `_dedupe_right` tie-break — both inside a batch (sort puts max last)
+    at the same (entity, t) resolve to max(value) — the batch as-of
+    kernel's tie-break — both inside a batch (sort puts max last)
     and across batches (the carried state joins each batch as a virtual
     label row, so the same sort arbitrates replays at the carried t).
 

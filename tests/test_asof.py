@@ -77,7 +77,7 @@ def _engine_result(df):
 
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
 @pytest.mark.parametrize("tolerance", [None, 600])
-@pytest.mark.parametrize("strategy", ["union", "cogroup", "bucketed"])
+@pytest.mark.parametrize("strategy", ["union", "bucketed"])
 def test_asof_matches_pandas(spark, direction, tolerance, strategy):
     left, right = _mk_fixture()
     l, r = _spark_dfs(spark, left, right)
@@ -95,7 +95,7 @@ def test_asof_matches_pandas(spark, direction, tolerance, strategy):
 def test_asof_empty_right(spark):
     left, _ = _mk_fixture()
     l, r = _spark_dfs(spark, left, [])
-    for strategy in ("union", "cogroup", "bucketed"):
+    for strategy in ("union", "bucketed"):
         got = asof_join(l, r, strategy=strategy)
         res = _engine_result(got)
         assert len(res) == len(left)
@@ -144,8 +144,35 @@ def test_asof_right_dedup_deterministic(spark):
     assert -999.0 not in set(_engine_result(got).values())
 
 
+def test_asof_duplicate_edge_rows_carried_keep_max(spark):
+    """Duplicate right rows at a bucket's edge time, carried into a far
+    later (earlier) bucket: the row-lexicographic max payload wins, as
+    it does inside one bucket and in the union plan; a larger payload
+    at a non-edge time of the same bucket must not."""
+    m = lambda minutes: BASE + dt.timedelta(minutes=minutes)  # noqa: E731
+    for direction, edge, decoy, shift in (
+        ("backward", m(30), m(10), 2), ("forward", m(10), m(30), -2)
+    ):
+        r = spark.createDataFrame(
+            [("d0", edge, 1.0, "z"), ("d0", edge, 2.0, "a"),
+             ("d0", edge, 2.0, "b"), ("d0", decoy, 9.0, "z")],
+            "doc_id string, obs_time timestamp, label_value double, tag string",
+        )
+        l = spark.createDataFrame(
+            [("d0", BASE + dt.timedelta(days=shift), 1.0)],
+            "doc_id string, event_time timestamp, lval double",
+        )
+        for strategy in ("union", "bucketed"):
+            got = asof_join(
+                l, r, direction=direction, strategy=strategy, bucket_seconds=3600
+            ).collect()
+            assert [(g.label_value, g.tag) for g in got] == [(2.0, "b")], (
+                direction, strategy,
+            )
+
+
 @pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
-@pytest.mark.parametrize("strategy", ["union", "cogroup"])
+@pytest.mark.parametrize("strategy", ["union", "bucketed"])
 def test_asof_strict_no_exact_matches(spark, direction, strategy):
     """allow_exact_matches=False: STRICT point-in-time (a feature may only
     read data strictly before/after its own timestamp) — pandas parity."""
@@ -154,7 +181,7 @@ def test_asof_strict_no_exact_matches(spark, direction, strategy):
     right = right + [(d, t, 123.0) for d, t, _v in left[::7]]
     l, r = _spark_dfs(spark, left, right)
     got = asof_join(l, r, direction=direction, strategy=strategy,
-                    allow_exact_matches=False)
+                    bucket_seconds=3600, allow_exact_matches=False)
 
     import pandas as pd
     lp = pd.DataFrame(left, columns=["doc_id", "event_time", "lval"]).sort_values(
@@ -204,44 +231,55 @@ def test_asof_zero_leakage_property(spark):
 
 
 def test_asof_null_time_rows_keep_side_ordering(spark):
-    """NULL-time rows have a NULL packed sort key, so they all land in
-    one ordering group where only the explicit side-tag column separates
-    left from right. Regression: the first packed-key cut dropped the
-    tag there, flipping the backward-inclusive NULL->NULL match to None.
-    Pinned semantics (pre-pack, union strategy): NULLS FIRST makes a
-    NULL right time read as -infinity — backward INCLUSIVE left rows
-    (NULL-time ones included, via the side tag) see its payload; under
-    STRICT the NULL-time left row does not (right sorts after left
-    inside the NULL group)."""
+    """NULL-time rows all land in one ordering group where only the
+    side tag separates left from right. Pinned semantics: NULLS FIRST
+    makes a NULL time read as -infinity — backward INCLUSIVE left rows
+    (NULL-time ones included, via the side tag) see the NULL-time right
+    payload; under STRICT the NULL-time left row does not (right sorts
+    after left inside the NULL group) but later rows still do. Forward,
+    the NULL-time left row sees the NULL-time right row (inclusive) or
+    the earliest timed one (strict), and no timed left row ever sees a
+    NULL-time right row. The bucketed plan must agree: its NULL bucket
+    comes first going backward and last going forward, so the NULL-time
+    right row carries into every later bucket and the earliest timed
+    right row carries into the NULL bucket."""
     l = spark.createDataFrame(
-        [("d1", None, 1.0), ("d1", BASE, 2.0)],
+        [
+            ("d1", None, 1.0),
+            ("d1", BASE, 2.0),
+            ("d1", BASE + dt.timedelta(hours=3), 3.0),
+        ],
         "doc_id string, event_time timestamp, lval double",
     )
     r = spark.createDataFrame(
-        [("d1", None, 100.0)],
+        [("d1", None, 100.0), ("d1", BASE + dt.timedelta(hours=2), 200.0)],
         "doc_id string, obs_time timestamp, label_value double",
     )
-    got = {
-        r_.lval: r_.label_value
-        for r_ in asof_join(l, r, strategy="union").collect()
+    # (direction, allow_exact_matches) -> label_value per lval
+    want = {
+        ("backward", True): {1.0: 100.0, 2.0: 100.0, 3.0: 200.0},
+        ("backward", False): {1.0: None, 2.0: 100.0, 3.0: 200.0},
+        ("forward", True): {1.0: 100.0, 2.0: 200.0, 3.0: None},
+        ("forward", False): {1.0: 200.0, 2.0: 200.0, 3.0: None},
     }
-    assert got[1.0] == 100.0  # NULL-time left matches NULL-time right
-    assert got[2.0] == 100.0  # -infinity: visible to every backward row
-    strict = {
-        r_.lval: r_.label_value
-        for r_ in asof_join(
-            l, r, strategy="union", allow_exact_matches=False
-        ).collect()
-    }
-    assert strict[1.0] is None
+    for strategy in ("union", "bucketed"):
+        for (direction, exact), expected in want.items():
+            got = {
+                r_.lval: r_.label_value
+                for r_ in asof_join(
+                    l, r, strategy=strategy, bucket_seconds=3600,
+                    direction=direction, allow_exact_matches=exact,
+                ).collect()
+            }
+            assert got == expected, (strategy, direction, exact)
 
 
 def test_asof_numeric_time_submicrosecond_resolution(spark):
-    """Numeric (double) time columns must order at FULL precision: the
-    packed micros key would quantize 1.0000001 and 1.0000004 into one
+    """Numeric (double) time columns must order at FULL precision: a
+    micros sort key would quantize 1.0000001 and 1.0000004 into one
     microsecond, letting a backward match leak a right row that is
-    actually AFTER the left row. union must agree with cogroup (pandas
-    merge_asof on the raw doubles)."""
+    actually AFTER the left row (pandas merge_asof on the raw doubles
+    keeps them apart)."""
     l = spark.createDataFrame(
         [("d1", 1.0000002, 1.0)], "doc_id string, event_time double, lval double"
     )
@@ -261,8 +299,9 @@ def test_asof_invalid_args(spark):
     l, r = _spark_dfs(spark, left, right)
     with pytest.raises(ValueError):
         asof_join(l, r, direction="sideways")
-    with pytest.raises(ValueError):
-        asof_join(l, r, strategy="quantum")
+    for strategy in ("quantum", "cogroup"):
+        with pytest.raises(ValueError):
+            asof_join(l, r, strategy=strategy)
 
 
 # ---------------------------------------------------------------------------
@@ -478,13 +517,12 @@ def test_asof_join_multi_composite_key(spark):
     # per-row json serialization in the exchange key
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "to_json" not in plan
-    # every strategy agrees on the composite key
-    for strat in ("cogroup", "bucketed"):
-        alt = asof_join_multi(
-            left, right, on=["user", "device"], direction="backward",
-            strategy=strat, bucket_seconds=20,
-        )
-        assert {r.event_id: r.label for r in alt.collect()} == got, strat
+    # the bucketed plan agrees on the composite key
+    alt = asof_join_multi(
+        left, right, on=["user", "device"], direction="backward",
+        strategy="bucketed", bucket_seconds=20,
+    )
+    assert {r.event_id: r.label for r in alt.collect()} == got
     # pandas oracle over the same composite key
     lp = pd.DataFrame(left_rows, columns=["user", "device", "t", "event_id"])
     rp = pd.DataFrame(right_rows, columns=["user", "device", "t", "label"])

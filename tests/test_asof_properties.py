@@ -2,7 +2,7 @@
 timelines (duplicate timestamps included) x direction x tolerance x
 strictness, every strategy against the pandas.merge_asof oracle.
 
-The union/cogroup/bucketed strategies must agree with each other AND
+The union and bucketed strategies must agree with each other AND
 with pandas on every generated case — including the right-side
 duplicate-(key,time) resolution (row-lexicographic max) which the
 oracle reproduces by pre-deduping.
@@ -105,7 +105,7 @@ def test_asof_matches_pandas_oracle(spark, lrows, rrows, direction, tolerance, s
     else:
         expected = {i: float("nan") for i in range(len(lrows))}
 
-    for strategy in ("union", "cogroup", "bucketed"):
+    for strategy in ("union", "bucketed"):
         out = asof_join(
             left,
             right,

@@ -63,6 +63,13 @@ def test_asof_union_strategy_is_jvm_only(spark):
     # one logical shuffle for the (entity) window — AQE may represent it as
     # a single Exchange feeding the union's both branches
     assert p.count("Exchange hashpartitioning") <= 2, p
+    # the bucketed (hot-entity) plan runs the same kernel: no Python either
+    for direction in ("backward", "forward", "nearest"):
+        p = plan_of(
+            asof_join(seq, lab, direction=direction, strategy="bucketed")
+        )
+        for op in ("FlatMapCoGroupsInPandas", "ArrowEvalPython", "PythonUDF"):
+            assert op not in p, (direction, op, p)
 
 
 def test_asof_then_features_reuses_partitioning(spark):

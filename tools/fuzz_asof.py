@@ -4,8 +4,8 @@ tests/test_asof_properties.py pins every (direction, tolerance,
 strictness, strategy) cell against pandas.merge_asof on hypothesis-sized
 cases (<= 25 rows/side). This tool replays the same oracle on BIGGER
 random cases — hundreds of events across a dozen entities with dense
-duplicate timestamps — sweeping every semantics cell across all four
-physical strategies (union / cogroup / bucketed / auto) per seed, with
+duplicate timestamps — sweeping every semantics cell across the
+strategies (union / bucketed / auto) per seed, with
 the bucketed width RANDOMIZED per cell (including widths far below the
 typical inter-event gap, i.e. mostly-empty buckets exercising the
 boundary-carry chain — SURVEY §4.1's one novel algorithm).
@@ -106,7 +106,7 @@ def main() -> None:
                         allow_exact_matches=not strict,
                     )
                     expected = dict(zip(exp["event_id"], exp["label_value"]))
-                    for strategy in ("union", "cogroup", "bucketed", "auto"):
+                    for strategy in ("union", "bucketed", "auto"):
                         cells += 1
                         # randomized width stresses the bucketed boundary
                         # carry: 7/30 s are far below the typical per-
