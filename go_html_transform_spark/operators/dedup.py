@@ -176,8 +176,8 @@ def minhash_lsh_candidates(
     discriminative signal (everything collides there). A true near-dup
     pair usually shares several bands, so dropping one oversized
     bucket rarely loses the pair (recall measured on the planted-dup
-    zipf corpus in tools/bench_prepare.py). The registry/oracle paths
-    keep None — exact candidate semantics.
+    zipf corpus: BENCH/OPS.md, round-5 prepare table). The
+    registry/oracle paths keep None — exact candidate semantics.
 
     ``use_arrow`` picks the signature tier: the Arrow kernel
     (functions/kernels.minhash16_arrow, element-wise parity-pinned to

@@ -13,9 +13,9 @@ order; nothing here introduces new semantics. Scale shape: two corpus
 shuffles total (exact-dedup hash exchange + the sink's shard
 partitioning); the near-dup machinery runs on signatures and the
 (small) pair graph, touching the corpus again only through one anti-join.
-Stage stats are opt-in and the corpus is persisted across its two
-consumers while they are collected — the plan never re-executes a stage
-(the round-1 lineage lesson, VERDICT.md item 5).
+A frame read twice is persisted so no stage re-executes (the round-1
+lineage lesson, VERDICT.md item 5); stage stats are observed on that one
+execution.
 
 Reference analogue: this is the engine's `Transformer.ApplyAll` — a whole
 prepared pipeline applied in one call (transform.go:104-117) — at corpus
@@ -24,7 +24,9 @@ scale.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import functools
+
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
@@ -41,7 +43,30 @@ from go_html_transform_spark.operators import sharding as SH
 from go_html_transform_spark.operators import sketches as SKX
 from go_html_transform_spark.sources import tables as S
 
+_EXCLUDED_RULES = "spark.sql.adaptive.optimizer.excludedRules"
+_PROPAGATE_EMPTY = "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 
+
+def _keep_empty_stages(fn):
+    """Run ``fn(spark, ...)`` with AQE's empty-relation rule off: it
+    replaces a stage that produced no rows with an empty relation, and
+    the observations inside the stage go with it (Spark reports them as
+    an empty row, e.g. ``input`` when the filters drop every doc)."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, *args, **kwargs):
+        prior = spark.conf.get(_EXCLUDED_RULES, "")
+        rules = ",".join(filter(None, (prior, _PROPAGATE_EMPTY)))
+        spark.conf.set(_EXCLUDED_RULES, rules)
+        try:
+            return fn(spark, *args, **kwargs)
+        finally:
+            spark.conf.set(_EXCLUDED_RULES, prior)
+
+    return run
+
+
+@_keep_empty_stages
 def prepare_training_corpus(
     spark: SparkSession,
     sf_dir: str,
@@ -50,7 +75,6 @@ def prepare_training_corpus(
     lang: str | None = "en",
     jaccard_threshold: float = 0.9,
     n_shards: int = 64,
-    collect_stats: bool = True,
     eval_df: DataFrame | None = None,
     decontaminate_ngram: int = 13,
     mix_weights: dict[str, float] | None = None,
@@ -64,8 +88,6 @@ def prepare_training_corpus(
     min_quality_p: float = 0.5,
     dsir_target: Column | None = None,
     bpe_num_merges: int | None = None,
-    stage_times: dict | None = None,
-    lsh_max_bucket: int | None = None,
     near_dup_on: str = "tokens",
 ) -> tuple[DataFrame, dict]:
     """Returns (prepared DataFrame, stage-by-stage stats). Writes a
@@ -74,10 +96,22 @@ def prepare_training_corpus(
     cluster sizes, so incremental re-preparation lands rows in the same
     files).
 
-    ``collect_stats=False`` skips every intermediate ``count()`` — the
-    production mode: one job, no extra corpus passes. With stats on, the
-    filtered corpus is persisted once (DISK-spillable) so the exact-dedup
-    stage and its count share a scan, and the deduped survivors likewise.
+    The call runs Spark jobs: connected components is eager
+    (operators/dedup.py), and the mix-rate counts, LM perplexity-bucket
+    thresholds, DSIR weights and BPE merge table are driver collects.
+
+    ``stats`` holds row counts observed (``df.observe``) on each stage's
+    frame below any persist of it, so no stage runs a job to be counted;
+    a count is returned once a pass that reads all of its frame has
+    finished. With ``out_dir`` (the write is the last action) that is
+    the key of every stage that ran: ``input``,
+    ``after_quality_lang_filter``, ``boilerplate_segments_removed``
+    (segments), ``after_decontaminate``, ``after_exact_dedup``,
+    ``near_dup_pairs``, ``after_near_dedup``, ``after_lm_bucket_sampling``,
+    ``after_dsir_selection``, ``after_mixing``. Without it, the keys
+    through ``near_dup_pairs``, which the eager connected-components jobs
+    read in full (a caller's ``first()`` would observe part of a later
+    frame). ``bpe_merges`` comes with the BPE stage.
 
     Optional stages (each a no-op when unset):
 
@@ -120,23 +154,14 @@ def prepare_training_corpus(
       re-tokenize: tokens/n_tok are rewritten, merge table returned in
       ``stats['bpe_merges']``.
     """
-    doc = S.documents_tokenized(spark, sf_dir)
-    stats: dict[str, int] = {}
+    stats: dict = {}
+    observed: dict[str, Observation] = {}
 
-    # ``stage_times``: optional caller-supplied dict that receives the
-    # wall seconds of each stats materialization barrier. With the
-    # persist points above each barrier, the delta at barrier k is the
-    # cost of ONLY stage k's new work — measured single-execution
-    # evidence (tools/bench_prepare.py), not just the asserted contract.
-    import time as _time
+    def observe(df: DataFrame, key: str, metric: Column = F.count(F.lit(1))):
+        observed[key] = Observation()
+        return df.observe(observed[key], metric.alias("v"))
 
-    def _staged(name, fn):
-        t0 = _time.perf_counter()
-        v = fn()
-        if stage_times is not None:
-            stage_times[name] = round(_time.perf_counter() - t0, 2)
-        return v
-
+    doc = observe(S.documents_tokenized(spark, sf_dir), "input")
     scored = doc.withColumn("lang_pred", TX.lang_id(F.col("text"))).withColumn(
         "quality_ppm", TX.quality_score_ppm(F.col("text"))
     )
@@ -163,30 +188,18 @@ def prepare_training_corpus(
         kept = kept.join(qs, "doc_id", "inner").filter(
             F.col("quality_p") >= min_quality_p
         ).drop("quality_p")
-    if collect_stats:
-        stats["input"] = _staged("input", doc.count)
-        kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
-        persisted.append(kept)
-        stats["after_quality_lang_filter"] = _staged("after_quality_lang_filter", kept.count)
+    kept = observe(kept, "after_quality_lang_filter")
 
     if boilerplate_min_docs is not None:
-        if not kept.is_cached:
-            # remove_boilerplate reads `kept` twice (hot-set subtree +
-            # corpus side) — pin it so the filter scan runs once (checked
-            # on the CURRENT frame: the quality-model gate may have
-            # persisted an ancestor while this post-gate frame is not)
-            kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
-            persisted.append(kept)
+        # remove_boilerplate reads `kept` twice (hot-set subtree + corpus
+        # side) — pin it so the filter scan runs once
+        kept = kept.persist(StorageLevel.MEMORY_AND_DISK)
+        persisted.append(kept)
         kept = BP.remove_boilerplate(kept, "text", min_docs=boilerplate_min_docs)
+        kept = observe(kept, "boilerplate_segments_removed", F.sum("bp_removed"))
         kept = kept.withColumn("tokens", tokens_expr("text")).withColumn(
             "n_tok", F.size(F.col("tokens")).cast("int")
-        )
-        if collect_stats:
-            stats["boilerplate_segments_removed"] = _staged(
-                "boilerplate_segments_removed",
-                lambda: kept.agg(F.sum("bp_removed")).first()[0],
-            )
-        kept = kept.drop("bp_removed")
+        ).drop("bp_removed")
 
     if redact_pii:
         kept = kept.withColumn("text", RDT.redact_pii(F.col("text")))
@@ -198,47 +211,35 @@ def prepare_training_corpus(
         kept = DC.decontaminate(
             kept, eval_df, "doc_id", n=decontaminate_ngram, mode="drop"
         )
-        if collect_stats:
-            stats["after_decontaminate"] = _staged("after_decontaminate", kept.count)
+        kept = observe(kept, "after_decontaminate")
 
     exact = D.exact_dedup(kept, "doc_id", F.col("text"))
-    # `exact` always has two consumers (LSH signatures + the final
-    # anti-join) — persist it regardless of stats so the dedup exchange
-    # runs once.
-    exact = exact.persist(StorageLevel.MEMORY_AND_DISK)
+    # `exact` has two consumers (LSH signatures + the final anti-join) —
+    # persist it so the dedup exchange runs once.
+    exact = observe(exact, "after_exact_dedup").persist(StorageLevel.MEMORY_AND_DISK)
     persisted.append(exact)
-    if collect_stats:
-        stats["after_exact_dedup"] = _staged("after_exact_dedup", exact.count)
 
     # near_dup_on='shingles3' switches the LSH/verify signal from raw
     # distinct-token sets to 3-gram shingle sets — the right choice on
     # skewed vocabularies (see ngram_near_duplicates: raw-token minhash
     # degenerates on a Zipf head, token-set Jaccard saturates)
     if near_dup_on == "shingles3":
-        pairs = D.ngram_near_duplicates(
-            exact, "doc_id", threshold=jaccard_threshold,
-            max_bucket=lsh_max_bucket,
-        ).select("id_a", "id_b")
+        pairs = D.ngram_near_duplicates(exact, "doc_id", threshold=jaccard_threshold)
     elif near_dup_on == "tokens":
-        pairs = D.minhash_near_duplicates(
-            exact, "doc_id", threshold=jaccard_threshold,
-            max_bucket=lsh_max_bucket,
-        ).select("id_a", "id_b")
+        pairs = D.minhash_near_duplicates(exact, "doc_id", threshold=jaccard_threshold)
     else:
         raise ValueError("near_dup_on must be 'tokens' or 'shingles3'")
     # ALWAYS persist the pair graph (tiny relative to the corpus):
     # connected_components iterates over it, and an unpersisted lineage
     # would recompute the whole LSH candidate+verify pipeline on EVERY
-    # label-propagation round — measured 1.7x on the end-to-end recipe
-    # (tools/bench_prepare.py caught stats-OFF slower than stats-ON,
-    # whose count() barrier was accidentally providing this persist).
+    # label-propagation round — measured 1.7x on the end-to-end recipe.
+    pairs = observe(pairs.select("id_a", "id_b"), "near_dup_pairs")
     pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
     persisted.append(pairs)
-    if collect_stats:
-        stats["near_dup_pairs"] = _staged("near_dup_pairs", pairs.count)
     deduped = D.near_dedup_keep_canonical(exact, pairs, "doc_id")
-    if collect_stats:
-        stats["after_near_dedup"] = _staged("after_near_dedup", deduped.count)
+    # connected components (eager) read every frame observed so far in full
+    complete = list(observed)
+    deduped = observe(deduped, "after_near_dedup")
 
     if lm_bucket_keep_ppm is not None:
         deduped = deduped.persist(StorageLevel.MEMORY_AND_DISK)
@@ -256,8 +257,7 @@ def prepare_training_corpus(
             default_ppm=0,
             seed=5,
         ).drop("lm_bucket")
-        if collect_stats:
-            stats["after_lm_bucket_sampling"] = _staged("after_lm_bucket_sampling", deduped.count)
+        deduped = observe(deduped, "after_lm_bucket_sampling")
 
     if dsir_target is not None:
         from go_html_transform_spark.operators import selection as SELN
@@ -272,8 +272,7 @@ def prepare_training_corpus(
         deduped = deduped.join(dw, "doc_id", "inner").filter(
             F.col("selected") == 1
         ).drop("selected")
-        if collect_stats:
-            stats["after_dsir_selection"] = _staged("after_dsir_selection", deduped.count)
+        deduped = observe(deduped, "after_dsir_selection")
 
     if bpe_num_merges is not None:
         from go_html_transform_spark.operators import bpe as BPE
@@ -302,8 +301,7 @@ def prepare_training_corpus(
         deduped = SA.stratified_sample(
             deduped, F.col("doc_key"), "source", rates, default_ppm=0
         )
-        if collect_stats:
-            stats["after_mixing"] = _staged("after_mixing", deduped.count)
+        deduped = observe(deduped, "after_mixing")
 
     if split_holdout_ppm is not None:
         val_ppm, test_ppm = split_holdout_ppm
@@ -322,12 +320,13 @@ def prepare_training_corpus(
         prepared.write.mode("overwrite").partitionBy("shard").parquet(out_dir)
         for p in persisted:
             p.unpersist()
+        complete = list(observed)
     else:
         # the caller owns the returned (lazy) frame; its persisted
         # ancestors stay pinned so downstream actions reuse them —
         # release_training_corpus() drops exactly these.
         prepared._prepare_persisted = persisted  # type: ignore[attr-defined]
-    return prepared, stats
+    return prepared, {k: observed[k].get["v"] for k in complete} | stats
 
 
 def release_training_corpus(prepared: DataFrame) -> None:

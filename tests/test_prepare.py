@@ -1,14 +1,18 @@
 """End-to-end training-corpus preparation (plans/prepare.py).
 
 Checks the composed pipeline against an independent recomputation from
-its already-oracle-checked building blocks, the sink layout, and the
-single-execution discipline (no stage runs more than its consumer count
-requires)."""
+its already-oracle-checked building blocks, the sink layout, the
+observed stage stats, and the single-execution discipline (no stage runs
+more than its consumer count requires)."""
 
 from __future__ import annotations
 
+import importlib.util
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
+from test_scale_hygiene import _jobs_in
 
 from go_html_transform_spark.functions import text as TX
 from go_html_transform_spark.operators import dedup as D
@@ -23,15 +27,30 @@ SF_DIR = "/root/testdata/sf0.001"
 
 PARAMS = dict(min_quality_ppm=250_000, lang=None, jaccard_threshold=0.85)
 
+# Spark jobs of the sink-mode recipe (n_shards=8, PARAMS, sf0.001,
+# local[4], 8 shuffle partitions) with no stats at all, i.e. without
+# count barriers; with one count barrier per stage it ran 61.
+SINK_JOBS_WITHOUT_STATS = 51
+
+# the stats a run without a sink returns: the frames the eager
+# connected-components jobs read in full
+IN_CALL_KEYS = {
+    "input", "after_quality_lang_filter", "after_exact_dedup", "near_dup_pairs"
+}
+
 
 @pytest.fixture(scope="module")
-def prepared(spark):
-    df, stats = prepare_training_corpus(spark, SF_DIR, n_shards=16, **PARAMS)
-    yield df, stats
-    release_training_corpus(df)
+def prepared(spark, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("prepared") / "corpus")
+    _, stats = prepare_training_corpus(
+        spark, SF_DIR, out_dir=out, n_shards=16, **PARAMS
+    )
+    return spark.read.parquet(out), stats
 
 
-def _expected_ids(spark):
+def _composed(spark):
+    """(input, filtered, exact-deduped, verified pairs, survivors): the
+    default recipe recomposed from its building blocks."""
     doc = S.documents_tokenized(spark, SF_DIR)
     kept = doc.filter(
         TX.quality_score_ppm(F.col("text")) >= PARAMS["min_quality_ppm"]
@@ -41,6 +60,11 @@ def _expected_ids(spark):
         exact, "doc_id", threshold=PARAMS["jaccard_threshold"]
     ).select("id_a", "id_b")
     final = D.near_dedup_keep_canonical(exact, pairs, "doc_id")
+    return doc, kept, exact, pairs, final
+
+
+def _expected_ids(spark):
+    final = _composed(spark)[-1]
     return {r.doc_id for r in final.select("doc_id").collect()}
 
 
@@ -65,18 +89,74 @@ def test_prepare_shards_are_stable_and_in_range(spark, prepared):
 
 def test_prepare_sink_partitioned_by_shard(spark, tmp_path):
     out = str(tmp_path / "corpus")
-    df, stats = prepare_training_corpus(
-        spark, SF_DIR, out_dir=out, n_shards=8, collect_stats=False, **PARAMS
+    _, stats = prepare_training_corpus(
+        spark, SF_DIR, out_dir=out, n_shards=8, **PARAMS
     )
-    assert stats == {}  # production mode: no extra corpus passes
     back = spark.read.parquet(out)
     assert {r.shard for r in back.select("shard").distinct().collect()} <= set(
         range(8)
     )
-    assert back.count() == df.count()
+    # every stage stat equals an exact count of the recomposed stage
+    doc, kept, exact, pairs, final = _composed(spark)
+    assert stats == {
+        "input": doc.count(),
+        "after_quality_lang_filter": kept.count(),
+        "after_exact_dedup": exact.count(),
+        "near_dup_pairs": pairs.count(),
+        "after_near_dedup": final.count(),
+    }
+    assert back.count() == stats["after_near_dedup"]
 
 
-def test_prepare_full_recipe_with_optional_stages(spark):
+def test_prepare_sink_stats_add_no_spark_job(spark, tmp_path):
+    """The observed stats ride the production execution: the sink-mode
+    recipe runs no more jobs than it did with no stats at all."""
+    _, jobs = _jobs_in(
+        spark,
+        "prepare-sink-jobs",
+        lambda: prepare_training_corpus(
+            spark, SF_DIR, out_dir=str(tmp_path / "corpus"), n_shards=8, **PARAMS
+        ),
+    )
+    assert 0 < len(jobs) <= SINK_JOBS_WITHOUT_STATS
+
+
+def test_prepare_counts_stages_above_an_empty_one(spark, tmp_path):
+    """A quality gate no doc passes empties every later stage; the
+    counts of the stages before it are still observed, and the session's
+    AQE rule setting is back as it was after the call."""
+    rules = "spark.sql.adaptive.optimizer.excludedRules"
+    before = spark.conf.get(rules, "")
+    _, stats = prepare_training_corpus(
+        spark, SF_DIR, out_dir=str(tmp_path / "corpus"), n_shards=4,
+        min_quality_ppm=10**9, lang=None,
+    )
+    assert spark.conf.get(rules, "") == before
+    assert stats == {
+        "input": S.documents_tokenized(spark, SF_DIR).count(),
+        "after_quality_lang_filter": 0,
+        "after_exact_dedup": 0,
+        "near_dup_pairs": 0,
+        "after_near_dedup": 0,
+    }
+
+
+def test_prepare_without_sink_returns_the_in_call_keys(spark, prepared):
+    """Without out_dir only the counts that jobs inside the call read in
+    full come back, each equal to the sink run's value; the returned
+    frame holds the sink run's rows."""
+    sunk, sink_stats = prepared
+    df, stats = prepare_training_corpus(spark, SF_DIR, n_shards=16, **PARAMS)
+    try:
+        assert stats == {k: sink_stats[k] for k in IN_CALL_KEYS}
+        assert {r.doc_id for r in df.select("doc_id").collect()} == {
+            r.doc_id for r in sunk.select("doc_id").collect()
+        }
+    finally:
+        release_training_corpus(df)
+
+
+def test_prepare_full_recipe_with_optional_stages(spark, tmp_path):
     """Decontamination + source mixing + packing, end to end."""
     doc = S.documents_tokenized(spark, SF_DIR)
     # eval set: token slices of 3 documents that survive the quality
@@ -89,9 +169,11 @@ def test_prepare_full_recipe_with_optional_stages(spark):
         .limit(3)
         .select(F.col("doc_key").alias("id"), F.slice("tokens", 1, 8).alias("tokens"))
     )
-    df, stats = prepare_training_corpus(
+    out = str(tmp_path / "corpus")
+    _, stats = prepare_training_corpus(
         spark,
         SF_DIR,
+        out_dir=out,
         n_shards=8,
         eval_df=ev,
         decontaminate_ngram=8,
@@ -99,10 +181,10 @@ def test_prepare_full_recipe_with_optional_stages(spark):
         pack_context_len=128,
         **PARAMS,
     )
-    rows = df.collect()
-    release_training_corpus(df)
+    rows = spark.read.parquet(out).collect()
     assert stats["after_decontaminate"] < stats["after_quality_lang_filter"]
     assert stats["after_mixing"] <= stats["after_near_dedup"]
+    assert stats["after_mixing"] == len(rows)
     srcs = {r.source for r in rows}
     assert srcs <= {"src0", "src1"} and rows  # default_ppm=0 drops the rest
     for r in rows[:50]:
@@ -128,14 +210,11 @@ def test_prepare_with_boilerplate_stage(spark):
 
     # an unreachable hot-set threshold must reduce to the baseline run
     # (the corpus is single-spaced, so the rewrite is the identity)
-    base, _ = prepare_training_corpus(
-        spark, SF_DIR, n_shards=8, collect_stats=False, **PARAMS
-    )
+    base, _ = prepare_training_corpus(spark, SF_DIR, n_shards=8, **PARAMS)
     noop, _ = prepare_training_corpus(
         spark,
         SF_DIR,
         n_shards=8,
-        collect_stats=False,
         boilerplate_min_docs=10**9,
         **PARAMS,
     )
@@ -147,14 +226,12 @@ def test_prepare_with_boilerplate_stage(spark):
 
 
 def test_prepare_release_unpins_exactly_what_it_persisted(spark):
-    df, _ = prepare_training_corpus(
-        spark, SF_DIR, n_shards=4, collect_stats=False, **PARAMS
-    )
+    df, _ = prepare_training_corpus(spark, SF_DIR, n_shards=4, **PARAMS)
     pinned = df._prepare_persisted
-    # production mode pins the doubly-consumed exact-dedup stage AND the
-    # near-dup pair graph (unpersisted, the iterative connected-
+    # the default recipe pins the doubly-consumed exact-dedup stage AND
+    # the near-dup pair graph (unpersisted, the iterative connected-
     # components loop would recompute the whole LSH pipeline per round —
-    # measured 1.64x on the end-to-end recipe, tools/bench_prepare.py)
+    # measured 1.64x on the end-to-end recipe, BENCH/OPS.md round 5)
     assert len(pinned) == 2
     assert all(p.storageLevel.useMemory or p.storageLevel.useDisk for p in pinned)
     release_training_corpus(df)
@@ -163,7 +240,7 @@ def test_prepare_release_unpins_exactly_what_it_persisted(spark):
     )
 
 
-def test_prepare_new_optional_stages(spark):
+def test_prepare_new_optional_stages(spark, tmp_path):
     """Repetition gate, PII redaction, perplexity-bucket sampling and the
     split column compose into the recipe: survivors respect every gate,
     split labels are disjoint/exhaustive/stable, and the default recipe
@@ -171,18 +248,23 @@ def test_prepare_new_optional_stages(spark):
     from go_html_transform_spark.functions import repetition as REP
     from go_html_transform_spark.operators import sampling as SAM
 
-    out, stats = prepare_training_corpus(
+    out = str(tmp_path / "corpus")
+    _, stats = prepare_training_corpus(
         spark,
         SF_DIR,
+        out_dir=out,
         min_quality_ppm=0,
         lang=None,
-        collect_stats=True,
         max_rep3_top_ppm=900_000,
         redact_pii=True,
         lm_bucket_keep_ppm={0: 1_000_000, 1: 1_000_000, 2: 200_000},
         split_holdout_ppm=(50_000, 50_000),
     )
-    rows = out.select("doc_id", "doc_key", "text", "tokens", "split").collect()
+    rows = (
+        spark.read.parquet(out)
+        .select("doc_id", "doc_key", "text", "tokens", "split")
+        .collect()
+    )
     assert len(rows) > 0
     assert "after_lm_bucket_sampling" in stats
     assert stats["after_lm_bucket_sampling"] <= stats["after_near_dedup"]
@@ -205,7 +287,6 @@ def test_prepare_new_optional_stages(spark):
         ).collect()
     }
     assert labels == rederived
-    release_training_corpus(out)
 
 
 def test_audit_split_contamination_detects_planted_leak(spark):
@@ -285,7 +366,7 @@ def test_pack_contexts_assembly_roundtrip(spark):
     assert rebuilt == {k: v for k, v in originals.items() if v}
 
 
-def test_prepare_learned_quality_dsir_and_bpe_stages(spark):
+def test_prepare_learned_quality_dsir_and_bpe_stages(spark, tmp_path):
     """The learned-classifier gate, DSIR selection and BPE retokenization
     compose into the recipe: survivors all clear the model threshold,
     DSIR keeps exactly the positive-weight docs of the deduped frame,
@@ -305,18 +386,19 @@ def test_prepare_learned_quality_dsir_and_bpe_stages(spark):
         doc, TX.quality_score_ppm(F.col("text")) >= med, num_iters=5
     )
 
-    out, stats = prepare_training_corpus(
+    out = str(tmp_path / "corpus")
+    _, stats = prepare_training_corpus(
         spark,
         SF_DIR,
+        out_dir=out,
         min_quality_ppm=0,
         lang=None,
-        collect_stats=True,
         quality_model=(w, b),
         min_quality_p=0.4,
         dsir_target=F.col("lang") == "en",
         bpe_num_merges=6,
     )
-    rows = out.select("doc_id", "tokens", "n_tok").collect()
+    rows = spark.read.parquet(out).select("doc_id", "tokens", "n_tok").collect()
     assert len(rows) > 0
     assert stats["after_dsir_selection"] <= stats["after_near_dedup"]
     merges = stats["bpe_merges"]
@@ -353,4 +435,14 @@ def test_prepare_learned_quality_dsir_and_bpe_stages(spark):
     for r in rows:
         assert list(r.tokens) == BPE._apply_merges_row(pre[r.doc_id], merges)
         assert r.n_tok == len(r.tokens)
-    release_training_corpus(out)
+
+
+def test_fuzz_prepare_two_seeds(spark, tmp_path):
+    """tools/fuzz_prepare.py on two drawn configurations: survivor ids,
+    stage stats and split labels match the recomposed operators."""
+    tool = Path(__file__).resolve().parents[1] / "tools" / "fuzz_prepare.py"
+    spec = importlib.util.spec_from_file_location("fuzz_prepare", tool)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    results = mod.check_seeds(spark, SF_DIR, range(2), str(tmp_path))
+    assert [(seed, bad) for seed, _, bad in results if bad] == []

@@ -359,16 +359,18 @@ def main() -> None:
 
     # --- end-to-end corpus preparation (raw corpus: the near-dup stage's
     # pair structure is corpus-shaped, see replication policy note) -------
-    from go_html_transform_spark.plans.prepare import prepare_training_corpus
+    from go_html_transform_spark.plans.prepare import (
+        prepare_training_corpus,
+        release_training_corpus,
+    )
 
     def run_prepare() -> None:
         out, _ = prepare_training_corpus(
             spark, sf_dir, min_quality_ppm=300_000, lang=None,
-            jaccard_threshold=0.9, n_shards=64, collect_stats=False,
+            jaccard_threshold=0.9, n_shards=64,
         )
         drain(out)
-        for p in getattr(out, "_prepare_persisted", []):
-            p.unpersist()
+        release_training_corpus(out)
 
     timed("prepare_corpus", n_doc_raw, run_prepare, iters=1)
 
