@@ -8,8 +8,9 @@ Design for 10^12 rows:
   shuffle); banding turns near-dup detection into an equi-join on
   (band_id, band_key) — candidates only, verified by true Jaccard. The
   band join is the ONLY shuffle, and its key cardinality is huge (good
-  distribution); identical-band groups are the natural skew risk —
-  cap group size or salt verify stage if a degenerate corpus demands it.
+  distribution); identical-band groups are the natural skew risk, and
+  shingle signatures (ngram_near_duplicates) keep them discriminative
+  on skewed vocabularies.
 * SimHash: 16-bit signature via pure bit arithmetic; Hamming-adjacent
   buckets join.
 * n-gram Jaccard: shingles packed into int64 (t0<<20|t1<<10|t2), same
@@ -163,21 +164,16 @@ def minhash_lsh_candidates(
     num_hashes: int = 16,
     bands: int = 4,
     use_arrow: bool | None = None,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing >=1 LSH band.
     One explode + one equi-join self-join on the band key.
 
-    ``max_bucket`` (default None = exact): drop band-buckets larger
-    than this many docs before the self-join — the standard production
-    LSH guard (datasketch's and Google's practice): a bucket shared by
-    10^4+ docs contributes |bucket|^2 candidate pairs from ONE join
-    key, which no partitioning can spread, while carrying almost no
-    discriminative signal (everything collides there). A true near-dup
-    pair usually shares several bands, so dropping one oversized
-    bucket rarely loses the pair (recall measured on the planted-dup
-    zipf corpus: BENCH/OPS.md, round-5 prepare table). The
-    registry/oracle paths keep None — exact candidate semantics.
+    Candidates are exact: every band-bucket joins in full, so a bucket
+    shared by m docs contributes m^2 pairs from ONE join key, which no
+    partitioning spreads. On skewed vocabularies raw-token signatures
+    degenerate into such buckets; shingle signatures
+    (``ngram_near_duplicates``) keep them discriminative (BENCH/OPS.md,
+    round-5 prepare table).
 
     ``use_arrow`` picks the signature tier: the Arrow kernel
     (functions/kernels.minhash16_arrow, element-wise parity-pinned to
@@ -204,16 +200,6 @@ def minhash_lsh_candidates(
         F.col(id_col).alias("id"),
         F.explode(lsh_bands(sig, bands, rows)).alias("band"),
     )
-    if max_bucket is not None:
-        oversized = (
-            banded.groupBy("band")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_bucket)
-            .select("band")
-        )
-        # the oversized set is a handful of degenerate signatures —
-        # broadcast anti-join keeps the prune map-side
-        banded = banded.join(F.broadcast(oversized), "band", "left_anti")
     other = banded.select(F.col("id").alias("id_b"), F.col("band"))
     # USER-keyed repartition before the band self-join: the banded rows
     # are tiny (id + band hash), so AQE coalesces the join's shuffle to
@@ -226,7 +212,7 @@ def minhash_lsh_candidates(
     # bounded by the verify stage's own repartition and, at corpus
     # scale, by band width sizing: rows/band controls bucket collision
     # probability.)
-    npart = df.sparkSession.sparkContext.defaultParallelism * 2
+    npart = _join_width(df.sparkSession)
     pairs = (
         banded.repartition(npart, F.col("band"))
         .join(other.repartition(npart, F.col("band")), "band")
@@ -235,6 +221,16 @@ def minhash_lsh_candidates(
         .distinct()
     )
     return pairs
+
+
+def _join_width(spark) -> int:
+    """Width of the user-keyed repartitions before the LSH band and
+    verify joins: the session's shuffle width or twice its default
+    parallelism, whichever is larger."""
+    return max(
+        int(spark.conf.get("spark.sql.shuffle.partitions")),
+        2 * spark.sparkContext.defaultParallelism,
+    )
 
 
 def jaccard(tokens_a: Column, tokens_b: Column) -> Column:
@@ -284,7 +280,6 @@ def minhash_near_duplicates(
     num_hashes: int = 16,
     bands: int = 4,
     use_arrow: bool | None = None,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """LSH candidates verified by true Jaccard >= threshold. Returns
     (id_a, id_b, jaccard). The verify join is two broadcast-able semi
@@ -299,8 +294,7 @@ def minhash_near_duplicates(
     both the double jaccard and the exact-ppm output share the two
     counts. One array op per pair instead of eight."""
     cands = minhash_lsh_candidates(
-        df, id_col, tokens_col, num_hashes, bands, use_arrow=use_arrow,
-        max_bucket=max_bucket,
+        df, id_col, tokens_col, num_hashes, bands, use_arrow=use_arrow
     )
     # Pin the verify joins' width: AQE coalesces by the CANDIDATE set's
     # shuffle bytes (two ids/row — tiny), but each joined row then pays
@@ -311,7 +305,7 @@ def minhash_near_duplicates(
     # each join survives AQE (user-specified distributions are never
     # coalesced) and costs only an exchange of data that had to shuffle
     # for the join anyway.
-    npart = df.sparkSession.sparkContext.defaultParallelism * 2
+    npart = _join_width(df.sparkSession)
     toks = df.select(
         F.col(id_col).alias("__id"),
         F.array_distinct(F.col(tokens_col)).alias("__t"),
@@ -498,7 +492,6 @@ def ngram_near_duplicates(
     threshold: float = 0.5,
     num_hashes: int = 16,
     bands: int = 4,
-    max_bucket: int | None = None,
 ) -> DataFrame:
     """Near-dups on 3-gram shingle sets: MinHash-LSH over shingles,
     verified with shingle-set Jaccard.
@@ -514,7 +507,7 @@ def ngram_near_duplicates(
     sh = df.select(F.col(id_col), shingles3(F.col(tokens_col)).alias("__sh"))
     return minhash_near_duplicates(
         sh, id_col, tokens_col="__sh", threshold=threshold,
-        num_hashes=num_hashes, bands=bands, max_bucket=max_bucket,
+        num_hashes=num_hashes, bands=bands,
     )
 
 
@@ -787,8 +780,6 @@ def semantic_dup_pairs(
     vec_col: str = "embedding",
     use_arrow: bool = False,
     max_cell: int | None = SEM_MAX_CELL,
-    sub_k: int = 16,
-    max_depth: int = 3,
 ) -> DataFrame:
     """SemDeDup candidate stage (Abbas et al. 2023, arXiv:2303.09540):
     k-means-cluster the embedding space, then compare pairs ONLY within a
@@ -823,31 +814,20 @@ def semantic_dup_pairs(
     measurably concentrates in a hot-token direction — and an
     applyInPandas cell is ONE task, so at 10^12 rows a 10^9-row cell
     serializes the job no matter how fast the BLAS is. Cells over
-    ``max_cell`` rows are bounded automatically, in two regimes:
-
-    1. SEMANTIC SUB-SPLIT (``_bound_sem_cells``): re-run the argmax
-       assignment inside each oversized cell against a ``sub_k``-entry
-       sub-codebook seeded from the cell's lowest-id members, up to
-       ``max_depth`` rounds — the recursive-ivf_assign shape. Vectors
-       within the cosine threshold of each other almost always share
-       the sub-argmax, so true near-dup pairs rarely straddle a
-       boundary (recall measured in tests on planted dups); total work
-       drops from c^2 toward sum c_i^2.
-    2. EXACT TILING (``_tile_cells``): a cell STILL oversized after the
-       sub-split (e.g. one direction of near-identical vectors, which
-       no semantic split can separate — and whose pair OUTPUT is
-       irreducibly quadratic) is sliced by id-hash into ceil(c/max_cell)
-       slices and every unordered slice pair becomes its own task.
-       Pair-set EXACT (each within-cell pair lands in exactly one
-       tile), per-task rows <= 2*max_cell, and the irreducible c^2 work
-       spreads over (c/max_cell)^2 parallel tasks instead of one.
-
-    Cells at or under ``max_cell`` (every cell of the oracle fixtures)
-    are untouched, so default-on changes nothing there. The guard costs
-    up to 2*max_depth+1 extra bounded aggregations ONLY when hot cells
-    exist. ``max_cell=None`` disables it. The expression/join form
-    needs no guard: its per-cluster equi-join shuffle is AQE
-    skew-splittable like any other skewed join."""
+    ``max_cell`` rows are tiled EXACTLY (``_tile_cells``): sliced by
+    id-hash into ceil(c/max_cell) slices, every unordered slice pair its
+    own task. Each within-cell pair lands in exactly one tile, so the
+    pair set is the unguarded one; per-task input is ~2*max_cell rows
+    and the irreducible c^2 block (a direction of near-identical
+    vectors has quadratic pair OUTPUT) spreads over (c/max_cell)^2
+    parallel tasks instead of one. Cells at or under ``max_cell`` (every
+    cell of the oracle fixtures) stay one task each. The tiling is lazy
+    and its plan does not grow with the number of hot cells: building
+    this frame runs no Spark job; executing it adds one per-cluster
+    count (k rows, broadcast back). ``max_cell=None`` drops the count
+    and leaves every cell one task. The expression/join form needs no
+    guard: its per-cluster equi-join shuffle is AQE skew-splittable like
+    any other skewed join."""
     from go_html_transform_spark.operators.similarity import ivf_assign
 
     assigned = ivf_assign(
@@ -856,11 +836,7 @@ def semantic_dup_pairs(
         "cid", F.col(id_col).alias("__id"), F.col(vec_col).cast("array<double>").alias("__v")
     )
     if use_arrow:
-        cells = assigned.withColumn("__cell", F.col("cid").cast("string"))
-        if max_cell is not None:
-            cells = _bound_sem_cells(cells, max_cell, sub_k, max_depth)
-        tiled = _tile_cells(cells, max_cell)
-        return _semantic_dup_pairs_arrow(tiled, id_col, threshold)
+        return _semantic_dup_pairs_arrow(_tile_cells(assigned, max_cell), threshold)
     a = assigned.select("cid", F.col("__id").alias("id_a"), F.col("__v").alias("va"))
     b = assigned.select(
         F.col("cid").alias("cid_b"), F.col("__id").alias("id_b"), F.col("__v").alias("vb")
@@ -875,134 +851,48 @@ def semantic_dup_pairs(
     )
 
 
-def _bound_sem_cells(
-    cells: DataFrame, max_cell: int, sub_k: int, max_depth: int
-) -> DataFrame:
-    """Recursive semantic sub-split of oversized cells: per round, each
-    cell over ``max_cell`` rows gets a deterministic sub-codebook (its
-    ``sub_k`` lowest-id member vectors, the ``ivf_centroids`` seeding
-    convention) and its rows re-argmax against it, extending the string
-    cell path ``"cid/s1/s2"``. Driver traffic per round is bounded by
-    sub_k x #hot cells; the corpus sees one size aggregation + one
-    seed-selection window over the HOT rows only. A cell of
-    near-identical vectors cannot split semantically (every member
-    shares the argmax) — rounds are capped at ``max_depth`` and the
-    residue is handled exactly by ``_tile_cells``."""
-    from go_html_transform_spark.operators.similarity import _lit_vec
-    from pyspark.sql import Window
-
-    df = cells
-    for _ in range(max_depth):
-        hot = [
-            r["__cell"]
-            for r in df.groupBy("__cell")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_cell)
-            .collect()
-        ]
-        if not hot:
-            break
-        w = Window.partitionBy("__cell").orderBy("__id")
-        seed_rows = (
-            df.filter(F.col("__cell").isin(hot))
-            .withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= sub_k)
-            .select("__cell", "__rn", "__v")
-            .collect()
-        )
-        books: dict[str, list[tuple[int, list[float]]]] = {}
-        for r in seed_rows:
-            books.setdefault(r["__cell"], []).append(
-                (r["__rn"] - 1, [float(x) for x in r["__v"]])
-            )
-        expr = F.col("__cell")
-        split_any = False
-        for cell, book in books.items():
-            if len(book) < 2:
-                continue
-            split_any = True
-            scored = F.array(
-                *[
-                    F.struct(
-                        cosine(F.col("__v"), _lit_vec(cv)).alias("c"),
-                        F.lit(-sid).alias("negid"),
-                    )
-                    for sid, cv in sorted(book)
-                ]
-            )
-            sub = -F.array_max(scored)["negid"]
-            expr = F.when(
-                F.col("__cell") == cell,
-                F.concat(F.col("__cell"), F.lit("/"), sub.cast("string")),
-            ).otherwise(expr)
-        if not split_any:
-            break
-        df = df.withColumn("__cell", expr)
-    return df
-
-
 def _tile_cells(cells: DataFrame, max_cell: int | None) -> DataFrame:
-    """Exact tile decomposition of cells still over ``max_cell`` rows:
-    rows hash-slice into ns = ceil(n/max_cell) slices on id, and each
-    row replicates into the ns tasks of the unordered slice pairs its
-    slice belongs to (``cell#i#j``, i <= j). Every within-cell pair
-    lands in EXACTLY one task — (a,b) meet only in task
-    (min(sl_a,sl_b), max(sl_a,sl_b)) — so the union over tasks is the
-    exact pair set; per-task input is <= 2*max_cell rows and the hot
-    cell's irreducible c^2 block runs as (c/max_cell)^2 parallel tasks.
-    Total replicated volume for a hot cell is c*ns = c^2/max_cell rows
-    — the same order as the pair block's row traffic lower bound,
-    now spread across the cluster. Cells within bound become the single
-    task ``cell#0#0`` with no replication."""
-    hot_sizes = (
-        {
-            r["__cell"]: int(r["__n"])
-            for r in cells.groupBy("__cell")
-            .agg(F.count(F.lit(1)).alias("__n"))
-            .filter(F.col("__n") > max_cell)
-            .collect()
-        }
-        if max_cell is not None
-        else {}
-    )
-    base_task = F.concat(F.col("__cell"), F.lit("#0#0"))
-    if not hot_sizes:
-        return cells.withColumn("__sl", F.lit(0)).withColumn(
-            "__task", base_task
+    """Exact tile decomposition of cells over ``max_cell`` rows, as one
+    lazy plan of fixed size: one ``groupBy("cid").count()`` becomes a
+    (cid, ns = ceil(n/max_cell)) frame of k rows, broadcast-joined back.
+    Rows hash-slice on id into ``__sl = pmod(xxhash64(id), ns)`` and
+    replicate into the ns tasks ``(__ti, __tj) = (least(__sl, t),
+    greatest(__sl, t))``, t in [0, ns). Every within-cell pair (a, b)
+    lands in EXACTLY one task — (min(sl_a, sl_b), max(sl_a, sl_b)) — so
+    the union over tasks is the exact pair set; per-task input is
+    ~2*max_cell rows and a hot cell's c^2 block runs as (c/max_cell)^2
+    parallel tasks. Replicated volume for a hot cell is c*ns =
+    c^2/max_cell rows, the order of its pair block's own row traffic.
+    Cells within bound get ns = 1: slice 0, the one task (0, 0), no
+    replication; ``max_cell=None`` gives every cell ns = 1 without the
+    count."""
+    if max_cell is None:
+        ns = F.lit(1)
+    else:
+        sizes = cells.groupBy("cid").count().select(
+            "cid", F.ceil(F.col("count") / F.lit(max_cell)).cast("int").alias("__ns")
         )
-    sl_expr = F.lit(0)
-    task_arr = F.array(base_task)
-    for cell, n in hot_sizes.items():
-        ns = -(-n // max_cell)
-        sl = F.pmod(
-            F.xxhash64(F.col("__id").cast("string")), F.lit(ns)
-        ).cast("int")
-        sl_expr = F.when(F.col("__cell") == cell, sl).otherwise(sl_expr)
-        arr = F.transform(
-            F.sequence(F.lit(0), F.lit(ns - 1)),
-            lambda t: F.concat(
-                F.col("__cell"),
-                F.lit("#"),
-                F.least(F.col("__sl"), t).cast("string"),
-                F.lit("#"),
-                F.greatest(F.col("__sl"), t).cast("string"),
-            ),
+        cells = cells.join(F.broadcast(sizes), "cid")
+        ns = F.col("__ns")
+    sl = F.pmod(F.xxhash64(F.col("__id").cast("string")), ns).cast("int")
+    return (
+        cells.withColumn("__sl", sl)
+        .withColumn("__t", F.explode(F.sequence(F.lit(0), ns - 1)))
+        .select(
+            "cid", "__id", "__v", "__sl",
+            F.least("__sl", "__t").alias("__ti"),
+            F.greatest("__sl", "__t").alias("__tj"),
         )
-        task_arr = F.when(F.col("__cell") == cell, arr).otherwise(task_arr)
-    return cells.withColumn("__sl", sl_expr).withColumn(
-        "__task", F.explode(task_arr)
     )
 
 
-def _semantic_dup_pairs_arrow(
-    tiled: DataFrame, id_col: str, threshold: float
-) -> DataFrame:
+def _semantic_dup_pairs_arrow(tiled: DataFrame, threshold: float) -> DataFrame:
     """Per-task pair cosines as a blocked numpy matmul. One Arrow
-    batch per task (vectors ship once per task, not once per pair); the
-    similarity block is computed in row-blocks so peak memory stays
-    ~block x c doubles. Diagonal tasks (``cell#i#i``) emit the upper
-    triangle of their rows; off-diagonal tile tasks (``cell#i#j``,
-    i < j) emit the cross-block between their two slices only — the
+    batch per task ``(cid, __ti, __tj)`` (vectors ship once per task,
+    not once per pair); the similarity block is computed in row-blocks
+    so peak memory stays ~block x c doubles. Diagonal tasks (i == j)
+    emit the upper triangle of their rows; off-diagonal tile tasks
+    (i < j) emit the cross-block between their two slices only — the
     within-slice pairs belong to the diagonal tasks. Zero-norm
     vectors score 0.0 against everything (the ``cosine`` guard) and so
     never pass a positive threshold.
@@ -1054,7 +944,7 @@ def _semantic_dup_pairs_arrow(
             "__id", kind="mergesort", ignore_index=True, key=key
         )
         cid = int(pdf["cid"].iloc[0])
-        _, ti, tj = pdf["__task"].iloc[0].rsplit("#", 2)
+        ti, tj = int(pdf["__ti"].iloc[0]), int(pdf["__tj"].iloc[0])
         out_a, out_b, out_c = [], [], []
         if ti == tj:
             # diagonal task: upper triangle over all rows
@@ -1072,8 +962,8 @@ def _semantic_dup_pairs_arrow(
                         out_c.append(row[m])
         else:
             # off-diagonal tile: cross-block between the two slices only
-            A = pdf[pdf["__sl"] == int(ti)]
-            B = pdf[pdf["__sl"] == int(tj)]
+            A = pdf[pdf["__sl"] == ti]
+            B = pdf[pdf["__sl"] == tj]
             if not len(A) or not len(B):
                 return empty
             Va = _norm(np.vstack(A["__v"].to_numpy()).astype("float64"))
@@ -1114,7 +1004,7 @@ def _semantic_dup_pairs_arrow(
             }
         )
 
-    return tiled.groupBy("__task").applyInPandas(fn, out_schema)
+    return tiled.groupBy("cid", "__ti", "__tj").applyInPandas(fn, out_schema)
 
 
 def semantic_dedup_keep(

@@ -508,7 +508,8 @@ def lm_perplexity_buckets(
     Scale shape on top of bigram_lm_stats' own plan: ONE |metric
     domain|-bounded quantile pass (histogram + cumsum exchange), one
     broadcast. Docs with < 2 tokens drop out (no pairs — the
-    bigram_lm_stats contract)."""
+    bigram_lm_stats contract); when no doc is left, the result is an
+    empty frame of the same schema."""
     stats = bigram_lm_stats(df, id_col, tokens)
     m = (
         (F.col("lm_sum") * F.lit(1000))
@@ -522,6 +523,11 @@ def lm_perplexity_buckets(
             scored.select("lm_metric"), "lm_metric", qs_ppm=qs
         ).collect()
     }
+    if not raw:
+        # no doc with a bigram: same schema, no rows
+        return scored.select(
+            id_col, "lm_metric", F.lit(0).alias("lm_bucket")
+        ).limit(0)
     lo, hi = raw[0], raw[1_000_000]
     span = max(1, int(hi) - int(lo) + 1)
     # exact floor division idiom (x - x%span)/span: the double divide of

@@ -53,7 +53,14 @@ from pyspark.sql import DataFrame, SparkSession
 _VERSION = "VERSION"
 
 
-class ConcurrentCommitError(RuntimeError):
+class CommitError(RuntimeError):
+    """A snapshot commit failed to publish its manifest. The cause is
+    chained: an ``OSError`` from the link (ENOENT when expire_snapshots
+    reclaimed a stalled writer's tmp file — retryable; EPERM/ENOTSUP on
+    a filesystem without hard links — not)."""
+
+
+class ConcurrentCommitError(CommitError):
     """Another writer committed the same snapshot id first (optimistic
     concurrency loser). Re-read the table state and retry the commit."""
 
@@ -104,7 +111,11 @@ def _json_safe(v):
 
 
 class ManifestTable:
-    """Snapshot-manifest parquet table with file-level stats pruning."""
+    """Snapshot-manifest parquet table with file-level stats pruning.
+
+    The table root must be on a filesystem with hard links: a commit
+    publishes its manifest with ``os.link``, and any link failure other
+    than losing the race raises ``CommitError``."""
 
     def __init__(self, root: str):
         self.root = root
@@ -188,6 +199,10 @@ class ManifestTable:
                 f"snapshot {snap} was committed by a concurrent "
                 f"writer (parent {parent} is stale); re-read and retry"
             ) from None
+        except OSError as e:
+            raise CommitError(
+                f"snapshot {snap} manifest could not be published: {e}"
+            ) from e
         finally:
             try:
                 os.remove(tmp)

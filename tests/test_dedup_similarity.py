@@ -866,14 +866,32 @@ def test_semantic_dup_pairs_arrow_string_ids_with_nulls(spark):
     cents = [(0, base)]
 
     expr = D.semantic_dup_pairs(emb, cents, threshold=0.9, use_arrow=False)
-    arrow = D.semantic_dup_pairs(emb, cents, threshold=0.9, use_arrow=True)
     se = {(r.id_a, r.id_b) for r in expr.collect()}
-    sa = {(r.id_a, r.id_b) for r in arrow.collect()}
-    assert se == sa and len(se) == len(names) * (len(names) - 1) // 2
-    assert all(a is not None and b is not None for a, b in sa)
-    # orientation matches the UTF-8 byte order Spark's < uses
-    for a, b in sa:
-        assert a.encode("utf-8") < b.encode("utf-8")
+    # max_cell=2 tiles the one cell, so off-diagonal tasks orient pairs
+    # across two slices
+    for max_cell in (D.SEM_MAX_CELL, 2):
+        arrow = D.semantic_dup_pairs(
+            emb, cents, threshold=0.9, use_arrow=True, max_cell=max_cell
+        )
+        sa = {(r.id_a, r.id_b) for r in arrow.collect()}
+        assert se == sa and len(se) == len(names) * (len(names) - 1) // 2
+        assert all(a is not None and b is not None for a, b in sa)
+        # orientation matches the UTF-8 byte order Spark's < uses
+        for a, b in sa:
+            assert a.encode("utf-8") < b.encode("utf-8")
+    tiled = D._tile_cells(
+        SIM.ivf_assign(emb, cents, out_col="cid").select(
+            "cid", F.col("vec_id").alias("__id"), F.col("embedding").alias("__v")
+        ),
+        2,
+    )
+    cross = (
+        tiled.filter(F.col("__ti") < F.col("__tj"))
+        .groupBy("__ti", "__tj")
+        .agg(F.countDistinct("__sl").alias("n"))
+        .filter(F.col("n") == 2)
+    )
+    assert cross.count() > 0
 
 
 def test_ivf_assign_rejects_int32_overflow_centroid_ids(spark):
@@ -900,10 +918,10 @@ def _sem_pairs_set(df):
 
 
 def test_semantic_pairs_tiling_exact_parity(spark):
-    """Hot-cell guard regime 2 (exact tiling): with sub-splitting
-    disabled (max_depth=0) and max_cell small enough that every cell
-    tiles, the Arrow tier must emit EXACTLY the expression form's pair
-    set — tiling is a task decomposition, never an approximation."""
+    """Hot-cell guard (exact tiling): with max_cell small enough that
+    every cell tiles, the Arrow tier must emit EXACTLY the expression
+    form's pair set — tiling is a task decomposition, never an
+    approximation."""
     import random
 
     rng = random.Random(3)
@@ -920,7 +938,7 @@ def test_semantic_pairs_tiling_exact_parity(spark):
 
     expr = D.semantic_dup_pairs(emb, cents, threshold=0.9, use_arrow=False)
     tiledonly = D.semantic_dup_pairs(
-        emb, cents, threshold=0.9, use_arrow=True, max_cell=64, max_depth=0
+        emb, cents, threshold=0.9, use_arrow=True, max_cell=64
     )
     se, st = _sem_pairs_set(expr), _sem_pairs_set(tiledonly)
     assert set(se) == set(st) and len(se) > 50
@@ -933,74 +951,86 @@ def test_semantic_pairs_tiling_exact_parity(spark):
         "cid",
         F.col("vec_id").alias("__id"),
         F.col("embedding").cast("array<double>").alias("__v"),
-    ).withColumn("__cell", F.col("cid").cast("string"))
-    tasks = {
-        r["__task"]
-        for r in D._tile_cells(assigned, 64).select("__task").distinct().collect()
-    }
-    assert len(tasks) > len(cents)
-
-
-def test_semantic_pairs_subsplit_bounds_cells_and_keeps_recall(spark):
-    """Hot-cell guard regime 1 (semantic sub-split): a deliberately hot
-    single-cluster fixture must come out with every grouping cell at or
-    near the bound, and planted near-dup pairs (the ones SemDeDup
-    exists to find) must survive the split with high recall."""
-    import random
-
-    rng = random.Random(11)
-    # 12 well-separated directions, heavy skew into direction 0
-    dirs = []
-    for d in range(12):
-        v = [rng.gauss(0, 1) for _ in range(16)]
-        nrm = sum(x * x for x in v) ** 0.5
-        dirs.append([x / nrm for x in v])
-    rows, planted = [], []
-    rid = 0
-    for d, count in enumerate([600] + [30] * 11):
-        for _ in range(count):
-            base = [x + rng.gauss(0, 0.15) for x in dirs[d]]
-            rows.append((rid, [round(x, 4) for x in base]))
-            rid += 1
-            if rid % 7 == 0:  # planted dup of the previous row
-                rows.append(
-                    (rid, [round(x + rng.gauss(0, 0.003), 4) for x in base])
-                )
-                planted.append((rid - 1, rid))
-                rid += 1
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    # ONE seeded centroid -> everything lands in a single hot cell
-    cents = [(0, dirs[0])]
-
-    guarded = D.semantic_dup_pairs(
-        emb, cents, threshold=0.995, use_arrow=True,
-        max_cell=100, sub_k=8, max_depth=3,
     )
-    got = {(r.id_a, r.id_b) for r in guarded.collect()}
-    hit = sum(1 for p in planted if p in got)
-    assert hit / len(planted) >= 0.9, (hit, len(planted))
+    tasks = D._tile_cells(assigned, 64).select("cid", "__ti", "__tj").distinct()
+    assert tasks.count() > len(cents)
 
-    # guarded pair set is a subset of the unguarded (it only splits)
-    full = {
-        (r.id_a, r.id_b)
-        for r in D.semantic_dup_pairs(
-            emb, cents, threshold=0.995, use_arrow=True, max_cell=None
-        ).collect()
+
+def test_semantic_dup_pairs_arrow_builds_without_spark_jobs(spark):
+    """Building the Arrow tier is lazy: no Spark job runs until the pair
+    frame executes, with or without cells over ``max_cell``."""
+    from test_scale_hygiene import _jobs_in
+
+    rng = random.Random(5)
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(4)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
+    for max_cell, group in ((D.SEM_MAX_CELL, "sem-cold"), (4, "sem-hot")):
+        pairs, jobs = _jobs_in(
+            spark,
+            group,
+            lambda: D.semantic_dup_pairs(
+                emb, cents, threshold=0.5, use_arrow=True, max_cell=max_cell
+            ),
+        )
+        assert jobs == [], (max_cell, jobs)
+        assert pairs.columns == ["cid", "id_a", "id_b", "cos"]
+
+
+def _hot_cells(spark, n_cells):
+    """n_cells cells of 3 rows each (cid = id mod n_cells)."""
+    return spark.range(3 * n_cells).select(
+        (F.col("id") % n_cells).cast("int").alias("cid"),
+        F.col("id").alias("__id"),
+        F.array(F.col("id").cast("double")).alias("__v"),
+    )
+
+
+def test_tile_cells_plan_size_fixed_and_tiles_exact(spark):
+    """The tiling plan does not grow with the number of hot cells (one
+    count + broadcast join, no per-cell branch), and over 1,000 hot cells
+    every within-cell id pair lands in exactly one task of at most
+    2*max_cell rows."""
+    import itertools
+    import re
+    from collections import Counter, defaultdict
+
+    max_cell = 2
+
+    def plan(n_cells):
+        qe = D._tile_cells(_hot_cells(spark, n_cells), max_cell)._jdf.queryExecution()
+        # expression ids and the literals n_cells, 3*n_cells read as N
+        return re.sub(r"\d+", "N", qe.analyzed().toString())
+
+    one, many = plan(1), plan(1000)
+    assert len(one) == len(many) and one == many, (one, many)
+
+    rows = (
+        D._tile_cells(_hot_cells(spark, 1000), max_cell)
+        .select(
+            "cid", F.col("__id").alias("id"), F.col("__sl").alias("sl"),
+            F.col("__ti").alias("ti"), F.col("__tj").alias("tj"),
+        )
+        .collect()
+    )
+    tasks = defaultdict(list)
+    for r in rows:
+        tasks[(r.cid, r.ti, r.tj)].append(r)
+    assert max(len(t) for t in tasks.values()) <= 2 * max_cell
+    covered = Counter()
+    for (cid, ti, tj), members in tasks.items():
+        for a, b in itertools.combinations(members, 2):
+            if ti == tj or {a.sl, b.sl} == {ti, tj}:
+                covered[(cid, min(a.id, b.id), max(a.id, b.id))] += 1
+    expected = {
+        (c, *p)
+        for c in range(1000)
+        for p in itertools.combinations((c, 1000 + c, 2000 + c), 2)
     }
-    assert got <= full
-
-    # cells actually got bounded (tiling may still top off the residue)
-    assigned = SIM.ivf_assign(emb, cents, out_col="cid").select(
-        "cid",
-        F.col("vec_id").alias("__id"),
-        F.col("embedding").cast("array<double>").alias("__v"),
-    ).withColumn("__cell", F.col("cid").cast("string"))
-    bounded = D._bound_sem_cells(assigned, 100, 8, 3)
-    sizes = [
-        r["n"]
-        for r in bounded.groupBy("__cell").agg(F.count("*").alias("n")).collect()
-    ]
-    assert len(sizes) > 1 and max(sizes) < len(rows)
+    assert set(covered) == expected
+    assert set(covered.values()) == {1}
 
 
 def test_shingles3_large_vocab_no_aliasing_and_range_check(spark):
@@ -1048,39 +1078,6 @@ def test_shingles3_large_vocab_no_aliasing_and_range_check(spark):
     )
     with pytest.raises(Exception, match="shingles3"):
         neg.select(D.shingles3(F.col("tokens")).alias("sh")).collect()
-
-
-def test_lsh_max_bucket_prunes_degenerate_bands_only(spark):
-    """max_bucket drops oversized band-buckets before the self-join (the
-    production LSH guard). A planted near-dup pair that also shares a
-    NON-degenerate band must survive; capped candidates are a subset of
-    exact candidates."""
-    rng = random.Random(23)
-    # 60 docs sharing one low-entropy token set -> a degenerate bucket;
-    # two planted near-identical docs with a distinctive tail
-    common = [1, 2, 3, 4, 5, 6, 7, 8]
-    rows = []
-    for i in range(60):
-        rows.append((f"c{i:03d}", common + [rng.randrange(9, 12)]))
-    tail = [rng.randrange(5000, 9000) for _ in range(30)]
-    rows.append(("planted_a", tail))
-    rows.append(("planted_b", tail[:-1] + [tail[-1]]))
-    df = spark.createDataFrame(rows, "doc_id string, tokens array<int>")
-
-    exact = {
-        (r.id_a, r.id_b)
-        for r in D.minhash_lsh_candidates(df, "doc_id").collect()
-    }
-    capped = {
-        (r.id_a, r.id_b)
-        for r in D.minhash_lsh_candidates(df, "doc_id", max_bucket=20).collect()
-    }
-    assert capped <= exact
-    assert ("planted_a", "planted_b") in capped
-    # the degenerate c* clique is gone (its pairs were >= C(60,2))
-    assert len(capped) < len(exact)
-    c_pairs = [p for p in capped if p[0].startswith("c") and p[1].startswith("c")]
-    assert len(c_pairs) < 60 * 59 // 2 / 2
 
 
 def test_minhash_candidate_join_width_pinned(spark, corpus):

@@ -4,6 +4,7 @@ actually prunes), atomic commit semantics, and lineage integration."""
 
 from __future__ import annotations
 
+import errno
 import os
 
 import pytest
@@ -167,6 +168,37 @@ def test_published_manifest_survives_stale_version_cache(spark, table):
     assert open(table._manifest_path(2)).read() == before
     assert table.current_snapshot_id() == 2
     assert table.scan(spark).count() == 30
+
+
+@pytest.mark.parametrize(
+    "err", [errno.ENOENT, errno.EPERM], ids=["ENOENT", "EPERM"]
+)
+def test_link_failure_raises_typed_commit_error(spark, table, monkeypatch, err):
+    """A manifest link that fails for any reason but a lost race (tmp
+    file reclaimed, no hard links on the filesystem) raises CommitError
+    chained from the OSError, not ConcurrentCommitError, and publishes
+    nothing."""
+    from go_html_transform_spark.sources import manifest_table as MT
+
+    table.append(_range_df(spark, 0, 10))
+    files = table._write_data(_range_df(spark, 10, 20), None)
+
+    def broken_link(src, dst):
+        raise OSError(err, os.strerror(err), src)
+
+    monkeypatch.setattr(MT.os, "link", broken_link)
+    with pytest.raises(MT.CommitError) as info:
+        table._commit(files, parent=1)
+    assert not isinstance(info.value, MT.ConcurrentCommitError)
+    assert isinstance(info.value.__cause__, OSError)
+    assert info.value.__cause__.errno == err
+    monkeypatch.undo()
+    assert table.current_snapshot_id() == 1
+    assert not [
+        n for n in os.listdir(os.path.join(table.root, "manifests"))
+        if n.endswith(".tmp")
+    ]
+    assert issubclass(MT.ConcurrentCommitError, MT.CommitError)
 
 
 def test_empty_prune_result_yields_empty_frame(spark, table):

@@ -141,6 +141,26 @@ def test_prepare_counts_stages_above_an_empty_one(spark, tmp_path):
     }
 
 
+def test_prepare_lm_bucket_stage_after_an_empty_gate(spark, tmp_path):
+    """Perplexity-bucket sampling over an empty corpus completes and
+    counts 0 (it has no LM quantiles to take)."""
+    out = str(tmp_path / "corpus")
+    _, stats = prepare_training_corpus(
+        spark, SF_DIR, out_dir=out, n_shards=4,
+        min_quality_ppm=10**9, lang=None,
+        lm_bucket_keep_ppm={0: 1_000_000, 1: 1_000_000, 2: 200_000},
+    )
+    assert stats["input"] > 0
+    assert {k: v for k, v in stats.items() if k != "input"} == {
+        "after_quality_lang_filter": 0,
+        "after_exact_dedup": 0,
+        "near_dup_pairs": 0,
+        "after_near_dedup": 0,
+        "after_lm_bucket_sampling": 0,
+    }
+    assert (Path(out) / "_SUCCESS").exists()
+
+
 def test_prepare_without_sink_returns_the_in_call_keys(spark, prepared):
     """Without out_dir only the counts that jobs inside the call read in
     full come back, each equal to the sink run's value; the returned

@@ -351,6 +351,16 @@ def test_lm_perplexity_buckets_partition_properties(spark):
     assert again == {r.doc_id: r.lm_bucket for r in rows}
 
 
+def test_lm_perplexity_buckets_without_bigrams_is_empty(spark, dirty_df):
+    """No doc with two tokens (or no doc at all) leaves no metric to
+    take quantiles of: the result is empty, with the normal schema."""
+    normal = SK.lm_perplexity_buckets(dirty_df).schema
+    for df in (dirty_df.filter(F.size("tokens") < 2), dirty_df.limit(0)):
+        out = SK.lm_perplexity_buckets(df)
+        assert out.schema == normal
+        assert out.collect() == []
+
+
 def test_value_quantiles_by_group_order_statistics(spark):
     """Per-group quantiles equal python order statistics per group."""
     import math
