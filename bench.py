@@ -7,8 +7,8 @@ Runs the headline stages at $SPARK_GRAFT_SF_DIR (default
     {"metric": ..., "value": <total sec>, "unit": "sec",
      "queries": {<stage>: sec, ...}, "sf": ..., "sequences_per_sec": ...}
 
-Scaling evidence (N vs 4N cores): tools/bench_scaling.py runs this script
-at N and 4N cores (default 2 vs 8) and writes BENCH/BASELINE.md.
+Scaling evidence (N vs 4N cores) on this harness's workloads:
+``python3 perfbench/run.py --scaling`` (local[1] vs local[4]).
 """
 
 from __future__ import annotations

@@ -318,6 +318,13 @@ def prepare_training_corpus(
 
     if out_dir is not None:
         prepared.write.mode("overwrite").partitionBy("shard").parquet(out_dir)
+        if observed[next(reversed(observed))].get["v"] == 0:
+            # a partitioned write of zero rows leaves only _SUCCESS, which
+            # spark.read.parquet cannot infer a schema from: write the
+            # empty schema under one partition (limit(0) runs no scan)
+            prepared.drop("shard").limit(0).write.mode("overwrite").parquet(
+                f"{out_dir}/shard=0"
+            )
         for p in persisted:
             p.unpersist()
         complete = list(observed)

@@ -13,6 +13,10 @@ event streams:
 * ``streaming_rule_counts``: selector-rule match counts per sliding
   window — Transformer rules applied to a stream unchanged (stateless
   Column expressions compose with any source).
+* per-entity GroupState operators (running features, stateful as-of,
+  decayed counts, EWMA): each is one pandas ``step`` run by the shared
+  driver ``_per_entity_state``; both stateful as-of wrappers run the one
+  k-table state machine ``_asof_stateful``.
 
 Tests drive these with ``trigger(availableNow=True)`` into a memory sink —
 the bounded-replay mode that exercises the full incremental planner.
@@ -29,26 +33,33 @@ from pyspark.sql import functions as F
 from go_html_transform_spark.sources.tables import documents_tokenized
 
 
+def _events_stream(
+    spark: SparkSession, sf_dir: str, max_files_per_trigger: int
+) -> DataFrame:
+    """readStream over ``{sf_dir}/events.parquet`` with the static
+    schema. The file-stream source requires a DIRECTORY: a single file
+    is mirrored into a temp dir via symlink (testdata is read-only).
+    Production streams read a landing directory anyway."""
+    src = f"{sf_dir}/events.parquet"
+    static_events = spark.read.parquet(src)
+    if os.path.isfile(src):
+        d = tempfile.mkdtemp(prefix="ghts_stream_")
+        os.symlink(os.path.abspath(src), os.path.join(d, "events.parquet"))
+        src = d
+    return (
+        spark.readStream.schema(static_events.schema)
+        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .parquet(src)
+    )
+
+
 def stream_sequences(
     spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1
 ) -> DataFrame:
     """readStream over the events parquet directory joined to the static
     tokenized-documents dim (stream-static joins are broadcast-friendly
     and stateless)."""
-    src = f"{sf_dir}/events.parquet"
-    static_events = spark.read.parquet(src)
-    if os.path.isfile(src):
-        # the file-stream source requires a DIRECTORY; mirror the single
-        # driver-provided file into a temp dir via symlink (testdata is
-        # read-only). Production streams read a landing directory anyway.
-        d = tempfile.mkdtemp(prefix="ghts_stream_")
-        os.symlink(os.path.abspath(src), os.path.join(d, "events.parquet"))
-        src = d
-    e = (
-        spark.readStream.schema(static_events.schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .parquet(src)
-    )
+    e = _events_stream(spark, sf_dir, max_files_per_trigger)
     d = documents_tokenized(spark, sf_dir)
     return (
         e.join(F.broadcast(d), e["user_id"] == d["doc_key"], "inner")
@@ -71,17 +82,7 @@ def stream_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     label STREAM for the stateful streaming enrichment operators."""
     from go_html_transform_spark.sources.tables import _doc_id_expr
 
-    src = f"{sf_dir}/events.parquet"
-    static_events = spark.read.parquet(src)
-    if os.path.isfile(src):
-        d = tempfile.mkdtemp(prefix="ghts_stream_")
-        os.symlink(os.path.abspath(src), os.path.join(d, "events.parquet"))
-        src = d
-    e = (
-        spark.readStream.schema(static_events.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
+    e = _events_stream(spark, sf_dir, 1)
     return e.filter(F.col("event_type") == "purchase").select(
         _doc_id_expr(F.col("user_id")).alias("doc_id"),
         F.col("ts").alias("obs_time"),
@@ -150,15 +151,75 @@ def streaming_rule_counts(
     )
 
 
+def _group_fn(step, idle_timeout_minutes: int | None):
+    """The per-group function of :func:`_per_entity_state`: the whole
+    GroupState protocol around one pandas ``step``.
+
+    A timed-out group is evicted with no output. Otherwise the group's
+    frames are concatenated and, unless the batch is empty,
+    ``step(entity, batch, prior_state)`` runs with ``prior_state`` the
+    carried tuple (``None`` for a new entity) and returns
+    ``(out_frame | None, new_state | None)``; a non-None state replaces
+    the stored one. The idle timeout is re-armed on every live call."""
+    import pandas as pd
+
+    def fn(key, pdfs, state):
+        if state.hasTimedOut:
+            state.remove()
+            return
+        batch = pd.concat(list(pdfs), ignore_index=True)
+        if len(batch):
+            out, new_state = step(key[0], batch, state.get if state.exists else None)
+            if new_state is not None:
+                state.update(new_state)
+            if out is not None:
+                yield out
+        if idle_timeout_minutes is not None:
+            state.setTimeoutDuration(idle_timeout_minutes * 60_000)
+
+    return fn
+
+
+def _per_entity_state(
+    stream: DataFrame,
+    key_col: str,
+    out_schema: str,
+    state_schema: str,
+    step,
+    idle_timeout_minutes: int | None,
+) -> DataFrame:
+    """One stateful operator per entity of ``key_col``: every GroupState
+    operator of this module is this call with its own pandas ``step``
+    (see :func:`_group_fn`). ``idle_timeout_minutes`` arms a
+    processing-time timeout that evicts an entity's state after that
+    long without input; ``None`` keeps state until the query ends. With
+    the timeout, Spark runs a batch on every trigger to look for idle
+    groups, so run such a query on a processing-time trigger: an
+    availableNow drain of it never ends."""
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    timeout = (
+        GroupStateTimeout.ProcessingTimeTimeout
+        if idle_timeout_minutes is not None
+        else GroupStateTimeout.NoTimeout
+    )
+    return stream.groupBy(key_col).applyInPandasWithState(
+        _group_fn(step, idle_timeout_minutes),
+        out_schema,
+        state_schema,
+        "append",
+        timeout,
+    )
+
+
 def streaming_stateful_features(
     seq_stream: DataFrame,
     gap_seconds: int = 1800,
     idle_timeout_minutes: int | None = None,
 ) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: per-entity
-    RUNNING features carried in GroupState across micro-batches — the
-    stateful streaming twin of the batch window bundle
-    (operators/window.py:add_features):
+    """Custom stateful operator (pandas GroupState): per-entity RUNNING
+    features carried across micro-batches — the stateful streaming twin
+    of the batch window bundle (operators/window.py:add_features):
 
     * ``session_id`` — gap-based sessionization continued across batches
       (identical semantics to batch sessionize: new session when the gap
@@ -177,68 +238,53 @@ def streaming_stateful_features(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     out_schema = (
         "doc_id string, event_id long, event_time timestamp, n_tok int, "
         "session_id int, cum_events long, cum_n_tok long, gap_prev_s double"
     )
     state_schema = "last_us long, session_id int, cum_events long, cum_n_tok long"
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_minutes is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
-    def fn(key, pdfs, state: GroupState):
-        (doc_id,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def step(doc_id, batch, prior):
         last_us, session_id, cum_events, cum_n_tok = (
-            state.get if state.exists else (None, -1, 0, 0)
+            prior if prior is not None else (None, -1, 0, 0)
         )
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values(
-                ["event_time", "event_id"], kind="mergesort", ignore_index=True
-            )
-            ts_us = batch["event_time"].astype("int64").to_numpy() // 1_000
-            prev_us = np.roll(ts_us, 1).astype("float64")
-            prev_us[0] = float(last_us) if last_us is not None else np.nan
-            gap_s = (ts_us - prev_us) / 1e6
-            is_new = np.isnan(gap_s) | (gap_s > gap_seconds)
-            sessions = session_id + np.cumsum(is_new)
-            n_tok = batch["n_tok"].to_numpy()
-            out = pd.DataFrame(
-                {
-                    "doc_id": doc_id,
-                    "event_id": batch["event_id"],
-                    "event_time": batch["event_time"],
-                    "n_tok": batch["n_tok"],
-                    "session_id": sessions.astype("int32"),
-                    "cum_events": cum_events + np.arange(1, len(batch) + 1),
-                    "cum_n_tok": cum_n_tok + np.cumsum(n_tok.astype("int64")),
-                    "gap_prev_s": gap_s,
-                }
-            )
-            state.update(
-                (
-                    int(ts_us[-1]),
-                    int(sessions[-1]),
-                    int(cum_events + len(batch)),
-                    int(cum_n_tok + int(n_tok.sum())),
-                )
-            )
-            yield out
-        if idle_timeout_minutes is not None:
-            state.setTimeoutDuration(idle_timeout_minutes * 60_000)
+        batch = batch.sort_values(
+            ["event_time", "event_id"], kind="mergesort", ignore_index=True
+        )
+        ts_us = batch["event_time"].astype("int64").to_numpy() // 1_000
+        prev_us = np.roll(ts_us, 1).astype("float64")
+        prev_us[0] = float(last_us) if last_us is not None else np.nan
+        gap_s = (ts_us - prev_us) / 1e6
+        is_new = np.isnan(gap_s) | (gap_s > gap_seconds)
+        sessions = session_id + np.cumsum(is_new)
+        n_tok = batch["n_tok"].to_numpy()
+        out = pd.DataFrame(
+            {
+                "doc_id": doc_id,
+                "event_id": batch["event_id"],
+                "event_time": batch["event_time"],
+                "n_tok": batch["n_tok"],
+                "session_id": sessions.astype("int32"),
+                "cum_events": cum_events + np.arange(1, len(batch) + 1),
+                "cum_n_tok": cum_n_tok + np.cumsum(n_tok.astype("int64")),
+                "gap_prev_s": gap_s,
+            }
+        )
+        return out, (
+            int(ts_us[-1]),
+            int(sessions[-1]),
+            int(cum_events + len(batch)),
+            int(cum_n_tok + int(n_tok.sum())),
+        )
 
-    return (
+    return _per_entity_state(
         seq_stream.withColumn("event_time", F.col("event_time").cast("timestamp"))
-        .select("doc_id", "event_id", "event_time", "n_tok")
-        .groupBy("doc_id")
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", timeout)
+        .select("doc_id", "event_id", "event_time", "n_tok"),
+        "doc_id",
+        out_schema,
+        state_schema,
+        step,
+        idle_timeout_minutes,
     )
 
 
@@ -290,6 +336,118 @@ def streaming_asof_enrich(
     )
 
 
+def _asof_stateful(
+    seq_stream: DataFrame,
+    label_streams: list[DataFrame],
+    out_cols: list[str],
+    key_col: str,
+    time_col: str,
+    label_time_col: str,
+    label_value_col: str,
+    idle_timeout_minutes: int | None,
+) -> DataFrame:
+    """The stateful as-of state machine behind both public wrappers:
+    label stream ``i`` fills output column ``out_cols[i]``, with state
+    ``(t0, v0, ..., t{k-1}, v{k-1})`` per entity — the latest label row
+    of each table seen so far.
+
+    Events and labels join one tagged union (``__tag`` 1 / 0, ``__src``
+    the table). Within a batch, each table's carried state joins as a
+    virtual label row, and the rows sort by ``(__t, __tag, __v,
+    event_id)`` with NULLs first: labels before events at equal t
+    (inclusive), the max value last among same-(entity, t) duplicates,
+    a NULL value smallest — the batch as-of kernel's tie-break, applied
+    uniformly to in-batch labels and to a label replayed at the carried
+    t. Each table then fills by POSITION (the latest label row of that
+    table, whatever its value), so a NULL-valued label yields NULL until
+    the next label, as in the batch as-of; a value-ffill would carry the
+    older label past it. One total order serves all k tables, because
+    each fill reads only its own table's rows."""
+    import numpy as np
+    import pandas as pd
+
+    events = seq_stream.select(
+        F.col(key_col),
+        F.col("event_id").cast("long").alias("event_id"),
+        F.col(time_col).cast("timestamp").alias("__ts"),
+        F.unix_micros(F.col(time_col).cast("timestamp")).alias("__t"),
+        F.lit(1).alias("__tag"),
+        F.lit(-1).alias("__src"),
+        F.lit(None).cast("double").alias("__v"),
+    )
+    unioned = events
+    for i, labels in enumerate(label_streams):
+        unioned = unioned.unionByName(
+            labels.select(
+                F.col(key_col),
+                F.lit(None).cast("long").alias("event_id"),
+                F.col(label_time_col).cast("timestamp").alias("__ts"),
+                F.unix_micros(F.col(label_time_col).cast("timestamp")).alias(
+                    "__t"
+                ),
+                F.lit(0).alias("__tag"),
+                F.lit(i).alias("__src"),
+                F.col(label_value_col).cast("double").alias("__v"),
+            )
+        )
+    out_schema = (
+        f"{key_col} string, event_id long, {time_col} timestamp, "
+        + ", ".join(f"{c} double" for c in out_cols)
+    )
+    k = len(out_cols)
+    state_schema = ", ".join(f"t{i} long, v{i} double" for i in range(k))
+
+    def step(ent, batch, prior):
+        st = list(prior) if prior is not None else [None] * (2 * k)
+        virts = [
+            {
+                key_col: ent,
+                "event_id": None,
+                "__ts": pd.NaT,
+                "__t": int(st[2 * i]),
+                "__tag": 0,
+                "__src": i,
+                "__v": float(st[2 * i + 1]),
+            }
+            for i in range(k)
+            if st[2 * i] is not None
+        ]
+        if virts:
+            batch = pd.concat(
+                [pd.DataFrame(virts, columns=batch.columns), batch],
+                ignore_index=True,
+            )
+        batch = batch.sort_values(["__t", "__tag", "__v", "event_id"],
+                                  kind="mergesort", ignore_index=True,
+                                  na_position="first")
+        ev = (batch["__tag"] == 1).to_numpy()
+        src = batch["__src"].to_numpy()  # -1 on events
+        t_arr = batch["__t"].to_numpy()
+        v_arr = batch["__v"].to_numpy()
+        pos = np.arange(len(batch))
+        out = {
+            key_col: ent,
+            "event_id": batch["event_id"][ev],
+            time_col: batch["__ts"][ev],
+        }
+        for i, c in enumerate(out_cols):
+            last_i = np.maximum.accumulate(np.where(src == i, pos, -1))
+            out[c] = np.where(
+                last_i >= 0, v_arr[np.clip(last_i, 0, None)], np.nan
+            )[ev]
+            if last_i[-1] >= 0:
+                st[2 * i] = int(t_arr[last_i[-1]])
+                st[2 * i + 1] = float(v_arr[last_i[-1]])
+        return (
+            pd.DataFrame(out) if ev.any() else None,
+            tuple(st) if any(x is not None for x in st) else None,
+        )
+
+    return _per_entity_state(
+        unioned, key_col, out_schema, state_schema, step, idle_timeout_minutes
+    )
+
+
 def streaming_asof_enrich_stateful(
     seq_stream: DataFrame,
     label_stream: DataFrame,
@@ -303,132 +461,32 @@ def streaming_asof_enrich_stateful(
     outgrows :func:`streaming_asof_enrich`'s broadcast ceiling. Both
     sides arrive as STREAMS (a static label table is a bounded stream:
     ``spark.readStream.parquet(...)`` + availableNow) tagged and
-    unioned, grouped by entity, with ``applyInPandasWithState`` carrying
-    the as-of state across micro-batches.
+    unioned, grouped by entity, with a GroupState carrying the as-of
+    state across micro-batches.
 
     The key insight that keeps state CONSTANT (2 scalars per entity, not
     a timeline): under the per-entity in-order arrival contract (the
     streaming_decayed_counts discipline), a backward-inclusive as-of
-    only ever needs the LATEST label seen so far — rows inside a batch
-    are sorted by (t, tag) with labels before events at equal t
-    (inclusive semantics), the label value is forward-filled, and the
-    carried state is just (last_label_t, last_label_v). Duplicate labels
-    at the same (entity, t) resolve to max(value) — the batch as-of
-    kernel's tie-break — both inside a batch (sort puts max last)
-    and across batches (the carried state joins each batch as a virtual
-    label row, so the same sort arbitrates replays at the carried t).
+    only ever needs the LATEST label seen so far. Duplicate labels at
+    the same (entity, t) resolve to max(value) — the batch as-of
+    kernel's tie-break — inside a batch and across batches; the
+    mechanics are :func:`_asof_stateful`'s, shared with
+    :func:`streaming_asof_enrich_many_stateful` (this is its k = 1 case,
+    with ``label_value_col`` as the output name).
 
     Events with no label yet emit NULL, matching the batch left join.
     Scale shape: ONE shuffle of the unioned stream on the entity key;
     state-store size = 2 scalars x live entities, evictable via the
     processing-time timeout."""
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    events = seq_stream.select(
-        F.col(key_col),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col(time_col).cast("timestamp").alias("__ts"),
-        F.unix_micros(F.col(time_col).cast("timestamp")).alias("__t"),
-        F.lit(1).alias("__tag"),
-        F.lit(None).cast("double").alias("__v"),
-    )
-    labs = label_stream.select(
-        F.col(key_col),
-        F.lit(None).cast("long").alias("event_id"),
-        F.col(label_time_col).cast("timestamp").alias("__ts"),
-        F.unix_micros(F.col(label_time_col).cast("timestamp")).alias("__t"),
-        F.lit(0).alias("__tag"),
-        F.col(label_value_col).cast("double").alias("__v"),
-    )
-    unioned = events.unionByName(labs)
-    out_schema = (
-        f"{key_col} string, event_id long, {time_col} timestamp, "
-        f"{label_value_col} double"
-    )
-    state_schema = "t long, v double"
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_minutes is not None
-        else GroupStateTimeout.NoTimeout
-    )
-
-    def fn(key, pdfs, state: GroupState):
-        (ent,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        last_t, last_v = state.get if state.exists else (None, None)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            if last_t is not None:
-                # materialize the carried state as a virtual label row:
-                # the (t, tag, v) sort below then applies the batch
-                # engine's max tie-break UNIFORMLY — a replayed label at
-                # the carried t with a smaller value sorts BEFORE the
-                # virtual row, so both the forward-fill and the state
-                # update see the max (fillna-after-ffill only covered
-                # rows before the first in-batch label, silently letting
-                # a duplicate smaller label win for later events)
-                virt = batch.iloc[:0].copy()
-                virt.loc[0] = {
-                    key_col: ent,
-                    "event_id": None,
-                    "__ts": pd.NaT,
-                    "__t": int(last_t),
-                    "__tag": 0,
-                    "__v": float(last_v),
-                }
-                batch = pd.concat([virt, batch], ignore_index=True)
-            # na_position='first': a NULL-VALUED label must LOSE the
-            # same-(entity, t) tie to any valued duplicate — the batch
-            # engine's max(struct) treats NULL as smallest. With NaN
-            # sorted last it would win the tie instead.
-            batch = batch.sort_values(
-                ["__t", "__tag", "__v", "event_id"],
-                kind="mergesort",
-                ignore_index=True,
-                na_position="first",
-            )
-            is_lab = batch["__tag"] == 0
-            # position-based forward fill, NOT value-ffill: the winner is
-            # the latest LABEL ROW, whatever its value. A value-ffill
-            # skips a NULL-valued label and carries the OLDER label
-            # forward, where the batch as-of yields NULL until the next
-            # label arrives.
-            import numpy as np
-
-            last_lab = np.maximum.accumulate(
-                np.where(is_lab.to_numpy(), np.arange(len(batch)), -1)
-            )
-            v_arr = batch["__v"].to_numpy()
-            filled = pd.Series(
-                np.where(
-                    last_lab >= 0, v_arr[np.clip(last_lab, 0, None)], np.nan
-                ),
-                index=batch.index,
-            )
-            ev = batch["__tag"] == 1
-            if ev.any():
-                yield pd.DataFrame(
-                    {
-                        key_col: ent,
-                        "event_id": batch.loc[ev, "event_id"],
-                        time_col: batch.loc[ev, "__ts"],
-                        label_value_col: filled[ev],
-                    }
-                )
-            if is_lab.any():
-                lrows = batch[is_lab]
-                state.update(
-                    (int(lrows["__t"].iloc[-1]), float(lrows["__v"].iloc[-1]))
-                )
-        if idle_timeout_minutes is not None:
-            state.setTimeoutDuration(idle_timeout_minutes * 60_000)
-
-    return unioned.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
+    return _asof_stateful(
+        seq_stream,
+        [label_stream],
+        [label_value_col],
+        key_col,
+        time_col,
+        label_time_col,
+        label_value_col,
+        idle_timeout_minutes,
     )
 
 
@@ -450,139 +508,23 @@ def streaming_asof_enrich_many_stateful(
     Same contracts as :func:`streaming_asof_enrich_stateful` (per-entity
     in-order arrival across micro-batches; backward-inclusive; duplicate
     same-(entity, t) labels resolve to max value, matching the batch
-    engine's tie-break), applied independently per table: within a batch
-    rows sort by (t, tag, v) and each table's forward-fill only reads its
-    own rows, so one total order serves all k tables — the same argument
-    that lets the batch ``asof_join_many`` share one window sort.
+    engine's tie-break), applied independently per table by the one
+    state machine, :func:`_asof_stateful`.
 
     All label streams must expose (``key_col``, ``label_time_col``,
     ``label_value_col``) with a double value column.
     """
-    import pandas as pd
-
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     if not label_streams:
         raise ValueError("label_streams must name at least one stream")
-    names = list(label_streams)
-
-    events = seq_stream.select(
-        F.col(key_col),
-        F.col("event_id").cast("long").alias("event_id"),
-        F.col(time_col).cast("timestamp").alias("__ts"),
-        F.unix_micros(F.col(time_col).cast("timestamp")).alias("__t"),
-        F.lit(1).alias("__tag"),
-        F.lit(-1).alias("__src"),
-        F.lit(None).cast("double").alias("__v"),
-    )
-    unioned = events
-    for i, name in enumerate(names):
-        unioned = unioned.unionByName(
-            label_streams[name].select(
-                F.col(key_col),
-                F.lit(None).cast("long").alias("event_id"),
-                F.col(label_time_col).cast("timestamp").alias("__ts"),
-                F.unix_micros(F.col(label_time_col).cast("timestamp")).alias(
-                    "__t"
-                ),
-                F.lit(0).alias("__tag"),
-                F.lit(i).alias("__src"),
-                F.col(label_value_col).cast("double").alias("__v"),
-            )
-        )
-    out_cols = [f"{n}_{label_value_col}" for n in names]
-    out_schema = (
-        f"{key_col} string, event_id long, {time_col} timestamp, "
-        + ", ".join(f"{c} double" for c in out_cols)
-    )
-    state_schema = ", ".join(
-        f"t{i} long, v{i} double" for i in range(len(names))
-    )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_minutes is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    k = len(names)
-
-    def fn(key, pdfs, state: GroupState):
-        (ent,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        st = list(state.get) if state.exists else [None] * (2 * k)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            # materialize each table's carried state as a virtual label
-            # row so the (t, tag, v) sort applies the batch engine's max
-            # tie-break uniformly (same reasoning as the single-table
-            # variant: fillna-after-ffill let a replayed smaller label
-            # at the carried t win for events after it)
-            virts = []
-            for i in range(k):
-                if st[2 * i] is not None:
-                    virts.append(
-                        {
-                            key_col: ent,
-                            "event_id": None,
-                            "__ts": pd.NaT,
-                            "__t": int(st[2 * i]),
-                            "__tag": 0,
-                            "__src": i,
-                            "__v": float(st[2 * i + 1]),
-                        }
-                    )
-            if virts:
-                batch = pd.concat(
-                    [pd.DataFrame(virts, columns=batch.columns), batch],
-                    ignore_index=True,
-                )
-            # na_position='first' + position-based fill: same NULL-valued
-            # label contract as the single-table variant (NULL loses the
-            # same-t tie to a value; a solitary NULL-valued label yields
-            # NULL, not the older label).
-            batch = batch.sort_values(
-                ["__t", "__tag", "__v", "event_id"],
-                kind="mergesort",
-                ignore_index=True,
-                na_position="first",
-            )
-            import numpy as np
-
-            ev = batch["__tag"] == 1
-            v_arr = batch["__v"].to_numpy()
-            filled = {}
-            for i in range(k):
-                is_i = (batch["__tag"] == 0) & (batch["__src"] == i)
-                last_i = np.maximum.accumulate(
-                    np.where(is_i.to_numpy(), np.arange(len(batch)), -1)
-                )
-                filled[i] = pd.Series(
-                    np.where(
-                        last_i >= 0, v_arr[np.clip(last_i, 0, None)], np.nan
-                    ),
-                    index=batch.index,
-                )
-                if is_i.any():
-                    lrows = batch[is_i]
-                    st[2 * i] = int(lrows["__t"].iloc[-1])
-                    st[2 * i + 1] = float(lrows["__v"].iloc[-1])
-            if ev.any():
-                out = {
-                    key_col: ent,
-                    "event_id": batch.loc[ev, "event_id"],
-                    time_col: batch.loc[ev, "__ts"],
-                }
-                for i, c in enumerate(out_cols):
-                    out[c] = filled[i][ev]
-                yield pd.DataFrame(out)
-            if any(x is not None for x in st):
-                state.update(tuple(st))
-        if idle_timeout_minutes is not None:
-            state.setTimeoutDuration(idle_timeout_minutes * 60_000)
-
-    return unioned.groupBy(key_col).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", timeout
+    return _asof_stateful(
+        seq_stream,
+        list(label_streams.values()),
+        [f"{n}_{label_value_col}" for n in label_streams],
+        key_col,
+        time_col,
+        label_time_col,
+        label_value_col,
+        idle_timeout_minutes,
     )
 
 
@@ -722,7 +664,7 @@ def run_available_now(
     materialized result (test/driver helper). ``output_mode`` overrides
     the default, which probes the plan: unwatermarked streaming
     aggregations require complete mode, everything else (stateless ops,
-    applyInPandasWithState, dropDuplicatesWithinWatermark) runs append.
+    the GroupState operators, dropDuplicatesWithinWatermark) runs append.
     (The old default keyed on ``isStreaming`` — true for EVERY streaming
     frame — so non-agg streams crashed unless the caller passed
     append explicitly.)"""
@@ -779,8 +721,6 @@ def streaming_decayed_counts(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     width = bucket_seconds * 1_000_000
     out_schema = (
         f"{partition_by} string, event_id long, {time_col} timestamp, "
@@ -789,65 +729,49 @@ def streaming_decayed_counts(
     state_schema = "top_bucket long, " + ", ".join(
         f"c{i} long" for i in range(horizon + 1)
     )
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_minutes is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
-    def fn(key, pdfs, state: GroupState):
-        (ent,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        if state.exists:
-            vals = state.get
-            top, carried = vals[0], list(vals[1:])
+    def step(ent, batch, prior):
+        if prior is not None:
+            top, carried = prior[0], list(prior[1:])
+            counts: dict[int, int] = {
+                top - i: carried[i] for i in range(horizon + 1) if carried[i]
+            }
         else:
-            top, carried = None, [0] * (horizon + 1)
-        counts: dict[int, int] = (
-            {top - i: carried[i] for i in range(horizon + 1) if carried[i]}
-            if top is not None
-            else {}
+            top, counts = None, {}
+        batch = batch.sort_values(
+            [time_col, "event_id"], kind="mergesort", ignore_index=True
         )
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values(
-                [time_col, "event_id"], kind="mergesort", ignore_index=True
-            )
-            us = batch[time_col].astype("int64").to_numpy() // 1_000
-            buckets = us // width
-            feat = np.zeros(len(batch), dtype=np.int64)
-            for b in np.unique(buckets):  # sorted; O(buckets/batch) python
-                mask = buckets == b
-                f = 0
-                for d in range(1, horizon + 1):
-                    f += counts.get(int(b) - d, 0) << (horizon - d)
-                feat[mask] = f
-                counts[int(b)] = counts.get(int(b), 0) + int(mask.sum())
-            new_top = int(buckets[-1]) if top is None else max(top, int(buckets[-1]))
-            state.update(
-                tuple(
-                    [new_top]
-                    + [int(counts.get(new_top - i, 0)) for i in range(horizon + 1)]
-                )
-            )
-            yield pd.DataFrame(
-                {
-                    partition_by: ent,
-                    "event_id": batch["event_id"],
-                    time_col: batch[time_col],
-                    f"decayed_{bucket_seconds}s_fp": feat,
-                }
-            )
-        if idle_timeout_minutes is not None:
-            state.setTimeoutDuration(idle_timeout_minutes * 60_000)
+        us = batch[time_col].astype("int64").to_numpy() // 1_000
+        buckets = us // width
+        feat = np.zeros(len(batch), dtype=np.int64)
+        for b in np.unique(buckets):  # sorted; O(buckets/batch) python
+            mask = buckets == b
+            f = 0
+            for d in range(1, horizon + 1):
+                f += counts.get(int(b) - d, 0) << (horizon - d)
+            feat[mask] = f
+            counts[int(b)] = counts.get(int(b), 0) + int(mask.sum())
+        new_top = int(buckets[-1]) if top is None else max(top, int(buckets[-1]))
+        out = pd.DataFrame(
+            {
+                partition_by: ent,
+                "event_id": batch["event_id"],
+                time_col: batch[time_col],
+                f"decayed_{bucket_seconds}s_fp": feat,
+            }
+        )
+        return out, tuple(
+            [new_top] + [int(counts.get(new_top - i, 0)) for i in range(horizon + 1)]
+        )
 
-    return (
+    return _per_entity_state(
         seq_stream.withColumn(time_col, F.col(time_col).cast("timestamp"))
-        .select(partition_by, "event_id", time_col)
-        .groupBy(partition_by)
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", timeout)
+        .select(partition_by, "event_id", time_col),
+        partition_by,
+        out_schema,
+        state_schema,
+        step,
+        idle_timeout_minutes,
     )
 
 
@@ -879,8 +803,6 @@ def streaming_ewma(
     import numpy as np
     import pandas as pd
 
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
     q = 1.0 - alpha
     if not (0.0 < q < 1.0):
         raise ValueError("alpha must be in (0, 1)")
@@ -891,63 +813,52 @@ def streaming_ewma(
         f"{value_col}_ewma double"
     )
     state_schema = "s double, w double"
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if idle_timeout_minutes is not None
-        else GroupStateTimeout.NoTimeout
-    )
 
-    def fn(key, pdfs, state: GroupState):
-        (ent,) = key
-        if state.hasTimedOut:
-            state.remove()
-            return
-        s0, w0 = state.get if state.exists else (0.0, 0.0)
-        batch = pd.concat(list(pdfs), ignore_index=True)
-        if len(batch):
-            batch = batch.sort_values(
-                [time_col, "event_id"], kind="mergesort", ignore_index=True
-            )
-            x = batch[value_col].astype("float64").to_numpy()
-            ok = ~np.isnan(x)
-            xz = np.where(ok, x, 0.0)
-            one = ok.astype("float64")
-            prior = np.empty(len(batch), dtype="float64")
-            s, w = float(s0), float(w0)
-            for lo in range(0, len(batch), K):
-                xs, os_ = xz[lo : lo + K], one[lo : lo + K]
-                L = len(xs)
-                qi = q ** np.arange(1, L + 1)  # q^i
-                qinv = 1.0 / qi  # q^-i
-                cs = np.cumsum(xs * qinv)
-                cw = np.cumsum(os_ * qinv)
-                s_arr = qi * (s + cs)  # state AFTER row i
-                w_arr = qi * (w + cw)
-                # output BEFORE row i: shift by one, seed with carry-in
-                prev_s = np.concatenate(([s], s_arr[:-1]))
-                prev_w = np.concatenate(([w], w_arr[:-1]))
-                with np.errstate(invalid="ignore", divide="ignore"):
-                    prior[lo : lo + L] = np.where(
-                        prev_w > 0, prev_s / prev_w, np.nan
-                    )
-                s, w = float(s_arr[-1]), float(w_arr[-1])
-            state.update((s, w))
-            yield pd.DataFrame(
-                {
-                    partition_by: ent,
-                    "event_id": batch["event_id"],
-                    time_col: batch[time_col],
-                    f"{value_col}_ewma": prior,
-                }
-            )
-        if idle_timeout_minutes is not None:
-            state.setTimeoutDuration(idle_timeout_minutes * 60_000)
+    def step(ent, batch, prior):
+        s, w = (float(x) for x in prior) if prior is not None else (0.0, 0.0)
+        batch = batch.sort_values(
+            [time_col, "event_id"], kind="mergesort", ignore_index=True
+        )
+        x = batch[value_col].astype("float64").to_numpy()
+        ok = ~np.isnan(x)
+        xz = np.where(ok, x, 0.0)
+        one = ok.astype("float64")
+        prior_mean = np.empty(len(batch), dtype="float64")
+        for lo in range(0, len(batch), K):
+            xs, os_ = xz[lo : lo + K], one[lo : lo + K]
+            L = len(xs)
+            qi = q ** np.arange(1, L + 1)  # q^i
+            qinv = 1.0 / qi  # q^-i
+            cs = np.cumsum(xs * qinv)
+            cw = np.cumsum(os_ * qinv)
+            s_arr = qi * (s + cs)  # state AFTER row i
+            w_arr = qi * (w + cw)
+            # output BEFORE row i: shift by one, seed with carry-in
+            prev_s = np.concatenate(([s], s_arr[:-1]))
+            prev_w = np.concatenate(([w], w_arr[:-1]))
+            with np.errstate(invalid="ignore", divide="ignore"):
+                prior_mean[lo : lo + L] = np.where(
+                    prev_w > 0, prev_s / prev_w, np.nan
+                )
+            s, w = float(s_arr[-1]), float(w_arr[-1])
+        out = pd.DataFrame(
+            {
+                partition_by: ent,
+                "event_id": batch["event_id"],
+                time_col: batch[time_col],
+                f"{value_col}_ewma": prior_mean,
+            }
+        )
+        return out, (s, w)
 
-    return (
+    return _per_entity_state(
         seq_stream.withColumn(time_col, F.col(time_col).cast("timestamp"))
-        .select(partition_by, "event_id", time_col, value_col)
-        .groupBy(partition_by)
-        .applyInPandasWithState(fn, out_schema, state_schema, "append", timeout)
+        .select(partition_by, "event_id", time_col, value_col),
+        partition_by,
+        out_schema,
+        state_schema,
+        step,
+        idle_timeout_minutes,
     )
 
 

@@ -1076,6 +1076,118 @@ def test_streaming_asof_null_valued_labels_match_batch(spark, tmp_path):
     assert got2 == want
 
 
+class _FakeGroupState:
+    """Records the GroupState calls of one per-group invocation."""
+
+    def __init__(self, timed_out=False, value=None):
+        self.hasTimedOut = timed_out
+        self.exists = value is not None
+        self.get = value
+        self.calls = []
+
+    def remove(self):
+        self.calls.append(("remove",))
+
+    def update(self, value):
+        self.calls.append(("update", value))
+
+    def setTimeoutDuration(self, ms):
+        self.calls.append(("timeout", ms))
+
+
+def test_group_state_driver_evicts_timed_out_groups():
+    """Idle-timeout eviction: a timed-out group's state is removed, the
+    step never runs, nothing is emitted and no timeout is re-armed."""
+    seen = []
+
+    def step(ent, batch, prior):
+        seen.append(ent)
+        return batch, (1,)
+
+    state = _FakeGroupState(timed_out=True, value=(7,))
+    assert list(ST._group_fn(step, 5)(("e1",), iter([]), state)) == []
+    assert state.calls == [("remove",)]
+    assert seen == []
+
+
+def test_group_state_driver_live_group_protocol():
+    """A live group: the step sees the entity, the concatenated batch and
+    the carried state; its frame is emitted, its state stored, and the
+    idle timeout (minutes) is re-armed in milliseconds. With no timeout
+    configured none is set; an empty batch skips the step."""
+    import pandas as pd
+
+    seen = []
+
+    def step(ent, batch, prior):
+        seen.append((ent, list(batch["x"]), prior))
+        return batch.assign(y=batch["x"] * 2), (int(batch["x"].sum()),)
+
+    pdfs = [pd.DataFrame({"x": [1, 2]}), pd.DataFrame({"x": [3]})]
+    state = _FakeGroupState(value=(4,))
+    out = list(ST._group_fn(step, 5)(("e1",), iter(pdfs), state))
+    assert seen == [("e1", [1, 2, 3], (4,))]
+    assert [list(o["y"]) for o in out] == [[2, 4, 6]]
+    assert state.calls == [("update", (6,)), ("timeout", 300_000)]
+
+    fresh = _FakeGroupState()
+    list(ST._group_fn(step, None)(("e2",), iter(pdfs[:1]), fresh))
+    assert seen[-1] == ("e2", [1, 2], None)
+    assert fresh.calls == [("update", (3,))]
+
+    empty = _FakeGroupState(value=(4,))
+    no_rows = [pd.DataFrame({"x": pd.Series([], dtype="int64")})]
+    assert list(ST._group_fn(step, 5)(("e3",), iter(no_rows), empty)) == []
+    assert len(seen) == 2
+    assert empty.calls == [("timeout", 300_000)]
+
+
+def test_stateful_operator_runs_with_an_idle_timeout(spark, tmp_path):
+    """``idle_timeout_minutes`` selects the processing-time timeout on a
+    real query. That timeout runs a batch on every trigger (to check for
+    idle groups), so neither an availableNow drain nor
+    processAllAvailable() ever returns: the query runs on a
+    processing-time trigger until its one input file is in the sink. No
+    entity idles 5 minutes in that time, so the output equals the run
+    without a timeout."""
+    import time
+
+    src = str(tmp_path / "ev")
+    spark.createDataFrame(
+        [("a", 1, 0, 3), ("a", 2, 60, 4), ("b", 3, 30, 5)],
+        "doc_id string, event_id long, s long, n_tok int",
+    ).select(
+        "doc_id", "event_id",
+        F.timestamp_seconds("s").alias("event_time"), "n_tok",
+    ).coalesce(1).write.parquet(src)
+
+    def drained(name, **kw):
+        stream = spark.readStream.schema(
+            "doc_id string, event_id long, event_time timestamp, n_tok int"
+        ).parquet(src)
+        q = (
+            ST.streaming_ewma(stream, "n_tok", alpha=0.5, **kw)
+            .writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(processingTime="1 second")
+            .start()
+        )
+        try:
+            deadline = time.monotonic() + 120
+            while spark.table(name).count() < 3:
+                assert q.exception() is None and time.monotonic() < deadline
+                time.sleep(0.5)
+        finally:
+            q.stop()
+        rows = spark.table(name).collect()
+        return sorted((r.event_id, r.n_tok_ewma) for r in rows)
+
+    got = drained("ewma_idle_timeout", idle_timeout_minutes=5)
+    assert got == drained("ewma_no_timeout")
+    assert got == [(1, None), (2, 3.0), (3, None)]
+
+
 def test_run_available_now_default_mode_probes_the_plan(spark, tmp_path):
     """Non-aggregating streams drain with the default output mode (the
     old default keyed on isStreaming — always true — and crashed)."""

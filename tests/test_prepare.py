@@ -124,11 +124,13 @@ def test_prepare_sink_stats_add_no_spark_job(spark, tmp_path):
 def test_prepare_counts_stages_above_an_empty_one(spark, tmp_path):
     """A quality gate no doc passes empties every later stage; the
     counts of the stages before it are still observed, and the session's
-    AQE rule setting is back as it was after the call."""
+    AQE rule setting is back as it was after the call. The empty sink
+    reads back as 0 rows with the prepared schema, shard included."""
     rules = "spark.sql.adaptive.optimizer.excludedRules"
     before = spark.conf.get(rules, "")
-    _, stats = prepare_training_corpus(
-        spark, SF_DIR, out_dir=str(tmp_path / "corpus"), n_shards=4,
+    out = str(tmp_path / "corpus")
+    prepared, stats = prepare_training_corpus(
+        spark, SF_DIR, out_dir=out, n_shards=4,
         min_quality_ppm=10**9, lang=None,
     )
     assert spark.conf.get(rules, "") == before
@@ -139,6 +141,12 @@ def test_prepare_counts_stages_above_an_empty_one(spark, tmp_path):
         "near_dup_pairs": 0,
         "after_near_dedup": 0,
     }
+    back = spark.read.parquet(out)
+    assert back.count() == 0
+    def fields(df):
+        return sorted((f.name, f.dataType.simpleString()) for f in df.schema)
+
+    assert fields(back) == fields(prepared)
 
 
 def test_prepare_lm_bucket_stage_after_an_empty_gate(spark, tmp_path):

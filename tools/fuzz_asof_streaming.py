@@ -4,11 +4,13 @@ The streaming parity tests pin hand-built fixtures (replay tie-breaks,
 NULL-valued labels, exact-t ties) across two micro-batches. This tool
 randomizes the axis those fixtures can't: RANDOM timelines cut at RANDOM
 micro-batch boundaries (2-5 slices), with duplicate (entity, t) labels
-and occasional NULL label values, comparing
-``streaming_asof_enrich_stateful`` drained one file per trigger against
-the batch ``asof_join`` on the same rows. Batch-boundary state bugs
-(carried-label tie-breaks, NULL state, boundary-straddling entities) are
-exactly what random cuts surface.
+and occasional NULL label values. It drives the one stateful as-of state
+machine with k = 2 label streams
+(``streaming_asof_enrich_many_stateful``, drained one file per trigger)
+and checks each output column against its own batch ``asof_join`` on
+the same rows. Batch-boundary state bugs (carried-label tie-breaks, NULL
+state, boundary-straddling entities, one table's state leaking into the
+other's column) are exactly what random cuts surface.
 
 Usage: python tools/fuzz_asof_streaming.py [n_seeds]
 Prints one JSON line; non-zero exit on any divergence.
@@ -33,6 +35,7 @@ N_LEFT = 200
 N_RIGHT = 100
 N_ENTITIES = 8
 DOMAIN_S = 2000
+TABLES = ("lab", "hi")
 
 
 def _ts(sec: int) -> dt.datetime:
@@ -48,7 +51,7 @@ def main() -> None:
     from go_html_transform_spark.session import get_spark
     from go_html_transform_spark.streaming import stream as ST
 
-    spark = get_spark(app_name="fuzz-asof-stream", cores=8, shuffle_partitions=16)
+    spark = get_spark(app_name="fuzz-asof-stream", cores=4, shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     checks = 0
@@ -60,35 +63,46 @@ def main() -> None:
             (rng.choice(ents), rng.randrange(DOMAIN_S), i)
             for i in range(N_LEFT)
         ]
-        rrows = [
-            (
-                rng.choice(ents),
-                rng.randrange(DOMAIN_S),
-                None if rng.random() < 0.1 else float(rng.randrange(-9, 10)),
-            )
-            for _ in range(N_RIGHT)
-        ]
         left = spark.createDataFrame(
             [(e, i, _ts(s)) for e, s, i in lrows],
             "doc_id string, event_id long, event_time timestamp",
         )
-        right = spark.createDataFrame(
-            [(e, _ts(s), v) for e, s, v in rrows],
-            "doc_id string, obs_time timestamp, label_value double",
-        )
-        want = {
-            r.event_id: r.label_value
-            for r in asof_join(left, right, direction="backward").collect()
-        }
 
-        # random slice boundaries; BOTH sides cut at the same instants so
+        def value():
+            return None if rng.random() < 0.1 else float(rng.randrange(-9, 10))
+
+        rights, wants = {}, {}
+        for name in TABLES:
+            rrows = []
+            for _ in range(N_RIGHT):
+                # one label in ten repeats an earlier (entity, t)
+                if rrows and rng.random() < 0.1:
+                    e, s, _ = rng.choice(rrows)
+                else:
+                    e, s = rng.choice(ents), rng.randrange(DOMAIN_S)
+                rrows.append((e, s, value()))
+            rights[name] = spark.createDataFrame(
+                [(e, _ts(s), v) for e, s, v in rrows],
+                "doc_id string, obs_time timestamp, label_value double",
+            )
+            wants[name] = {
+                r.event_id: r.label_value
+                for r in asof_join(
+                    left, rights[name], direction="backward"
+                ).collect()
+            }
+
+        # random slice boundaries; ALL sides cut at the same instants so
         # per-entity arrival stays in-order across micro-batches
         n_cuts = rng.randrange(1, 4)
         cuts = sorted(rng.sample(range(1, DOMAIN_S), n_cuts))
         bounds = [0] + cuts + [DOMAIN_S + 1]
         root = tempfile.mkdtemp(prefix="fuzz_asof_st_")
-        lsrc, rsrc = os.path.join(root, "ev"), os.path.join(root, "lab")
-        for df, src, tcol in ((left, lsrc, "event_time"), (right, rsrc, "obs_time")):
+        sides = [(left, os.path.join(root, "ev"), "event_time")] + [
+            (rights[name], os.path.join(root, name), "obs_time")
+            for name in TABLES
+        ]
+        for df, src, tcol in sides:
             for j in range(len(bounds) - 1):
                 lo, hi = _ts(bounds[j]), _ts(bounds[j + 1])
                 df.filter(
@@ -100,59 +114,37 @@ def main() -> None:
             for j, f in enumerate(files):
                 os.rename(f, os.path.join(src, f"batch-{j:03d}.parquet"))
 
-        def streams():
-            es = (
-                spark.readStream.schema(left.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(lsrc)
-            )
-            ls = (
-                spark.readStream.schema(right.schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(rsrc)
-            )
-            return es, ls
-
-        # both stateful variants: the single-table operator and the
-        # k-table operator driven with k=1 exercise distinct fill/state
-        # code paths
-        es, ls = streams()
-        single = ST.run_available_now(
-            ST.streaming_asof_enrich_stateful(es, ls),
-            f"fuzz_asof_st_{seed}",
-            output_mode="append",
+        es, *lss = (
+            spark.readStream.schema(df.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+            for df, src, _ in sides
         )
-        es, ls = streams()
-        many = ST.run_available_now(
-            ST.streaming_asof_enrich_many_stateful(es, {"lab": ls}),
+        out = ST.run_available_now(
+            ST.streaming_asof_enrich_many_stateful(es, dict(zip(TABLES, lss))),
             f"fuzz_asof_many_{seed}",
             output_mode="append",
-        )
-        for tag, out, col in (
-            ("single", single, "label_value"),
-            ("many", many, "lab_label_value"),
-        ):
-            got = {r.event_id: r[col] for r in out.collect()}
+        ).collect()
+        for name in TABLES:
+            want = wants[name]
+            got = {r.event_id: r[f"{name}_label_value"] for r in out}
             checks += len(want)
             if set(got) != set(want):
-                failures.append((seed, tag, "row-set", len(got), len(want)))
+                failures.append((seed, name, "row-set", len(got), len(want)))
                 continue
             for k, ev in want.items():
-                gv = got[k]
-                ok = (gv is None and ev is None) or (
-                    gv is not None and ev is not None and gv == ev
-                )
-                if not ok:
-                    failures.append((seed, tag, cuts, k, gv, ev))
+                if got[k] != ev:  # None == None; NULL never meets a value
+                    failures.append((seed, name, cuts, k, got[k], ev))
         shutil.rmtree(root, ignore_errors=True)
     for f in failures[:20]:
         print("MISMATCH", f, file=sys.stderr)
     print(
         json.dumps(
             {
-                "metric": "streaming stateful as-of vs batch on random timelines and batch cuts",
+                "metric": "k-table streaming stateful as-of vs batch, per table, on random timelines and batch cuts",
                 "seeds": n_seeds,
-                "rows_per_case": [N_LEFT, N_RIGHT],
+                "tables": len(TABLES),
+                "rows_per_case": [N_LEFT] + [N_RIGHT] * len(TABLES),
                 "row_checks": checks,
                 "mismatches": len(failures),
             }

@@ -25,7 +25,7 @@ Usage:
   python tools/probe_membus.py sweep                         # full matrix
 
 `sweep` shells each level through `taskset -c 0-(cores-1)` with a fresh
-JVM (same protocol as tools/bench_sweep.py), quiet-gates each window,
+JVM, quiet-gates each window,
 appends one JSON line per (width, pair) to BENCH/membus.jsonl and prints
 a markdown summary row per width.
 """
