@@ -1027,7 +1027,7 @@ def semantic_dedup_keep(
     The corpus frame is scanned once; the only exchanges are the
     cluster-keyed pair join (bounded as in ``semantic_dup_pairs``) and a
     broadcast-sized anti-join on the loser id set."""
-    from go_html_transform_spark.operators.similarity import _lit_vec, ivf_assign
+    from go_html_transform_spark.operators.similarity import _centroid_of, ivf_assign
 
     losers = (
         semantic_dup_pairs(
@@ -1038,10 +1038,6 @@ def semantic_dedup_keep(
         .distinct()
     )
     assigned = ivf_assign(emb, centroids, id_col, vec_col, out_col="cid")
-    cvec = F.map_from_arrays(
-        F.array(*[F.lit(cid) for cid, _ in centroids]),
-        F.array(*[_lit_vec(cv) for _, cv in centroids]),
-    )
     kept = assigned.join(
         losers, assigned[id_col] == losers["__loser"], "left_anti"
     )
@@ -1049,6 +1045,10 @@ def semantic_dedup_keep(
         F.col(id_col),
         "cid",
         F.round(
-            cosine(F.col(vec_col).cast("array<double>"), cvec[F.col("cid")]), 6
+            cosine(
+                F.col(vec_col).cast("array<double>"),
+                _centroid_of(centroids, F.col("cid")),
+            ),
+            6,
         ).alias("cos_centroid"),
     )

@@ -1,16 +1,43 @@
 """Approximate-nearest-neighbor search over embedding columns
-(array<float>): brute-force cosine top-k baseline + sign-LSH bucketed
-scale path.
+(array<float>). Every search path ends in the exact brute-force rescore.
 
-Scale story: brute-force is a broadcast of ONE query vector over the
-corpus — embarrassingly parallel, no shuffle, fine at any corpus size for
-single queries. For query BATCHES the LSH variant buckets the corpus once
-(8 deterministic hyperplanes -> 256 buckets) and probes only matching
-buckets — recall traded for a 256x candidate reduction; multi-probe
-(Hamming-1 neighbors) recovers most recall.
+* Brute force: ``cosine_topk`` broadcasts one literal query vector over
+  the corpus and takes a global top-k. No shuffle, no full sort.
+* Sign-LSH: ``lsh_bucket``, ``lsh_topk`` and ``lsh_topk_batch``. Eight
+  deterministic hyperplanes make 256 buckets. A query probes its own
+  bucket, and with multiprobe also its Hamming-1 neighbours.
+* IVF: ``ivf_centroids``, ``ivf_assign`` and ``ivf_topk``. A literal
+  coarse codebook, a zero-shuffle argmax-cosine assignment, and a probe
+  of the nprobe nearest clusters. ``ivf_write_index`` and
+  ``ivf_topk_indexed`` are the same index at rest, pruned by file.
+* PQ: ``pq_codebooks``, ``pq_encode`` and ``pq_adc_topk``. Per-subspace
+  argmin-L2 codes are packed into 16 bits and scanned by ADC.
+* IVF-PQ: ``ivfpq_encode`` and ``ivfpq_topk``. PQ codes of the residual
+  to the assigned centroid, with one ADC table per probed cluster.
+* Trained codebooks: ``ivf_trained_centroids``, ``pq_train_codebooks``
+  and ``ivfpq_encode_trained``. k-means++ on a hashed sample, then exact
+  distributed Lloyd passes. The low-id seeded codebooks
+  (``ivf_centroids``, ``ivf_lloyd_centroids``, ``pq_codebooks``) stay as
+  the DuckDB-oracle anchors.
 
-Hyperplane weights are deterministic integer arithmetic (no RNG) so the
-DuckDB oracle can reproduce the exact same buckets.
+Each shared primitive is written once, here:
+
+* ``_low_id_rows``: the seed collect of the seeded codebooks.
+* ``_nearest_centroid`` (cosine struct-max) and ``_nearest_code`` (L2
+  struct-min): the per-row nearest codeword.
+* ``_probe_ids``: the driver-side centroid ranking of a query.
+* ``_lsh_probes``: the Python mirror of ``lsh_bucket`` for a query.
+* ``_adc_tables`` and ``_adc_rerank``: the driver ADC tables, and the
+  ADC shortlist followed by the exact rescore.
+* ``_centroid_of``: the id-keyed centroid lookup (``dedup`` uses it too).
+  ``_with_residual`` builds the IVF-PQ residual on it.
+* ``_lloyd_means``: the fixed-point Lloyd aggregation of IVF and PQ.
+* ``cosine_sql`` and ``seeded_assign_cte_sql``: the DuckDB cosine
+  template and seeded assignment CTE. Every oracle of
+  plans/registry_more.py builds on them.
+
+Hyperplane weights and seeds are deterministic (no RNG), so the DuckDB
+oracle reproduces the exact same buckets, codes and assignments.
 """
 
 from __future__ import annotations
@@ -63,6 +90,22 @@ def lsh_bucket(
     return out
 
 
+def _lsh_probes(
+    query_vec: list[float], n_planes: int = N_PLANES, multiprobe: bool = True
+) -> list[int]:
+    """The buckets a query probes: its ``lsh_bucket`` (pure Python mirror,
+    same weight lattice), plus the Hamming-1 buckets when multiprobe."""
+    qb = 0
+    for p in range(n_planes):
+        proj = sum(
+            v * (((p * 31 + d) * _W_MUL % _W_MOD) / 1000.0 - 0.5)
+            for d, v in enumerate(query_vec)
+        )
+        if proj > 0:
+            qb |= 1 << p
+    return [qb] + ([qb ^ (1 << p) for p in range(n_planes)] if multiprobe else [])
+
+
 def lsh_bucket_sql(
     vec: str = "embedding", n_planes: int = N_PLANES, plane_offset: int = 0
 ) -> str:
@@ -83,10 +126,12 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Brute-force exact top-k by cosine. The query is a literal array —
-    broadcast inside the expression; the scan is a single stage with a
-    global top-k (TakeOrderedAndProject), no full sort."""
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
+    """Brute-force exact top-k by cosine (rounded to 6 places, ties to the
+    lower id). The query is a literal array — broadcast inside the
+    expression; the scan is a single stage with a global top-k
+    (TakeOrderedAndProject), no full sort. Every approximate path ends in
+    this call on its candidate frame: it is the exact rescore."""
+    q = _lit_vec(query_vec)
     scored = emb.select(
         F.col(id_col),
         F.round(cosine(F.col(vec_col).cast("array<double>"), q), 6).alias("cos"),
@@ -106,27 +151,10 @@ def lsh_topk(
     """ANN top-k: score only vectors in the query's LSH bucket (plus
     Hamming-1 buckets when multiprobe). Approximate by design — tests
     measure recall vs cosine_topk rather than equality."""
-    import math
-
-    # driver-side bucket of the query (pure python mirror of lsh_bucket)
-    def w(p: int, d: int) -> float:
-        return ((p * 31 + d) * _W_MUL % _W_MOD) / 1000.0 - 0.5
-
-    qb = 0
-    for p in range(n_planes):
-        proj = sum(v * w(p, d) for d, v in enumerate(query_vec))
-        if proj > 0:
-            qb |= 1 << p
-    probes = [qb] + ([qb ^ (1 << p) for p in range(n_planes)] if multiprobe else [])
-
-    q = F.array(*[F.lit(float(v)) for v in query_vec])
+    probes = _lsh_probes(query_vec, n_planes, multiprobe)
     bucketed = emb.withColumn("__b", lsh_bucket(F.col(vec_col).cast("array<double>"), n_planes))
     cand = bucketed.filter(F.col("__b").isin(probes))
-    scored = cand.select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col).cast("array<double>"), q), 6).alias("cos"),
-    )
-    return scored.orderBy(F.desc("cos"), F.col(id_col)).limit(k)
+    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 def lsh_topk_batch(
@@ -197,16 +225,64 @@ def ivf_centroids(
     the DuckDB oracle reproduces the identical partition assignment —
     quantizer QUALITY is orthogonal to the distributed search structure).
     Returns driver-side rows: k is small by design (codebooks broadcast)."""
+    return _low_id_rows(emb, k, id_col, vec_col)
+
+
+def _low_id_rows(
+    emb: DataFrame, n: int, id_col: str, vec_col: str
+) -> list[tuple[int, list[float]]]:
+    """The rows with id < n as sorted driver-side (id, vector) pairs: the
+    seeds of every seeded codebook."""
     rows = (
-        emb.filter(F.col(id_col) < k)
+        emb.filter(F.col(id_col) < n)
         .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
         .collect()
     )
-    return sorted((int(r[0]), list(r[1])) for r in rows)
+    return sorted((int(r[0]), [float(x) for x in r[1]]) for r in rows)
 
 
 def _lit_vec(v: list[float]) -> Column:
     return F.array(*[F.lit(float(x)) for x in v])
+
+
+def _nearest_centroid(v: Column, centroids: list[tuple[int, list[float]]]) -> Column:
+    """Per-row argmax-cosine over a literal codebook: the array_max of k
+    (c = cosine, negid = -centroid id) structs, so ties go to the lower
+    id. ``ivf_assign`` reads ``-negid``, ``ivf_objective`` reads ``c``."""
+    return F.array_max(
+        F.array(
+            *[
+                F.struct(cosine(v, _lit_vec(cv)).alias("c"), F.lit(-cid).alias("negid"))
+                for cid, cv in centroids
+            ]
+        )
+    )
+
+
+def _probe_ids(
+    query_vec: list[float], centroids: list[tuple[int, list[float]]], nprobe: int
+) -> list[int]:
+    """The ids of the nprobe centroids nearest the query by cosine, nearest
+    first, ties to the lower id: driver-side Python over the k-row
+    codebook (the order the DuckDB twin's ROW_NUMBER reproduces)."""
+
+    def cos(b: list[float]) -> float:
+        dot = sum(x * y for x, y in zip(query_vec, b))
+        na = sum(x * x for x in query_vec) ** 0.5
+        nb = sum(y * y for y in b) ** 0.5
+        return dot / (na * nb) if na > 0 and nb > 0 else 0.0
+
+    ranked = sorted(centroids, key=lambda c: (-cos(c[1]), c[0]))
+    return [cid for cid, _ in ranked[:nprobe]]
+
+
+def _centroid_of(centroids: list[tuple[int, list[float]]], cid: Column) -> Column:
+    """The codeword of centroid id ``cid``: a lookup in an id-keyed
+    literal map, so any int32 ids work, not only dense 0..k-1."""
+    return F.map_from_arrays(
+        F.array(*[F.lit(c) for c, _ in centroids]),
+        F.array(*[_lit_vec(cv) for _, cv in centroids]),
+    )[cid]
 
 
 def ivf_assign(
@@ -272,17 +348,8 @@ def ivf_assign(
         return emb.withColumn(
             out_col, pandas_udf(_assign_impl, "int")(F.col(vec_col))
         )
-    v = F.col(vec_col).cast("array<double>")
-    scored = F.array(
-        *[
-            F.struct(
-                cosine(v, _lit_vec(cv)).alias("c"),
-                F.lit(-cid).alias("negid"),
-            )
-            for cid, cv in centroids
-        ]
-    )
-    return emb.withColumn(out_col, (-F.array_max(scored)["negid"]).cast("int"))
+    best = _nearest_centroid(F.col(vec_col).cast("array<double>"), centroids)
+    return emb.withColumn(out_col, (-best["negid"]).cast("int"))
 
 
 def ivf_topk(
@@ -297,27 +364,10 @@ def ivf_topk(
     """IVF ANN top-k: rank centroids against the query driver-side, probe
     the nprobe nearest clusters only, exact-score the candidates. One
     stage: filter + TakeOrderedAndProject, no shuffle, no Python."""
-
-    def cos_py(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(y * y for y in b) ** 0.5
-        return dot / (na * nb) if na > 0 and nb > 0 else 0.0
-
-    probes = [
-        cid
-        for cid, _ in sorted(
-            centroids, key=lambda c: (-cos_py(query_vec, c[1]), c[0])
-        )[:nprobe]
-    ]
-    q = _lit_vec(query_vec)
+    probes = _probe_ids(query_vec, centroids, nprobe)
     assigned = ivf_assign(emb, centroids, id_col, vec_col)
     cand = assigned.filter(F.col("centroid_id").isin(probes))
-    scored = cand.select(
-        F.col(id_col),
-        F.round(cosine(F.col(vec_col).cast("array<double>"), q), 6).alias("cos"),
-    )
-    return scored.orderBy(F.desc("cos"), F.col(id_col)).limit(k)
+    return cosine_topk(cand, query_vec, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -325,6 +375,37 @@ def ivf_topk(
 # ---------------------------------------------------------------------------
 
 LLOYD_SCALE = 1_000_000
+
+
+def _lloyd_means(
+    frame: DataFrame, keys: list[str], vec: Column, prev: dict
+) -> dict:
+    """The Lloyd mean of IVF (keys ``centroid_id``) and PQ (keys ``j``,
+    ``code``): one ``groupBy(keys)`` of a count and per-element BIGINT
+    sums of ``round(x * LLOYD_SCALE)``, collected to the driver. Returns
+    ``prev`` ({key tuple: codeword}) with each non-empty group's codeword
+    replaced by its mean; an empty group keeps its previous codeword."""
+    dim = len(next(iter(prev.values())))
+    fx = F.transform(vec, lambda x: F.round(x * LLOYD_SCALE).cast("long"))
+    rows = (
+        frame.withColumn("__fx", fx)
+        .groupBy(*keys)
+        .agg(
+            F.count("*").alias("__n"),
+            *[
+                F.sum(F.element_at("__fx", i + 1)).alias(f"__s{i}")
+                for i in range(dim)
+            ],
+        )
+        .collect()
+    )
+    means = {
+        tuple(int(r[c]) for c in keys): [
+            r[f"__s{i}"] / (r["__n"] * float(LLOYD_SCALE)) for i in range(dim)
+        ]
+        for r in rows
+    }
+    return {key: means.get(key, cv) for key, cv in prev.items()}
 
 
 def lloyd_refine(
@@ -343,32 +424,15 @@ def lloyd_refine(
 
     Cost at scale: ONE aggregation shuffle shipping k x dim int64 partial
     sums (map-side combined) — independent of corpus size. Empty clusters
-    keep their previous centroid (standard Lloyd)."""
-    dim = len(centroids[0][1])
+    keep their previous centroid (standard Lloyd; see _lloyd_means)."""
     assigned = ivf_assign(emb, centroids, id_col=id_col, vec_col=vec_col)
-    fx = F.transform(
+    means = _lloyd_means(
+        assigned,
+        ["centroid_id"],
         F.col(vec_col).cast("array<double>"),
-        lambda x: F.round(x * LLOYD_SCALE).cast("long"),
+        {(cid,): cv for cid, cv in centroids},
     )
-    rows = (
-        assigned.withColumn("__fx", fx)
-        .groupBy("centroid_id")
-        .agg(
-            F.count("*").alias("__n"),
-            *[
-                F.sum(F.element_at("__fx", i + 1)).alias(f"__s{i}")
-                for i in range(dim)
-            ],
-        )
-        .collect()
-    )
-    means = {
-        int(r["centroid_id"]): [
-            r[f"__s{i}"] / (r["__n"] * float(LLOYD_SCALE)) for i in range(dim)
-        ]
-        for r in rows
-    }
-    return sorted((cid, means.get(cid, cv)) for cid, cv in centroids)
+    return sorted((cid, cv) for (cid,), cv in means.items())
 
 
 def ivf_lloyd_centroids(
@@ -386,7 +450,9 @@ def ivf_lloyd_centroids(
     return c
 
 
-def _lloyd_cos_sql(a: str, b: str) -> str:
+def cosine_sql(a: str, b: str) -> str:
+    """DuckDB twin of ``dedup.cosine`` over two list expressions, every
+    element widened to DOUBLE: the cosine template of every oracle."""
     return (
         f"list_sum(list_transform(range(len({a})), "
         f"i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)))"
@@ -395,32 +461,40 @@ def _lloyd_cos_sql(a: str, b: str) -> str:
     )
 
 
+def _assign_cte_sql(assign: str, cents: str) -> str:
+    """CTE ``{assign}(vec_id, cid)``: every embedding's argmax-cosine
+    centroid of ``{cents}(cid, cvec)``, ties to the lower cid."""
+    return f"""{assign} AS (
+      SELECT vec_id, cid FROM (
+        SELECT e.vec_id, {cents}.cid,
+               ROW_NUMBER() OVER (
+                 PARTITION BY e.vec_id
+                 ORDER BY {cosine_sql('e.embedding', f'{cents}.cvec')} DESC,
+                          {cents}.cid
+               ) AS rk
+        FROM embeddings e CROSS JOIN {cents}
+      ) WHERE rk = 1)"""
+
+
+def seeded_assign_cte_sql(cents: str = "c", assign: str = "a", k: int = 8) -> str:
+    """DuckDB twin of ``ivf_assign(emb, ivf_centroids(emb, k))``: the CTEs
+    ``{cents}(cid, cvec)`` (the k lowest-id vectors) and
+    ``{assign}(vec_id, cid)``. ``cvec`` is DOUBLE[] because the Lloyd
+    chain's CASE mixes it with the computed means."""
+    return f"""{cents} AS (
+      SELECT vec_id AS cid,
+             list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
+      FROM embeddings WHERE vec_id < {k}),
+    {_assign_cte_sql(assign, cents)}"""
+
+
 def lloyd_cte_sql(k: int = 8, iters: int = 2, dim: int = 64) -> tuple[str, str]:
     """DuckDB twin of ivf_lloyd_centroids + final assignment: returns
     (cte_body, final_assign_name). The CTE chain is
-    lc0 (seeds) -> la{i} (assign) -> lm{i} (fixed-point means) ->
-    lc{i+1} (COALESCE empty clusters to previous centroid)."""
-    parts = [
-        f"""lc0 AS (
-            SELECT vec_id AS cid,
-                   list_transform(embedding, x -> CAST(x AS DOUBLE)) AS cvec
-            FROM embeddings WHERE vec_id < {k})"""
-    ]
-    for i in range(iters + 1):
-        parts.append(
-            f"""la{i} AS (
-              SELECT vec_id, cid FROM (
-                SELECT e.vec_id, c.cid,
-                       ROW_NUMBER() OVER (
-                         PARTITION BY e.vec_id
-                         ORDER BY {_lloyd_cos_sql('e.embedding', 'c.cvec')} DESC,
-                                  c.cid
-                       ) AS rk
-                FROM embeddings e CROSS JOIN lc{i} c
-              ) WHERE rk = 1)"""
-        )
-        if i == iters:
-            break
+    lc0/la0 (seeded_assign_cte_sql) -> lm{i} (fixed-point means) ->
+    lc{i+1} (COALESCE empty clusters to previous centroid) -> la{i+1}."""
+    parts = [seeded_assign_cte_sql("lc0", "la0", k)]
+    for i in range(iters):
         sums = ", ".join(
             f"SUM(CAST(ROUND(e.embedding[{j + 1}] * {LLOYD_SCALE}) AS BIGINT))"
             for j in range(dim)
@@ -439,6 +513,7 @@ def lloyd_cte_sql(k: int = 8, iters: int = 2, dim: int = 64) -> tuple[str, str]:
                      END AS cvec
               FROM lc{i} c LEFT JOIN lm{i} m ON c.cid = m.cid)"""
         )
+        parts.append(_assign_cte_sql(f"la{i + 1}", f"lc{i + 1}"))
     return ",\n".join(parts), f"la{iters}"
 
 
@@ -462,12 +537,7 @@ def pq_codebooks(
     production would k-means each subspace; seeding pins the DuckDB
     oracle to the identical encoding). Driver-side: m*ksub*(dim/m)
     doubles — a few KB, broadcast as literals."""
-    rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in emb.filter(F.col(id_col) < ksub)
-        .select(F.col(id_col), F.col(vec_col).cast("array<double>"))
-        .collect()
-    )
+    rows = _low_id_rows(emb, ksub, id_col, vec_col)
     dim = len(rows[0][1])
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
@@ -488,6 +558,20 @@ def _l2sq(a: Column, b: Column) -> Column:
     )
 
 
+def _nearest_code(sub: Column, book: list[tuple[int, list[float]]]) -> Column:
+    """Per-row argmin-L2 over one literal subspace codebook: the array_min
+    of ksub (d = l2sq, code) structs, so ties go to the lower code.
+    ``pq_encode`` reads ``code``, ``pq_distortion`` reads ``d``."""
+    return F.array_min(
+        F.array(
+            *[
+                F.struct(_l2sq(sub, _lit_vec(cv)).alias("d"), F.lit(code).alias("code"))
+                for code, cv in book
+            ]
+        )
+    )
+
+
 def pq_encode(
     emb: DataFrame,
     codebooks: list[list[tuple[int, list[float]]]],
@@ -504,26 +588,16 @@ def pq_encode(
     10^12-vector index live in cluster RAM for ADC scans.
 
     ``codes_col`` optionally also emits the unpacked array<int>."""
-    m = len(codebooks)
     ksub = len(codebooks[0])
     v = F.col(vec_col).cast("array<double>")
     ds = len(codebooks[0][0][1])
-    code_exprs = []
-    for j in range(m):
-        sub = F.slice(v, j * ds + 1, ds)
-        scored = F.array(
-            *[
-                F.struct(
-                    _l2sq(sub, _lit_vec(cv)).alias("d"),
-                    F.lit(code).alias("code"),
-                )
-                for code, cv in codebooks[j]
-            ]
-        )
-        code_exprs.append(F.array_min(scored)["code"])
+    code_exprs = [
+        _nearest_code(F.slice(v, j * ds + 1, ds), book)["code"]
+        for j, book in enumerate(codebooks)
+    ]
     packed = F.lit(0)
-    for j in range(m):
-        packed = packed + code_exprs[j] * F.lit(ksub**j)
+    for j, code in enumerate(code_exprs):
+        packed = packed + code * F.lit(ksub**j)
     out = emb.withColumn(out_col, packed.cast("int"))
     if codes_col:
         out = out.withColumn(codes_col, F.array(*code_exprs))
@@ -532,7 +606,7 @@ def pq_encode(
 
 def pq_l2sq_sql(a: str, b: str) -> str:
     """DuckDB twin of _l2sq (same index order; list_sum over doubles
-    matches the engine's left fold — the _IVF_COS precedent)."""
+    matches the engine's left fold — the cosine_sql precedent)."""
     return (
         f"list_sum(list_transform(range(len({a})), "
         f"i -> (CAST({a}[i+1] AS DOUBLE) - CAST({b}[i+1] AS DOUBLE))"
@@ -570,10 +644,9 @@ def ivfpq_encode_cte_sql(
 ) -> str:
     """DuckDB twin of ``ivfpq_encode`` with the seeded coarse codebook:
     CTE chain ending in ``ipqp`` (vec_id, cid, pq_code). Requires the
-    caller's WITH to already define ``a`` (vec_id, cid — the seeded IVF
-    assignment, the sim_bucket_stats _IVF_ASSIGN_CTE) and ``c``
-    (cid, cvec — its centroid relation); the coarse width k is entirely
-    the ``a``/``c`` CTEs' concern — this body never references it. Residuals, residual codebooks
+    caller's WITH to already define ``c`` (cid, cvec) and ``a``
+    (vec_id, cid) — ``seeded_assign_cte_sql()``; the coarse width k is
+    entirely their concern. Residuals, residual codebooks
     (the ksub lowest-id vectors' residuals, the pq_codebooks convention)
     and the argmin encode all mirror the Spark op order, so every double
     is bit-identical."""
@@ -632,40 +705,46 @@ def pq_adc_topk(
 
     Single stage, no shuffle, no Python; at 10^12 vectors step 2 touches
     2 bytes/vector instead of 256."""
-    m = len(codebooks)
-    ksub = len(codebooks[0])
-    ds = len(codebooks[0][0][1])
-    dts = []
-    for j in range(m):
+    enc = pq_encode(emb, codebooks, vec_col=vec_col, codes_col="__codes")
+    adc = F.lit(0.0)
+    for j, dt in enumerate(_adc_tables(query_vec, codebooks)):
+        table = F.array(*[F.lit(d) for d in dt])
+        adc = adc + F.element_at(table, F.element_at("__codes", j + 1) + 1)
+    return _adc_rerank(enc, adc, query_vec, k, rerank, id_col, vec_col)
+
+
+def _adc_tables(
+    query_vec: list[float], books: list[list[tuple[int, list[float]]]]
+) -> list[list[float]]:
+    """Driver-side ADC tables: dt[j][i] = l2sq(query subvector j, code i of
+    book j), summed left to right. m*ksub doubles, inlined as literals."""
+    ds = len(books[0][0][1])
+    tables = []
+    for j, book in enumerate(books):
         qsub = [float(x) for x in query_vec[j * ds : (j + 1) * ds]]
         row = []
-        for code, cv in codebooks[j]:
+        for _, cv in book:
             acc = 0.0
             for x, y in zip(qsub, cv):
                 acc += (x - y) * (x - y)
             row.append(acc)
-        dts.append(row)
-    enc = pq_encode(emb, codebooks, vec_col=vec_col, codes_col="__codes")
-    adc = F.lit(0.0)
-    for j in range(m):
-        table = F.array(*[F.lit(d) for d in dts[j]])
-        adc = adc + F.element_at(table, F.element_at("__codes", j + 1) + 1)
-    cand = (
-        enc.withColumn("__adc", adc)
-        .orderBy(F.asc("__adc"), F.col(id_col))
-        .limit(rerank)
-    )
-    q = _lit_vec([float(x) for x in query_vec])
-    return (
-        cand.select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col).cast("array<double>"), q), 6).alias(
-                "cos"
-            ),
-        )
-        .orderBy(F.desc("cos"), F.col(id_col))
-        .limit(k)
-    )
+        tables.append(row)
+    return tables
+
+
+def _adc_rerank(
+    cand: DataFrame,
+    adc: Column,
+    query_vec: list[float],
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """TakeOrdered the best ``rerank`` candidates by (adc, id), then the
+    exact ``cosine_topk`` rescore of that shortlist."""
+    short = cand.withColumn("__adc", adc).orderBy(F.asc("__adc"), F.col(id_col)).limit(rerank)
+    return cosine_topk(short, query_vec, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -708,19 +787,7 @@ def ivf_topk_indexed(
     manifest-prune to the probed clusters' files, exact-score only what
     survives. Returns (result, files_read, files_total) so callers — and
     tests — can see the prune doing its job."""
-
-    def cos_py(a: list[float], b: list[float]) -> float:
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(y * y for y in b) ** 0.5
-        return dot / (na * nb) if na > 0 and nb > 0 else 0.0
-
-    probes = sorted(
-        cid
-        for cid, _ in sorted(
-            centroids, key=lambda c: (-cos_py(query_vec, c[1]), c[0])
-        )[:nprobe]
-    )
+    probes = sorted(_probe_ids(query_vec, centroids, nprobe))
     total = len(table.files())
     paths: list[str] = []
     seen: set[str] = set()
@@ -734,21 +801,10 @@ def ivf_topk_indexed(
         # pruned everything): empty top-k, not a read.parquet() crash
         empty = spark.createDataFrame([], f"{id_col} long, cos double")
         return empty, 0, total
-    q = _lit_vec([float(x) for x in query_vec])
     cand = spark.read.parquet(*paths).filter(
         F.col("centroid_id").isin([int(c) for c in probes])
     )
-    out = (
-        cand.select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col).cast("array<double>"), q), 6).alias(
-                "cos"
-            ),
-        )
-        .orderBy(F.desc("cos"), F.col(id_col))
-        .limit(k)
-    )
-    return out, len(paths), total
+    return cosine_topk(cand, query_vec, k, id_col, vec_col), len(paths), total
 
 
 # ---------------------------------------------------------------------------
@@ -756,14 +812,22 @@ def ivf_topk_indexed(
 # ---------------------------------------------------------------------------
 
 
-def _residual(vec: Column, centroids: list[tuple[int, list[float]]],
-              cid_col: Column) -> Column:
-    """v - centroid[cid], all literals: the centroid table is an
-    array-of-arrays literal indexed by centroid id (ids are the dense
-    0..k-1 seed ids by construction)."""
-    table = F.array(*[_lit_vec(cv) for _, cv in sorted(centroids)])
-    chosen = F.element_at(table, cid_col + 1)
-    return F.zip_with(vec, chosen, lambda a, b: a - b)
+def _with_residual(
+    emb: DataFrame,
+    centroids: list[tuple[int, list[float]]],
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """``ivf_assign`` plus ``__res`` = v - centroid[centroid_id], all
+    literals (the id-keyed ``_centroid_of`` lookup): the prelude of both
+    IVF-PQ encoders."""
+    assigned = ivf_assign(emb, centroids, id_col, vec_col)
+    res = F.zip_with(
+        F.col(vec_col).cast("array<double>"),
+        _centroid_of(centroids, F.col("centroid_id")),
+        lambda a, b: a - b,
+    )
+    return assigned.withColumn("__res", res)
 
 
 def ivfpq_encode(
@@ -788,11 +852,7 @@ def ivfpq_encode(
     engines reproduce the identical index).
 
     Returns (DataFrame[id, centroid_id, pq_code], residual codebooks)."""
-    assigned = ivf_assign(emb, centroids, id_col, vec_col)
-    res = _residual(
-        F.col(vec_col).cast("array<double>"), centroids, F.col("centroid_id")
-    )
-    with_res = assigned.withColumn("__res", res)
+    with_res = _with_residual(emb, centroids, id_col, vec_col)
     books = pq_codebooks(with_res, m, ksub, id_col, "__res")
     enc = pq_encode(with_res, books, vec_col="__res")
     return enc.drop("__res"), books
@@ -814,43 +874,18 @@ def ivfpq_topk(
     (the asymmetric part), approximate-distance only rows inside probed
     clusters, exact-cosine rescore of the best ``rerank``. The per-row
     table choice is a codegen'd CASE over nprobe literal tables."""
-
-    def cos_py(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(y * y for y in b) ** 0.5
-        return dot / (na * nb) if na > 0 and nb > 0 else 0.0
-
     cents = dict(centroids)
-    probes = [
-        cid
-        for cid, _ in sorted(
-            centroids, key=lambda c: (-cos_py(query_vec, c[1]), c[0])
-        )[:nprobe]
-    ]
-    m = len(books)
+    probes = _probe_ids(query_vec, centroids, nprobe)
     ksub = len(books[0])
-    ds = len(books[0][0][1])
-
-    def adc_tables(cid: int) -> list[list[float]]:
-        qres = [float(x) - c for x, c in zip(query_vec, cents[cid])]
-        out = []
-        for j in range(m):
-            sub = qres[j * ds : (j + 1) * ds]
-            row = []
-            for _, cv in books[j]:
-                acc = 0.0
-                for x, y in zip(sub, cv):
-                    acc += (x - y) * (x - y)
-                row.append(acc)
-            out.append(row)
-        return out
-
+    tables = {
+        cid: _adc_tables([float(x) - c for x, c in zip(query_vec, cents[cid])], books)
+        for cid in probes
+    }
     cand = encoded.filter(F.col("centroid_id").isin([int(c) for c in probes]))
     # unpack code_j = (pq_code div ksub^j) % ksub, look up the probed
     # cluster's table
     adc = F.lit(0.0)
-    for j in range(m):
+    for j in range(len(books)):
         code_j = F.pmod(
             (F.col("pq_code") - F.pmod(F.col("pq_code"), F.lit(ksub**j)))
             / F.lit(ksub**j),
@@ -858,7 +893,7 @@ def ivfpq_topk(
         ).cast("int")
         expr = None
         for cid in probes:
-            t = F.array(*[F.lit(d) for d in adc_tables(cid)[j]])
+            t = F.array(*[F.lit(d) for d in tables[cid][j]])
             branch = F.element_at(t, code_j + 1)
             expr = (
                 F.when(F.col("centroid_id") == cid, branch)
@@ -866,22 +901,7 @@ def ivfpq_topk(
                 else expr.when(F.col("centroid_id") == cid, branch)
             )
         adc = adc + expr
-    short = (
-        cand.withColumn("__adc", adc)
-        .orderBy(F.asc("__adc"), F.col(id_col))
-        .limit(rerank)
-    )
-    q = _lit_vec([float(x) for x in query_vec])
-    return (
-        short.select(
-            F.col(id_col),
-            F.round(cosine(F.col(vec_col).cast("array<double>"), q), 6).alias(
-                "cos"
-            ),
-        )
-        .orderBy(F.desc("cos"), F.col(id_col))
-        .limit(k)
-    )
+    return _adc_rerank(cand, adc, query_vec, k, rerank, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -983,48 +1003,30 @@ def pq_lloyd_refine(
     records, then ONE map-side-combined aggregation keyed on
     (subspace, code) — m*ksub groups of ds fixed-point int64 sums, a
     driver-sized result independent of corpus size. Empty codes keep
-    their previous centroid (the lloyd_refine convention)."""
-    m = len(codebooks)
+    their previous centroid (see _lloyd_means)."""
     ds = len(codebooks[0][0][1])
     enc = pq_encode(emb, codebooks, vec_col=vec_col, codes_col="__codes")
-    fx = F.transform(
-        F.col(vec_col).cast("array<double>"),
-        lambda x: F.round(x * LLOYD_SCALE).cast("long"),
-    )
+    v = F.col(vec_col).cast("array<double>")
     sub_structs = F.array(
         *[
             F.struct(
                 F.lit(j).alias("j"),
                 F.element_at("__codes", j + 1).alias("code"),
-                F.slice(F.col("__fx"), j * ds + 1, ds).alias("sv"),
+                F.slice(v, j * ds + 1, ds).alias("sv"),
             )
-            for j in range(m)
+            for j in range(len(codebooks))
         ]
     )
-    rows = (
-        enc.withColumn("__fx", fx)
-        .select(F.explode(sub_structs).alias("e"))
-        .select(
-            "e.j",
-            "e.code",
-            *[F.element_at("e.sv", i + 1).alias(f"x{i}") for i in range(ds)],
-        )
-        .groupBy("j", "code")
-        .agg(
-            F.count("*").alias("n"),
-            *[F.sum(f"x{i}").alias(f"s{i}") for i in range(ds)],
-        )
-        .collect()
+    subs = enc.select(F.explode(sub_structs).alias("e")).select("e.*")
+    means = _lloyd_means(
+        subs,
+        ["j", "code"],
+        F.col("sv"),
+        {(j, code): cv for j, book in enumerate(codebooks) for code, cv in book},
     )
-    means = {
-        (int(r["j"]), int(r["code"])): [
-            r[f"s{i}"] / (r["n"] * float(LLOYD_SCALE)) for i in range(ds)
-        ]
-        for r in rows
-    }
     return [
-        [(code, means.get((j, code), cv)) for code, cv in codebooks[j]]
-        for j in range(m)
+        [(code, means[(j, code)]) for code, _ in book]
+        for j, book in enumerate(codebooks)
     ]
 
 
@@ -1073,11 +1075,7 @@ def ivfpq_encode_trained(
     k-means++ + Lloyd over the residuals (v - assigned centroid) — the
     faiss IVFPQ training recipe — instead of low-id seeds. Same zero-
     shuffle encode; searchable with the unchanged ivfpq_topk."""
-    assigned = ivf_assign(emb, centroids, id_col, vec_col)
-    res = _residual(
-        F.col(vec_col).cast("array<double>"), centroids, F.col("centroid_id")
-    )
-    with_res = assigned.withColumn("__res", res)
+    with_res = _with_residual(emb, centroids, id_col, vec_col)
     books = pq_train_codebooks(
         with_res, m, ksub, iters, sample_n, seed, id_col, "__res"
     )
@@ -1094,22 +1092,11 @@ def pq_distortion(
     l2sq(subvector, chosen code)) — the k-means objective PQ training
     minimizes; lets tests assert trained <= seeded without an oracle.
     One partial-agg'd mean, no shuffle of payloads."""
-    m = len(codebooks)
     ds = len(codebooks[0][0][1])
     v = F.col(vec_col).cast("array<double>")
     total = F.lit(0.0)
-    for j in range(m):
-        sub = F.slice(v, j * ds + 1, ds)
-        scored = F.array(
-            *[
-                F.struct(
-                    _l2sq(sub, _lit_vec(cv)).alias("d"),
-                    F.lit(code).alias("code"),
-                )
-                for code, cv in codebooks[j]
-            ]
-        )
-        total = total + F.array_min(scored)["d"]
+    for j, book in enumerate(codebooks):
+        total = total + _nearest_code(F.slice(v, j * ds + 1, ds), book)["d"]
     return float(emb.select(F.avg(total)).first()[0])
 
 
@@ -1120,8 +1107,5 @@ def ivf_objective(
 ) -> float:
     """Mean cosine of every vector to its assigned centroid — the
     spherical k-means objective (higher is better)."""
-    v = F.col(vec_col).cast("array<double>")
-    best = F.array_max(
-        F.array(*[cosine(v, _lit_vec(cv)) for _, cv in centroids])
-    )
+    best = _nearest_centroid(F.col(vec_col).cast("array<double>"), centroids)["c"]
     return float(emb.select(F.avg(best)).first()[0])

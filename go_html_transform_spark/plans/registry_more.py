@@ -13,6 +13,14 @@ from pyspark.sql import functions as F
 
 from go_html_transform_spark.operators import dedup as D
 from go_html_transform_spark.operators import transforms as X
+from go_html_transform_spark.operators.similarity import (
+    cosine_sql as _cos,
+    ivfpq_encode_cte_sql as _ivfpq_sql,
+    lloyd_cte_sql as _lloyd_sql,
+    lsh_bucket_sql as _lsh_sql,
+    pq_encode_cte_sql as _pq_sql,
+    seeded_assign_cte_sql as _assign_sql,
+)
 from go_html_transform_spark.plans.pipeline import Transformer
 from go_html_transform_spark.plans.registry import _cte, register
 from go_html_transform_spark.sources import tables as S
@@ -240,31 +248,12 @@ def topk_longest_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-_EMB_COS = """
-    list_sum(list_transform(range(len({a})),
-             i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)))
-    / (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * x)))
-       * sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * x))))
-"""
-
-# seeded k=8 coarse assignment (same contract as sim_bucket_stats' CTE —
-# duplicated here because this module registers dedup_embedding_pairs first)
+# seeded k=8 coarse assignment (semc/sema) + within-cluster pairs (semp)
 _SEM_ASSIGN_CTE = f"""
-    semc AS (SELECT vec_id AS cid, embedding AS cvec
-             FROM embeddings WHERE vec_id < 8),
-    sema AS (
-      SELECT vec_id, cid FROM (
-        SELECT e.vec_id, semc.cid,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_EMB_COS.format(a='e.embedding', b='semc.cvec')} DESC,
-                          semc.cid
-               ) AS rk
-        FROM embeddings e CROSS JOIN semc
-      ) WHERE rk = 1),
+    {_assign_sql("semc", "sema")},
     semp AS (
       SELECT aa.vec_id AS id_a, bb.vec_id AS id_b,
-             {_EMB_COS.format(a='ea.embedding', b='eb.embedding')} AS c
+             {_cos('ea.embedding', 'eb.embedding')} AS c
       FROM sema aa JOIN sema bb
         ON aa.cid = bb.cid AND aa.vec_id < bb.vec_id
       JOIN embeddings ea ON ea.vec_id = aa.vec_id
@@ -273,10 +262,8 @@ _SEM_ASSIGN_CTE = f"""
 
 
 def _emb_lsh_bands_sql(n_planes: int = 6, tables: int = 2) -> str:
-    from go_html_transform_spark.operators.similarity import lsh_bucket_sql
-
     keys = ", ".join(
-        f"'{t}-' || CAST({lsh_bucket_sql('CAST(embedding AS DOUBLE[])', n_planes, t * n_planes)} AS VARCHAR)"
+        f"'{t}-' || CAST({_lsh_sql('CAST(embedding AS DOUBLE[])', n_planes, t * n_planes)} AS VARCHAR)"
         for t in range(tables)
     )
     return f"SELECT vec_id, unnest([{keys}]) AS band FROM embeddings"
@@ -294,14 +281,14 @@ def _emb_lsh_bands_sql(n_planes: int = 6, tables: int = 2) -> str:
     {_SEM_ASSIGN_CTE}
     SELECT 'brute' AS variant, id_a, id_b, ROUND(c, 6) AS cos FROM (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-               {_EMB_COS.format(a='a.embedding', b='b.embedding')} AS c
+               {_cos('a.embedding', 'b.embedding')} AS c
         FROM embeddings a, embeddings b
         WHERE a.vec_id < b.vec_id
     ) WHERE c >= 0.4
     UNION ALL
     SELECT 'lsh_bucketed' AS variant, id_a, id_b, ROUND(c, 6) AS cos FROM (
         SELECT ecand.id_a, ecand.id_b,
-               {_EMB_COS.format(a='ea.embedding', b='eb.embedding')} AS c
+               {_cos('ea.embedding', 'eb.embedding')} AS c
         FROM ecand
         JOIN embeddings ea ON ea.vec_id = ecand.id_a
         JOIN embeddings eb ON eb.vec_id = ecand.id_b
@@ -312,7 +299,7 @@ def _emb_lsh_bands_sql(n_planes: int = 6, tables: int = 2) -> str:
     UNION ALL
     SELECT 'semdedup_keep' AS variant, e.vec_id AS id_a,
            CAST(sema.cid AS BIGINT) AS id_b,
-           ROUND({_EMB_COS.format(a='e.embedding', b='semc.cvec')}, 6) AS cos
+           ROUND({_cos('e.embedding', 'semc.cvec')}, 6) AS cos
     FROM embeddings e
     JOIN sema ON sema.vec_id = e.vec_id
     JOIN semc ON semc.cid = sema.cid
@@ -369,46 +356,11 @@ def dedup_embedding_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF ANN — deterministic seed codebook, fully oracle-checkable
 # ---------------------------------------------------------------------------
 
-_IVF_COS = (
-    "list_sum(list_transform(range(len({a})), "
-    "i -> CAST({a}[i+1] AS DOUBLE) * CAST({b}[i+1] AS DOUBLE)))"
-    " / (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE) * x)))"
-    " * sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE) * x))))"
-)
-
-_IVF_ASSIGN_CTE = f"""
-    c AS (SELECT vec_id AS cid, embedding AS cvec
-          FROM embeddings WHERE vec_id < 8),
-    a AS (
-      SELECT vec_id, cid FROM (
-        SELECT e.vec_id, c.cid,
-               ROW_NUMBER() OVER (
-                 PARTITION BY e.vec_id
-                 ORDER BY {_IVF_COS.format(a='e.embedding', b='c.cvec')} DESC,
-                          c.cid
-               ) AS rk
-        FROM embeddings e CROSS JOIN c
-      ) WHERE rk = 1)
-"""
-
-
-from go_html_transform_spark.operators.similarity import lloyd_cte_sql as _lloyd_sql
-from go_html_transform_spark.operators.similarity import lsh_bucket_sql as _lsh_sql
-
+_IVF_ASSIGN_CTE = _assign_sql("c", "a")
 _LSH_BUCKET = _lsh_sql("embedding", 8)
 _LLOYD_BODY, _LLOYD_FINAL = _lloyd_sql(k=8, iters=2, dim=64)
-
-from go_html_transform_spark.operators.similarity import (
-    pq_encode_cte_sql as _pq_sql,
-)
-
 # pq_encode_cte_sql returns "pqc AS (...), pqe AS (...)" — strip for WITH
 _PQ_ENCODE_CTE = _pq_sql(m=4, ksub=16, dim=64).strip()
-
-from go_html_transform_spark.operators.similarity import (
-    ivfpq_encode_cte_sql as _ivfpq_sql,
-)
-
 _IVFPQ_ENCODE_CTE = _ivfpq_sql(m=4, ksub=16, dim=64).strip()
 
 
@@ -535,14 +487,14 @@ def sim_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
       SELECT cid FROM (
         SELECT c.cid,
                ROW_NUMBER() OVER (
-                 ORDER BY {_IVF_COS.format(a='c.cvec', b='q.qv')} DESC, c.cid
+                 ORDER BY {_cos('c.cvec', 'q.qv')} DESC, c.cid
                ) AS rk
         FROM c CROSS JOIN q
       ) WHERE rk <= 2),
     ivf AS (
       SELECT vec_id, cos FROM (
         SELECT e.vec_id,
-               ROUND({_IVF_COS.format(a='e.embedding', b='q.qv')}, 6) AS cos
+               ROUND({_cos('e.embedding', 'q.qv')}, 6) AS cos
         FROM embeddings e
         JOIN a ON a.vec_id = e.vec_id
         CROSS JOIN q
@@ -551,7 +503,7 @@ def sim_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute AS (
       SELECT vec_id, cos FROM (
         SELECT e.vec_id,
-               ROUND({_IVF_COS.format(a='e.embedding', b='q.qv')}, 6) AS cos
+               ROUND({_cos('e.embedding', 'q.qv')}, 6) AS cos
         FROM embeddings e CROSS JOIN q
       ) ORDER BY cos DESC, vec_id LIMIT 10),
     lb AS (
@@ -560,7 +512,7 @@ def sim_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     lsh AS (
       SELECT vec_id, cos FROM (
         SELECT e.vec_id,
-               ROUND({_IVF_COS.format(a='e.embedding', b='q.qv')}, 6) AS cos
+               ROUND({_cos('e.embedding', 'q.qv')}, 6) AS cos
         FROM lb e, qb q
         WHERE bit_count(xor(CAST(e.bucket AS BIGINT), CAST(q.bucket AS BIGINT))) <= 1
       ) ORDER BY cos DESC, vec_id LIMIT 10)

@@ -195,7 +195,7 @@ def _per_entity_state(
     long without input; ``None`` keeps state until the query ends. With
     the timeout, Spark runs a batch on every trigger to look for idle
     groups, so run such a query on a processing-time trigger: an
-    availableNow drain of it never ends."""
+    availableNow drain of it never ends (``run_available_now`` refuses it)."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     timeout = (
@@ -413,10 +413,13 @@ def _asof_stateful(
             if st[2 * i] is not None
         ]
         if virts:
-            batch = pd.concat(
-                [pd.DataFrame(virts, columns=batch.columns), batch],
-                ignore_index=True,
-            )
+            # virtual rows typed like the batch, so the concat keeps its
+            # dtypes; their NA event_id needs the float64 Arrow gives a
+            # long column with nulls
+            if batch["event_id"].dtype.kind in "iu":
+                batch = batch.astype({"event_id": "float64"})
+            virt = pd.DataFrame(virts, columns=batch.columns).astype(batch.dtypes)
+            batch = pd.concat([virt, batch], ignore_index=True)
         batch = batch.sort_values(["__t", "__tag", "__v", "event_id"],
                                   kind="mergesort", ignore_index=True,
                                   na_position="first")
@@ -642,19 +645,34 @@ def streaming_interval_join(
     return l.join(r, cond, "inner").drop(r[key_col])
 
 
+def _plan_nodes(jplan):
+    """Every node of a JVM logical plan, depth first."""
+    stack = [jplan]
+    while stack:
+        node = stack.pop()
+        yield node
+        children = node.children()
+        for i in range(children.size()):
+            stack.append(children.apply(i))
+
+
 def _has_streaming_aggregate(jplan) -> bool:
     """True iff the analyzed logical plan contains an Aggregate node on
     a streaming subtree (static aggregates under stream-static joins
     don't count — they run append fine)."""
-    stack = [jplan]
-    while stack:
-        node = stack.pop()
-        if node.nodeName() == "Aggregate" and node.isStreaming():
-            return True
-        children = node.children()
-        for i in range(children.size()):
-            stack.append(children.apply(i))
-    return False
+    return any(
+        n.nodeName() == "Aggregate" and n.isStreaming() for n in _plan_nodes(jplan)
+    )
+
+
+def _has_processing_time_timeout(jplan) -> bool:
+    """True iff the analyzed logical plan contains a GroupState operator
+    with a processing-time timeout (``idle_timeout_minutes``)."""
+    return any(
+        n.nodeName() == "FlatMapGroupsInPandasWithState"
+        and n.timeout().toString() == "ProcessingTimeTimeout"
+        for n in _plan_nodes(jplan)
+    )
 
 
 def run_available_now(
@@ -667,17 +685,23 @@ def run_available_now(
     the GroupState operators, dropDuplicatesWithinWatermark) runs append.
     (The old default keyed on ``isStreaming`` — true for EVERY streaming
     frame — so non-agg streams crashed unless the caller passed
-    append explicitly.)"""
+    append explicitly.)
+
+    Raises ``ValueError`` before starting on a GroupState operator built
+    with ``idle_timeout_minutes``: its timeout runs a batch on every
+    trigger, so the drain would never end."""
+    plan = stream_df._jdf.queryExecution().analyzed()
+    if _has_processing_time_timeout(plan):
+        raise ValueError(
+            f"{query_name}: a GroupState operator with an idle timeout never "
+            "drains with availableNow; run it on a processing-time trigger"
+        )
     if output_mode is None:
         # walk the analyzed plan for a STREAMING Aggregate node — a
         # substring test on the stringified plan also matches static
         # subtrees of stream-static joins (or any name containing
         # "Aggregate"), forcing complete mode Spark then rejects
-        output_mode = (
-            "complete"
-            if _has_streaming_aggregate(stream_df._jdf.queryExecution().analyzed())
-            else "append"
-        )
+        output_mode = "complete" if _has_streaming_aggregate(plan) else "append"
     q = (
         stream_df.writeStream.format("memory")
         .queryName(query_name)

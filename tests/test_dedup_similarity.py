@@ -352,12 +352,10 @@ def test_ivf_lloyd_refinement(spark):
 
     assert objective(c1) >= objective(seeds) - 1e-9
 
-    # empty-cluster fallback: a far-out fake centroid keeps its coords
-    fake = seeds + [(99, [1000.0] * len(seeds[0][1]))]
-    refined = SIM.lloyd_refine(emb, fake)
-    kept = dict(refined)[99]
-    # cluster 99 attracts everything or nothing depending on geometry;
-    # if nothing was assigned the centroid must be EXACTLY preserved
+    # empty-cluster fallback: a copy of centroid 0 under id 99 ties it on
+    # every row, ties go to the min id, so cluster 99 is certainly empty
+    # and must come back bit-identical
+    fake = seeds + [(99, list(seeds[0][1]))]
     sizes = {
         r.centroid_id: r.n
         for r in SIM.ivf_assign(emb, fake)
@@ -365,8 +363,10 @@ def test_ivf_lloyd_refinement(spark):
         .agg(F.count("*").alias("n"))
         .collect()
     }
-    if 99 not in sizes:
-        assert kept == [1000.0] * len(seeds[0][1])
+    assert 99 not in sizes and 0 in sizes
+    refined = dict(SIM.lloyd_refine(emb, fake))
+    assert refined[99] == seeds[0][1]
+    assert refined[0] == dict(SIM.lloyd_refine(emb, seeds))[0]
 
 
 def test_simhash_near_duplicates(spark, corpus):
@@ -710,6 +710,59 @@ def test_trained_pq_codebooks_lower_distortion(spark):
     # one more Lloyd pass never increases the objective
     t3 = SIM.pq_lloyd_refine(emb, t1)
     assert SIM.pq_distortion(emb, t3) <= d_train + 1e-9
+
+
+def test_pq_lloyd_refine_keeps_an_empty_code(spark):
+    """A code at 1e6 in every coordinate is never the L2 argmin, so its
+    group is empty: pq_lloyd_refine must return it unchanged and leave
+    every other code as the refine without it."""
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    books = SIM.pq_codebooks(emb)
+    ds = len(books[0][0][1])
+    far = [b + [(len(b), [1e6] * ds)] for b in books]
+    enc = SIM.pq_encode(emb, far, codes_col="codes")
+    used = {c for r in enc.select("codes").collect() for c in r.codes}
+    assert len(books[0]) not in used
+    refined = SIM.pq_lloyd_refine(emb, far)
+    assert [b[-1] for b in refined] == [(len(books[0]), [1e6] * ds)] * len(books)
+    assert [b[:-1] for b in refined] == SIM.pq_lloyd_refine(emb, books)
+
+
+def test_ivfpq_sparse_centroid_ids(spark):
+    """Centroid ids need not be dense 0..k-1: with the seeded k=3 vectors
+    relabelled (0, 2, 5), every ivfpq_encode residual is v - centroid[id]
+    (its residual codebooks and codes match numpy), and all-probe +
+    full-rerank search equals brute force."""
+    import numpy as np
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    ids = (0, 2, 5)
+    cents = [(i, cv) for i, (_, cv) in zip(ids, SIM.ivf_centroids(emb, k=3))]
+    encoded, books = SIM.ivfpq_encode(emb, cents)
+    rows = encoded.select("vec_id", "embedding", "centroid_id", "pq_code").collect()
+    assert {r.centroid_id for r in rows} <= set(ids)
+    cvecs = {cid: np.array(cv) for cid, cv in cents}
+    res = {
+        r.vec_id: np.array(r.embedding, dtype=np.float64) - cvecs[r.centroid_id]
+        for r in rows
+    }
+    ds = len(books[0][0][1])
+    for j, book in enumerate(books):
+        assert book == [
+            (i, list(res[i][j * ds : (j + 1) * ds])) for i in range(len(book))
+        ]
+    cb = [np.array([cv for _, cv in b]) for b in books]
+    ksub = len(books[0])
+    for r in rows:
+        packed = 0
+        for j in range(len(books)):
+            d = ((cb[j] - res[r.vec_id][j * ds : (j + 1) * ds]) ** 2).sum(axis=1)
+            packed += int(np.lexsort((np.arange(ksub), d))[0]) * ksub**j
+        assert r.pq_code == packed, r.vec_id
+    qv = list(emb.filter("vec_id = 7").first().embedding)
+    exact = [tuple(r) for r in SIM.cosine_topk(emb, qv, k=10).collect()]
+    got = SIM.ivfpq_topk(encoded, books, cents, qv, k=10, nprobe=3, rerank=len(rows))
+    assert [tuple(r) for r in got.collect()] == exact
 
 
 def test_trained_ivfpq_exact_under_full_rerank(spark):

@@ -1188,6 +1188,34 @@ def test_stateful_operator_runs_with_an_idle_timeout(spark, tmp_path):
     assert got == [(1, None), (2, 3.0), (3, None)]
 
 
+def test_run_available_now_refuses_an_idle_timeout(spark, tmp_path):
+    """A GroupState operator with ``idle_timeout_minutes`` never drains
+    with availableNow, so run_available_now raises before starting any
+    query. The plan predicate is asserted first: were it to miss, the
+    drain below would hang instead of failing."""
+    src = str(tmp_path / "ev")
+    spark.createDataFrame(
+        [("a", 1, 0, 3)], "doc_id string, event_id long, s long, n_tok int"
+    ).select(
+        "doc_id", "event_id",
+        F.timestamp_seconds("s").alias("event_time"), "n_tok",
+    ).write.parquet(src)
+    stream = spark.readStream.schema(
+        "doc_id string, event_id long, event_time timestamp, n_tok int"
+    ).parquet(src)
+    timed = ST.streaming_ewma(stream, "n_tok", idle_timeout_minutes=5)
+    untimed = ST.streaming_ewma(stream, "n_tok")
+
+    def plan(df):
+        return df._jdf.queryExecution().analyzed()
+
+    assert ST._has_processing_time_timeout(plan(timed))
+    assert not ST._has_processing_time_timeout(plan(untimed))
+    with pytest.raises(ValueError, match="idle timeout"):
+        ST.run_available_now(timed, "ewma_refused")
+    assert spark.streams.active == []
+
+
 def test_run_available_now_default_mode_probes_the_plan(spark, tmp_path):
     """Non-aggregating streams drain with the default output mode (the
     old default keyed on isStreaming — always true — and crashed)."""

@@ -4,7 +4,8 @@ exact brute-force cosine top-k, on the real embeddings table — seeded
 distributed Lloyd) codebooks, so codebook training is graded on recall,
 not just on its k-means objective.
 
-Writes BENCH/ANN.md. Not a wall-clock benchmark (tools/bench_ops.py
+Rewrites its own section of BENCH/ANN.md (between the ``eval_ann.py``
+markers; the rest is kept). Not a wall-clock benchmark (tools/bench_ops.py
 covers cost) — this quantifies the accuracy side of the speed/recall
 trade each scale path makes.
 
@@ -19,6 +20,17 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BEGIN, END = "<!-- eval_ann.py: begin -->", "<!-- eval_ann.py: end -->"
+
+
+def write_section(path: str, body: str) -> None:
+    """Replace the text between BEGIN and END in ``path`` with ``body``;
+    the rest of the file is kept."""
+    with open(path) as f:
+        head, rest = f.read().split(BEGIN, 1)
+    tail = rest.split(END, 1)[1]
+    with open(path, "w") as f:
+        f.write(f"{head}{BEGIN}\n{body}{END}{tail}")
 
 
 def main() -> None:
@@ -32,7 +44,7 @@ def main() -> None:
     from go_html_transform_spark.session import get_spark
     from go_html_transform_spark.sources import tables as S
 
-    spark = get_spark(app_name="eval-ann", cores=16, shuffle_partitions=32)
+    spark = get_spark(app_name="eval-ann")
     spark.sparkContext.setLogLevel("ERROR")
 
     emb = S.load_table(spark, sf_dir, "embeddings").cache()
@@ -96,12 +108,6 @@ def main() -> None:
     # codebook's "2/8 probes" can cover most of the corpus, which
     # inflates its recall for free). Recall is only comparable at equal
     # measured fraction.
-    def cos_py(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(y * y for y in b) ** 0.5
-        return dot / (na * nb) if na > 0 and nb > 0 else 0.0
-
     def cluster_sizes(cents):
         rows = (
             SIM.ivf_assign(emb, cents)
@@ -118,29 +124,15 @@ def main() -> None:
     }
 
     def ivf_frac(cents, which, qv, nprobe):
-        probes = [
-            cid
-            for cid, _ in sorted(
-                cents, key=lambda c: (-cos_py(qv, c[1]), c[0])
-            )[:nprobe]
-        ]
+        probes = SIM._probe_ids(qv, cents, nprobe)
         return sum(sizes[which].get(c, 0) for c in probes) / max(1, n)
 
     def lsh_frac(qv):
-        qb = 0
-        for p in range(SIM.N_PLANES):
-            proj = sum(
-                v * (((p * 31 + d) * SIM._W_MUL % SIM._W_MOD) / 1000.0 - 0.5)
-                for d, v in enumerate(qv)
-            )
-            if proj > 0:
-                qb |= 1 << p
-        probes = [qb] + [qb ^ (1 << p) for p in range(SIM.N_PLANES)]
         cnt = (
             emb.withColumn(
                 "__b", SIM.lsh_bucket(F.col("embedding").cast("array<double>"))
             )
-            .filter(F.col("__b").isin(probes))
+            .filter(F.col("__b").isin(SIM._lsh_probes(qv)))
             .count()
         )
         return cnt / max(1, n)
@@ -195,8 +187,6 @@ def main() -> None:
         for name in PATHS
     )
     lines = [
-        "# BENCH/ANN.md — ANN recall vs exact brute force",
-        "",
         f"{n_queries} query vectors from the {sf_dir} embeddings table "
         f"(corpus {n:,} x 64-dim), recall@{k} against exact cosine top-{k}.",
         "",
@@ -205,7 +195,8 @@ def main() -> None:
         "|---|---|---|---|---|",
         rows,
         "",
-        "The scanned fraction is MEASURED (probed-cluster sizes / corpus), "
+        "The scanned fraction is MEASURED (probed-cluster sizes / corpus "
+        "for IVF; exact-rescored candidates / corpus for the PQ/ADC rows), "
         "not the nominal nprobe/k: the low-id-seeded codebook's clusters "
         "are extremely imbalanced, so its '2/8 probes' can cover most of "
         "the corpus — nominal-fraction recall comparisons flatter it. The "
@@ -245,8 +236,7 @@ def main() -> None:
         "```",
         "",
     ]
-    with open(os.path.join(REPO, "BENCH", "ANN.md"), "w") as f:
-        f.write("\n".join(lines))
+    write_section(os.path.join(REPO, "BENCH", "ANN.md"), "\n".join(lines))
     spark.stop()
 
 

@@ -32,7 +32,7 @@ def main() -> None:
     from go_html_transform_spark.session import get_spark
     from go_html_transform_spark.sources import synth as Z
 
-    spark = get_spark(app_name="eval-ann-synth", cores=16, shuffle_partitions=32)
+    spark = get_spark(app_name="eval-ann-synth")
     spark.sparkContext.setLogLevel("ERROR")
 
     docs = Z.zipf_documents(spark, n_docs, vocab_size=32_768, avg_len=200)
@@ -68,19 +68,8 @@ def main() -> None:
         for r in SIM.ivf_assign(emb, cents).groupBy("centroid_id").count().collect()
     }
 
-    def cos_py(a, b):
-        dot = sum(x * y for x, y in zip(a, b))
-        na = sum(x * x for x in a) ** 0.5
-        nb = sum(y * y for y in b) ** 0.5
-        return dot / (na * nb) if na > 0 and nb > 0 else 0.0
-
     def probe_frac(qv, nprobe):
-        probes = [
-            cid
-            for cid, _ in sorted(cents, key=lambda c: (-cos_py(qv, c[1]), c[0]))[
-                :nprobe
-            ]
-        ]
+        probes = SIM._probe_ids(qv, cents, nprobe)
         return sum(sizes.get(c, 0) for c in probes) / max(1, n)
 
     PATHS = {
