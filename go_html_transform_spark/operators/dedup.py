@@ -6,11 +6,12 @@ Design for 10^12 rows:
 * exact: hash-groupBy on a canonical key — one shuffle, map-side partial.
 * MinHash+LSH: signatures are array-native Column arithmetic (no UDF, no
   shuffle); banding turns near-dup detection into an equi-join on
-  (band_id, band_key) — candidates only, verified by true Jaccard. The
-  band join is the ONLY shuffle, and its key cardinality is huge (good
-  distribution); identical-band groups are the natural skew risk, and
-  shingle signatures (ngram_near_duplicates) keep them discriminative
-  on skewed vocabularies.
+  (band_id, band_key) — candidates only, verified by true Jaccard.
+  Every all-pairs-within-a-key join here (LSH band buckets and SemDeDup
+  cells) runs through one exact tiling, ``_tiles``/``_pairs``: a key
+  over ``MAX_TILE_ROWS`` rows is split into bounded tasks that together
+  yield exactly its pairs, so an identical-band group no longer runs as
+  one task.
 * SimHash: 16-bit signature via pure bit arithmetic; Hamming-adjacent
   buckets join.
 * n-gram Jaccard: shingles packed into int64 (t0<<20|t1<<10|t2), same
@@ -22,7 +23,7 @@ fixed below — expressible identically in DuckDB for the oracle.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 MINHASH_P = 524287  # 2^19 - 1, prime
@@ -38,6 +39,9 @@ SIMHASH_B = 9973
 # aliased distinct 3-grams on >1024-id vocabs, inflating n-gram Jaccard
 # and the KMV shingle sketch.
 SHINGLE_BASE = 2**21
+# rows of one key in one tile slice: bounds every within-key pair task
+# (``_tiles``) at 2 * MAX_TILE_ROWS rows
+MAX_TILE_ROWS = 8192
 
 
 def _h(i: int, t: Column) -> Column:
@@ -166,14 +170,15 @@ def minhash_lsh_candidates(
     use_arrow: bool | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing >=1 LSH band.
-    One explode + one equi-join self-join on the band key.
+    One explode + one tiled equi-join self-join on the band key.
 
-    Candidates are exact: every band-bucket joins in full, so a bucket
-    shared by m docs contributes m^2 pairs from ONE join key, which no
-    partitioning spreads. On skewed vocabularies raw-token signatures
-    degenerate into such buckets; shingle signatures
-    (``ngram_near_duplicates``) keep them discriminative (BENCH/OPS.md,
-    round-5 prepare table).
+    Candidates are exact: a bucket shared by m docs contributes all its
+    m^2/2 pairs. On skewed vocabularies raw-token signatures degenerate
+    into such buckets; ``_pairs`` splits a bucket over ``MAX_TILE_ROWS``
+    rows into tasks of at most twice that many rows, so it no longer runs
+    as one task, and shingle signatures (``ngram_near_duplicates``) keep
+    buckets discriminative in the first place (BENCH/OPS.md, round-5
+    prepare table).
 
     ``use_arrow`` picks the signature tier: the Arrow kernel
     (functions/kernels.minhash16_arrow, element-wise parity-pinned to
@@ -197,39 +202,89 @@ def minhash_lsh_candidates(
     else:
         sig = minhash_signature(F.col(tokens_col), num_hashes)
     banded = df.select(
-        F.col(id_col).alias("id"),
+        F.col(id_col).alias("__id"),
         F.explode(lsh_bands(sig, bands, rows)).alias("band"),
     )
-    other = banded.select(F.col("id").alias("id_b"), F.col("band"))
-    # USER-keyed repartition before the band self-join: the banded rows
-    # are tiny (id + band hash), so AQE coalesces the join's shuffle to
-    # a handful of tasks — but the join OUTPUT is the candidate
-    # explosion (sum over band-buckets of |bucket|^2), which then runs
-    # inside those few tasks (measured: 4 tasks on 32 cores at 50k zipf
-    # docs). A user-specified distribution is never AQE-coalesced, so
-    # distinct band values spread over the full width. (A single
-    # degenerate band-bucket is inherently one key — that case is
-    # bounded by the verify stage's own repartition and, at corpus
-    # scale, by band width sizing: rows/band controls bucket collision
-    # probability.)
-    npart = _join_width(df.sparkSession)
-    pairs = (
-        banded.repartition(npart, F.col("band"))
-        .join(other.repartition(npart, F.col("band")), "band")
-        .filter(F.col("id") < F.col("id_b"))
-        .select(F.col("id").alias("id_a"), "id_b")
-        .distinct()
-    )
-    return pairs
+    return _pairs(banded, "band", MAX_TILE_ROWS).select("id_a", "id_b").distinct()
 
 
 def _join_width(spark) -> int:
-    """Width of the user-keyed repartitions before the LSH band and
-    verify joins: the session's shuffle width or twice its default
-    parallelism, whichever is larger."""
+    """Width of the user-keyed repartitions before the tiled pair joins
+    and the verify joins: the session's shuffle width or twice its
+    default parallelism, whichever is larger."""
     return max(
         int(spark.conf.get("spark.sql.shuffle.partitions")),
         2 * spark.sparkContext.defaultParallelism,
+    )
+
+
+def _tiles(frame: DataFrame, key: str, bound: int | None) -> DataFrame:
+    """Exact tile decomposition of ``frame`` (columns ``key``, ``__id``
+    and payload) for all-pairs-within-a-key work, as one lazy plan of
+    fixed size. On the exchange ``repartition(width, key)``, one window
+    over the key ordered by id gives each key its row count n and each
+    row its rank r: ns = ceil(n / bound) slices, ``__sl = (r - 1) mod
+    ns``, so no slice holds more than ``bound`` rows. Each row goes to
+    the ns tasks ``(__ti, __tj) = (least(__sl, t), greatest(__sl, t))``,
+    t in [0, ns), and the frame ends on ``repartition(width, key, __ti,
+    __tj)``, so a hot key's tasks run apart. Every within-key pair
+    shares EXACTLY one task, (min(sl_a, sl_b), max(sl_a, sl_b)); a task
+    holds at most 2 * bound rows, a hot key's c^2 block runs as
+    ~(c / bound)^2 tasks, and its replicated volume c * ns is the order
+    of its pair block's own traffic. A key within bound is one task,
+    (0, 0), unreplicated. ``bound=None`` puts every row in task (0, 0)
+    with no window and no exchange, leaving the shuffle to AQE.
+
+    Both exchanges are USER-keyed at ``_join_width``: the rows are small
+    (an id and a key), so AQE would coalesce an automatic shuffle to a
+    handful of tasks while the join OUTPUT is the pair explosion; a
+    user-specified distribution is never coalesced, and the pair join
+    (or grouping) on (key, __ti, __tj) reads the second exchange without
+    one of its own."""
+    if bound is None:
+        return frame.withColumns({c: F.lit(0) for c in ("__sl", "__ti", "__tj")})
+    width = _join_width(frame.sparkSession)
+    by_id = Window.partitionBy(key).orderBy("__id")
+    whole = by_id.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ns = F.col("__ns")
+    return (
+        frame.repartition(width, key)
+        .select(
+            "*",
+            F.ceil(F.count(F.lit(1)).over(whole) / F.lit(bound)).cast("int").alias("__ns"),
+            F.row_number().over(by_id).alias("__rn"),
+        )
+        .withColumn("__sl", ((F.col("__rn") - 1) % ns).cast("int"))
+        .withColumn("__t", F.explode(F.sequence(F.lit(0), ns - 1)))
+        .withColumn("__ti", F.least("__sl", "__t"))
+        .withColumn("__tj", F.greatest("__sl", "__t"))
+        .drop("__t", "__ns", "__rn")
+        .repartition(width, key, "__ti", "__tj")
+    )
+
+
+def _pairs(
+    frame: DataFrame, key: str, bound: int | None, payload: tuple[str, ...] = ()
+) -> DataFrame:
+    """Every pair of rows of ``frame`` that share ``key``, as (key,
+    id_a, id_b, <p>_a, <p>_b for each payload column p), id_a < id_b:
+    one self-join of ``_tiles(frame, key, bound)`` on (key, __ti, __tj)
+    and b's slice = a's partner slice ``__ti + __tj - a.__sl`` (a's own
+    slice in a diagonal task, the other slice in an off-diagonal one),
+    so each task forms only the pairs it owns, even when a caller's
+    filter is pushed into the join. The pair set is that of the plain
+    equi-join on ``key``."""
+    tiled = _tiles(frame, key, bound)
+    a, b = tiled.alias("a"), tiled.alias("b")
+    on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in (key, "__ti", "__tj")] + [
+        F.col("b.__sl") == F.col("a.__ti") + F.col("a.__tj") - F.col("a.__sl"),
+        F.col("a.__id") < F.col("b.__id"),
+    ]
+    return a.join(b, on).select(
+        F.col(f"a.{key}").alias(key),
+        F.col("a.__id").alias("id_a"),
+        F.col("b.__id").alias("id_b"),
+        *[F.col(f"{s}.{p}").alias(f"{p}_{s}") for p in payload for s in ("a", "b")],
     )
 
 
@@ -403,19 +458,9 @@ def simhash_near_duplicates(
         )
         off += w
     e = sh.select("__id", "__sh", F.explode(F.array(*bands)).alias("__band"))
-    a, bb = e.alias("a"), e.alias("b")
     cand = (
-        a.join(
-            bb,
-            (F.col("a.__band") == F.col("b.__band"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(
-            F.col("a.__id").alias("id_a"),
-            F.col("b.__id").alias("id_b"),
-            F.col("a.__sh").alias("__sa"),
-            F.col("b.__sh").alias("__sb"),
-        )
+        _pairs(e, "__band", MAX_TILE_ROWS, ("__sh",))
+        .select("id_a", "id_b", F.col("__sh_a").alias("__sa"), F.col("__sh_b").alias("__sb"))
         .dropDuplicates(["id_a", "id_b"])
     )
     ham = F.bit_count(F.col("__sa").bitwiseXOR(F.col("__sb"))).cast("int")
@@ -566,8 +611,9 @@ def embedding_lsh_candidates(
     on the band key, never all-pairs: candidates ~ n^2 / 2^n_planes per
     table instead of n^2/2. At production scale size n_planes ~ log2(n) so
     per-bucket occupancy stays bounded (e.g. 20 planes -> 1M buckets for
-    10^9 vectors); recall at a given cosine is (1-theta/pi)^n_planes per
-    table, recovered by adding tables."""
+    10^9 vectors), and a bucket over ``MAX_TILE_ROWS`` rows is tiled
+    exactly (``_pairs``). Recall at a given cosine is
+    (1-theta/pi)^n_planes per table, recovered by adding tables."""
     from go_html_transform_spark.operators.similarity import lsh_bucket
 
     v = F.col(vec_col).cast("array<double>")
@@ -581,14 +627,8 @@ def embedding_lsh_candidates(
             for t in range(tables)
         ]
     )
-    banded = emb.select(F.col(id_col).alias("id"), F.explode(keys).alias("band"))
-    other = banded.select(F.col("id").alias("id_b"), F.col("band"))
-    return (
-        banded.join(other, "band")
-        .filter(F.col("id") < F.col("id_b"))
-        .select(F.col("id").alias("id_a"), "id_b")
-        .distinct()
-    )
+    banded = emb.select(F.col(id_col).alias("__id"), F.explode(keys).alias("band"))
+    return _pairs(banded, "band", MAX_TILE_ROWS).select("id_a", "id_b").distinct()
 
 
 def embedding_lsh_near_duplicates(
@@ -769,9 +809,6 @@ def near_dedup_keep_canonical(
 # ---------------------------------------------------------------------------
 
 
-SEM_MAX_CELL = 8192  # Arrow-tier per-task cell bound (rows)
-
-
 def semantic_dup_pairs(
     emb: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -779,7 +816,7 @@ def semantic_dup_pairs(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     use_arrow: bool = False,
-    max_cell: int | None = SEM_MAX_CELL,
+    max_cell: int | None = MAX_TILE_ROWS,
 ) -> DataFrame:
     """SemDeDup candidate stage (Abbas et al. 2023, arXiv:2303.09540):
     k-means-cluster the embedding space, then compare pairs ONLY within a
@@ -790,12 +827,13 @@ def semantic_dup_pairs(
     only).
 
     Scale shape: the assignment is the zero-shuffle ``ivf_assign`` map
-    pass; the only exchange is keyed on centroid_id. Per-cluster work is
-    quadratic in cluster size, so k is the first knob: pick
-    k ~ n/target_cluster_size (the paper runs k=50k over 5B docs) and
-    the Lloyd-trained codebook (``similarity.ivf_trained_centroids``)
-    keeps clusters balanced. Seeded centroids stay the DuckDB-oracle
-    anchor (assignment reproducible cross-engine).
+    pass; the pairs come from the cell-keyed pair step (``_tiles``).
+    Per-cluster work is quadratic in cluster size, so k is the first
+    knob: pick k ~ n/target_cluster_size (the paper runs k=50k over 5B
+    docs) and the Lloyd-trained codebook
+    (``similarity.ivf_trained_centroids``) keeps clusters balanced.
+    Seeded centroids stay the DuckDB-oracle anchor (assignment
+    reproducible cross-engine).
 
     ``use_arrow=True`` is the SCALE path for the pair stage: one
     ``applyInPandas`` task per cell computing the pair cosines as a
@@ -809,25 +847,26 @@ def semantic_dup_pairs(
     tests); the expression form stays the default because the DuckDB
     oracle replays ITS fold order bit-exactly.
 
-    HOT-CELL GUARD (Arrow tier; ``max_cell``, default 8192): a skewed
-    codebook can leave one giant cluster — a Zipf hashed-BoW corpus
-    measurably concentrates in a hot-token direction — and an
-    applyInPandas cell is ONE task, so at 10^12 rows a 10^9-row cell
-    serializes the job no matter how fast the BLAS is. Cells over
-    ``max_cell`` rows are tiled EXACTLY (``_tile_cells``): sliced by
-    id-hash into ceil(c/max_cell) slices, every unordered slice pair its
-    own task. Each within-cell pair lands in exactly one tile, so the
-    pair set is the unguarded one; per-task input is ~2*max_cell rows
-    and the irreducible c^2 block (a direction of near-identical
-    vectors has quadratic pair OUTPUT) spreads over (c/max_cell)^2
-    parallel tasks instead of one. Cells at or under ``max_cell`` (every
-    cell of the oracle fixtures) stay one task each. The tiling is lazy
-    and its plan does not grow with the number of hot cells: building
-    this frame runs no Spark job; executing it adds one per-cluster
-    count (k rows, broadcast back). ``max_cell=None`` drops the count
-    and leaves every cell one task. The expression/join form needs no
-    guard: its per-cluster equi-join shuffle is AQE skew-splittable like
-    any other skewed join."""
+    HOT-CELL GUARD (Arrow tier; ``max_cell``, default ``MAX_TILE_ROWS``
+    = 8192): a skewed codebook can leave one giant cluster — a Zipf
+    hashed-BoW corpus measurably concentrates in a hot-token direction
+    — and one cell's pairs in one task serialize the job at 10^12 rows
+    no matter how fast the BLAS is. Cells over ``max_cell`` rows are
+    tiled EXACTLY (``_tiles``): cut into ceil(c/max_cell) slices of at
+    most ``max_cell`` rows, every unordered slice pair its own task.
+    Each within-cell pair lands in exactly one tile, so the pair set is
+    the unguarded one; per-task input is at most 2*max_cell rows and the
+    irreducible c^2 block (a direction of near-identical vectors has
+    quadratic pair OUTPUT) spreads over ~(c/max_cell)^2 parallel tasks
+    instead of one. Cells at or under ``max_cell`` (every cell of the
+    oracle fixtures) stay one task each. The tiling is lazy and its plan
+    does not grow with the number of hot cells: building this frame
+    runs no Spark job, and the cell sizes come from a window on the
+    cell-keyed exchange itself, so the assignment runs once per
+    execution. ``max_cell=None`` drops the window and its exchanges and
+    leaves every cell one task. The expression/join form runs the same
+    pair step unbounded: its cell-keyed shuffle is AQE's, broadcast when
+    small and skew-splittable like any other skewed join."""
     from go_html_transform_spark.operators.similarity import ivf_assign
 
     assigned = ivf_assign(
@@ -836,77 +875,37 @@ def semantic_dup_pairs(
         "cid", F.col(id_col).alias("__id"), F.col(vec_col).cast("array<double>").alias("__v")
     )
     if use_arrow:
-        return _semantic_dup_pairs_arrow(_tile_cells(assigned, max_cell), threshold)
-    a = assigned.select("cid", F.col("__id").alias("id_a"), F.col("__v").alias("va"))
-    b = assigned.select(
-        F.col("cid").alias("cid_b"), F.col("__id").alias("id_b"), F.col("__v").alias("vb")
-    )
-    pairs = a.join(
-        b, (F.col("cid") == F.col("cid_b")) & (F.col("id_a") < F.col("id_b"))
-    )
+        return _semantic_dup_pairs_arrow(_tiles(assigned, "cid", max_cell), threshold)
     return (
-        pairs.withColumn("__c", cosine(F.col("va"), F.col("vb")))
+        _pairs(assigned, "cid", None, ("__v",))
+        .withColumn("__c", cosine(F.col("__v_a"), F.col("__v_b")))
         .filter(F.col("__c") >= threshold)
         .select("cid", "id_a", "id_b", F.round("__c", 6).alias("cos"))
-    )
-
-
-def _tile_cells(cells: DataFrame, max_cell: int | None) -> DataFrame:
-    """Exact tile decomposition of cells over ``max_cell`` rows, as one
-    lazy plan of fixed size: one ``groupBy("cid").count()`` becomes a
-    (cid, ns = ceil(n/max_cell)) frame of k rows, broadcast-joined back.
-    Rows hash-slice on id into ``__sl = pmod(xxhash64(id), ns)`` and
-    replicate into the ns tasks ``(__ti, __tj) = (least(__sl, t),
-    greatest(__sl, t))``, t in [0, ns). Every within-cell pair (a, b)
-    lands in EXACTLY one task — (min(sl_a, sl_b), max(sl_a, sl_b)) — so
-    the union over tasks is the exact pair set; per-task input is
-    ~2*max_cell rows and a hot cell's c^2 block runs as (c/max_cell)^2
-    parallel tasks. Replicated volume for a hot cell is c*ns =
-    c^2/max_cell rows, the order of its pair block's own row traffic.
-    Cells within bound get ns = 1: slice 0, the one task (0, 0), no
-    replication; ``max_cell=None`` gives every cell ns = 1 without the
-    count."""
-    if max_cell is None:
-        ns = F.lit(1)
-    else:
-        sizes = cells.groupBy("cid").count().select(
-            "cid", F.ceil(F.col("count") / F.lit(max_cell)).cast("int").alias("__ns")
-        )
-        cells = cells.join(F.broadcast(sizes), "cid")
-        ns = F.col("__ns")
-    sl = F.pmod(F.xxhash64(F.col("__id").cast("string")), ns).cast("int")
-    return (
-        cells.withColumn("__sl", sl)
-        .withColumn("__t", F.explode(F.sequence(F.lit(0), ns - 1)))
-        .select(
-            "cid", "__id", "__v", "__sl",
-            F.least("__sl", "__t").alias("__ti"),
-            F.greatest("__sl", "__t").alias("__tj"),
-        )
     )
 
 
 def _semantic_dup_pairs_arrow(tiled: DataFrame, threshold: float) -> DataFrame:
     """Per-task pair cosines as a blocked numpy matmul. One Arrow
     batch per task ``(cid, __ti, __tj)`` (vectors ship once per task,
-    not once per pair); the similarity block is computed in row-blocks
-    so peak memory stays ~block x c doubles. Diagonal tasks (i == j)
-    emit the upper triangle of their rows; off-diagonal tile tasks
-    (i < j) emit the cross-block between their two slices only — the
-    within-slice pairs belong to the diagonal tasks. Zero-norm
-    vectors score 0.0 against everything (the ``cosine`` guard) and so
-    never pass a positive threshold.
+    not once per pair); the similarity block between the task's slices
+    ``__ti`` and ``__tj`` is computed in row-blocks so peak memory stays
+    ~block x c doubles. A diagonal task (i == j) pairs its one slice
+    with itself and keeps the upper triangle; an off-diagonal task
+    (i < j) keeps the whole cross-block — the within-slice pairs belong
+    to the diagonal tasks. Zero-norm vectors score 0.0 against
+    everything (the ``cosine`` guard) and so never pass a positive
+    threshold.
 
     Pair orientation parity: the join form orders ids with Spark's
-    binary UTF8 comparison (``id_a < id_b``), so string ids here sort on
-    their UTF-8 encoded BYTES — by construction the same ordering
+    binary UTF8 comparison (``id_a < id_b``), so string ids here compare
+    as their UTF-8 encoded BYTES — by construction the same ordering
     (UTF-8 is code-point order-preserving, so this also coincides with
     Python's default str comparison for well-formed strings; encoding
     makes the parity explicit instead of comparator-dependent, e.g.
-    Java's UTF-16 code-unit order would NOT match). NULL ids are
-    dropped up front: the join form's ``id_a < id_b`` predicate is NULL
-    for them, so they never appear in a pair there either — and pandas
-    cannot sort a None against strings anyway."""
+    Java's UTF-16 code-unit order would NOT match); equal ids never
+    pair. NULL ids are dropped up front: the join form's ``id_a < id_b``
+    predicate is NULL for them, so they never appear in a pair there
+    either."""
     import numpy as np
     import pandas as pd
 
@@ -926,73 +925,48 @@ def _semantic_dup_pairs_arrow(tiled: DataFrame, threshold: float) -> DataFrame:
 
     def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
         pdf = pdf[pdf["__id"].notna()]
-        n = len(pdf)
         empty = pd.DataFrame(
             {"cid": [], "id_a": [], "id_b": [], "cos": []}
         ).astype({"cid": "int32", "cos": "float64"})
-        if n < 2:
+        if pdf.empty:
             return empty
-        # sort by id so emitted (row_i < row_j) pairs satisfy id_a < id_b
-        # under the same ordering the join form uses: UTF-8 bytes for
-        # strings (Spark's BinaryComparator), natural order otherwise
-        key = (
-            (lambda s: s.map(lambda x: x.encode("utf-8")))
-            if pdf["__id"].dtype == object
-            else None
-        )
-        pdf = pdf.sort_values(
-            "__id", kind="mergesort", ignore_index=True, key=key
-        )
         cid = int(pdf["cid"].iloc[0])
         ti, tj = int(pdf["__ti"].iloc[0]), int(pdf["__tj"].iloc[0])
+        A = pdf[pdf["__sl"] == ti]
+        B = pdf[pdf["__sl"] == tj]
+        if not len(A) or not len(B):
+            return empty
+        Va = _norm(np.vstack(A["__v"].to_numpy()).astype("float64"))
+        Vb = Va if ti == tj else _norm(np.vstack(B["__v"].to_numpy()).astype("float64"))
+        ids_a = A["__id"].to_numpy()
+        ids_b = B["__id"].to_numpy()
         out_a, out_b, out_c = [], [], []
-        if ti == tj:
-            # diagonal task: upper triangle over all rows
-            Vn = _norm(np.vstack(pdf["__v"].to_numpy()).astype("float64"))
-            ids = pdf["__id"].to_numpy()
-            for lo in range(0, n, BLOCK):
-                hi = min(lo + BLOCK, n)
-                C = Vn[lo:hi] @ Vn.T  # (hi-lo) x n
-                for r in range(lo, hi):
-                    row = C[r - lo, r + 1 :]
-                    m = np.nonzero(row >= thr)[0]
-                    if len(m):
-                        out_a.append(np.full(len(m), ids[r]))
-                        out_b.append(ids[r + 1 + m])
-                        out_c.append(row[m])
-        else:
-            # off-diagonal tile: cross-block between the two slices only
-            A = pdf[pdf["__sl"] == ti]
-            B = pdf[pdf["__sl"] == tj]
-            if not len(A) or not len(B):
-                return empty
-            Va = _norm(np.vstack(A["__v"].to_numpy()).astype("float64"))
-            Vb = _norm(np.vstack(B["__v"].to_numpy()).astype("float64"))
-            ids_a = A["__id"].to_numpy()
-            ids_b = B["__id"].to_numpy()
-            for lo in range(0, len(A), BLOCK):
-                hi = min(lo + BLOCK, len(A))
-                C = Va[lo:hi] @ Vb.T  # (hi-lo) x |B|
-                ri, ci = np.nonzero(C >= thr)
-                if not len(ri):
-                    continue
-                a = ids_a[lo + ri]
-                b = ids_b[ci]
-                # orient each cross pair by the join form's id order
-                if a.dtype == object:
-                    enc_a = np.array([x.encode("utf-8") for x in a], dtype=object)
-                    enc_b = np.array([x.encode("utf-8") for x in b], dtype=object)
-                    swap = enc_a > enc_b
-                    keep = enc_a != enc_b
-                else:
-                    swap = a > b
-                    keep = a != b
-                lo_id = np.where(swap, b, a)[keep]
-                hi_id = np.where(swap, a, b)[keep]
-                if len(lo_id):
-                    out_a.append(lo_id)
-                    out_b.append(hi_id)
-                    out_c.append(C[ri, ci][keep])
+        for lo in range(0, len(A), BLOCK):
+            hi = min(lo + BLOCK, len(A))
+            C = Va[lo:hi] @ Vb.T  # (hi-lo) x |B|
+            hit = C >= thr
+            if ti == tj:  # A is B: each unordered pair once
+                hit &= np.arange(lo, hi)[:, None] < np.arange(len(B))
+            ri, ci = np.nonzero(hit)
+            if not len(ri):
+                continue
+            a = ids_a[lo + ri]
+            b = ids_b[ci]
+            # orient each pair by the join form's id order
+            if a.dtype == object:
+                enc_a = np.array([x.encode("utf-8") for x in a], dtype=object)
+                enc_b = np.array([x.encode("utf-8") for x in b], dtype=object)
+                swap = enc_a > enc_b
+                keep = enc_a != enc_b
+            else:
+                swap = a > b
+                keep = a != b
+            lo_id = np.where(swap, b, a)[keep]
+            hi_id = np.where(swap, a, b)[keep]
+            if len(lo_id):
+                out_a.append(lo_id)
+                out_b.append(hi_id)
+                out_c.append(C[ri, ci][keep])
         if not out_a:
             return empty
         return pd.DataFrame(
@@ -1014,7 +988,7 @@ def semantic_dedup_keep(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     use_arrow: bool = False,
-    max_cell: int | None = SEM_MAX_CELL,
+    max_cell: int | None = MAX_TILE_ROWS,
 ) -> DataFrame:
     """SemDeDup keep-set: drop a vector iff a SMALLER-ID vector in its
     cluster sits within the cosine threshold (greedy-by-id canonical

@@ -88,7 +88,7 @@ def prepare_training_corpus(
     min_quality_p: float = 0.5,
     dsir_target: Column | None = None,
     bpe_num_merges: int | None = None,
-    near_dup_on: str = "tokens",
+    near_dup_on: str = "shingles3",
 ) -> tuple[DataFrame, dict]:
     """Returns (prepared DataFrame, stage-by-stage stats). Writes a
     shard-partitioned parquet corpus when ``out_dir`` is given (the
@@ -153,6 +153,13 @@ def prepare_training_corpus(
       (post-dedup/selection — the standard tokenizer-training point) and
       re-tokenize: tokens/n_tok are rewritten, merge table returned in
       ``stats['bpe_merges']``.
+
+    ``near_dup_on`` picks the near-dup signal: ``'shingles3'`` (the
+    default) runs MinHash-LSH and the Jaccard verify on 3-gram shingle
+    sets (``ngram_near_duplicates``); ``'tokens'`` runs them on raw
+    distinct-token sets, which degenerate on skewed vocabularies
+    (recall 0.31 with 9.7M false candidates in BENCH/OPS.md's round-5
+    prepare table).
     """
     stats: dict = {}
     observed: dict[str, Observation] = {}
@@ -219,9 +226,8 @@ def prepare_training_corpus(
     exact = observe(exact, "after_exact_dedup").persist(StorageLevel.MEMORY_AND_DISK)
     persisted.append(exact)
 
-    # near_dup_on='shingles3' switches the LSH/verify signal from raw
-    # distinct-token sets to 3-gram shingle sets — the right choice on
-    # skewed vocabularies (see ngram_near_duplicates: raw-token minhash
+    # 3-gram shingle sets by default; raw distinct-token sets degenerate
+    # on skewed vocabularies (see ngram_near_duplicates: raw-token minhash
     # degenerates on a Zipf head, token-set Jaccard saturates)
     if near_dup_on == "shingles3":
         pairs = D.ngram_near_duplicates(exact, "doc_id", threshold=jaccard_threshold)

@@ -922,7 +922,7 @@ def test_semantic_dup_pairs_arrow_string_ids_with_nulls(spark):
     se = {(r.id_a, r.id_b) for r in expr.collect()}
     # max_cell=2 tiles the one cell, so off-diagonal tasks orient pairs
     # across two slices
-    for max_cell in (D.SEM_MAX_CELL, 2):
+    for max_cell in (D.MAX_TILE_ROWS, 2):
         arrow = D.semantic_dup_pairs(
             emb, cents, threshold=0.9, use_arrow=True, max_cell=max_cell
         )
@@ -932,10 +932,11 @@ def test_semantic_dup_pairs_arrow_string_ids_with_nulls(spark):
         # orientation matches the UTF-8 byte order Spark's < uses
         for a, b in sa:
             assert a.encode("utf-8") < b.encode("utf-8")
-    tiled = D._tile_cells(
+    tiled = D._tiles(
         SIM.ivf_assign(emb, cents, out_col="cid").select(
             "cid", F.col("vec_id").alias("__id"), F.col("embedding").alias("__v")
         ),
+        "cid",
         2,
     )
     cross = (
@@ -1005,7 +1006,7 @@ def test_semantic_pairs_tiling_exact_parity(spark):
         F.col("vec_id").alias("__id"),
         F.col("embedding").cast("array<double>").alias("__v"),
     )
-    tasks = D._tile_cells(assigned, 64).select("cid", "__ti", "__tj").distinct()
+    tasks = D._tiles(assigned, "cid", 64).select("cid", "__ti", "__tj").distinct()
     assert tasks.count() > len(cents)
 
 
@@ -1020,7 +1021,7 @@ def test_semantic_dup_pairs_arrow_builds_without_spark_jobs(spark):
         "vec_id long, embedding array<double>",
     )
     cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
-    for max_cell, group in ((D.SEM_MAX_CELL, "sem-cold"), (4, "sem-hot")):
+    for max_cell, group in ((D.MAX_TILE_ROWS, "sem-cold"), (4, "sem-hot")):
         pairs, jobs = _jobs_in(
             spark,
             group,
@@ -1041,10 +1042,10 @@ def _hot_cells(spark, n_cells):
     )
 
 
-def test_tile_cells_plan_size_fixed_and_tiles_exact(spark):
-    """The tiling plan does not grow with the number of hot cells (one
-    count + broadcast join, no per-cell branch), and over 1,000 hot cells
-    every within-cell id pair lands in exactly one task of at most
+def test_tiles_plan_size_fixed_and_tiles_exact(spark):
+    """The tiling plan does not grow with the number of hot keys (one
+    window on the keyed exchange, no per-key branch), and over 1,000 hot
+    cells every within-cell id pair lands in exactly one task of at most
     2*max_cell rows."""
     import itertools
     import re
@@ -1053,7 +1054,7 @@ def test_tile_cells_plan_size_fixed_and_tiles_exact(spark):
     max_cell = 2
 
     def plan(n_cells):
-        qe = D._tile_cells(_hot_cells(spark, n_cells), max_cell)._jdf.queryExecution()
+        qe = D._tiles(_hot_cells(spark, n_cells), "cid", max_cell)._jdf.queryExecution()
         # expression ids and the literals n_cells, 3*n_cells read as N
         return re.sub(r"\d+", "N", qe.analyzed().toString())
 
@@ -1061,7 +1062,7 @@ def test_tile_cells_plan_size_fixed_and_tiles_exact(spark):
     assert len(one) == len(many) and one == many, (one, many)
 
     rows = (
-        D._tile_cells(_hot_cells(spark, 1000), max_cell)
+        D._tiles(_hot_cells(spark, 1000), "cid", max_cell)
         .select(
             "cid", F.col("__id").alias("id"), F.col("__sl").alias("sl"),
             F.col("__ti").alias("ti"), F.col("__tj").alias("tj"),
@@ -1084,6 +1085,107 @@ def test_tile_cells_plan_size_fixed_and_tiles_exact(spark):
     }
     assert set(covered) == expected
     assert set(covered.values()) == {1}
+
+
+def _plan_nodes(plan):
+    """Node names of an executed physical plan, walked through adaptive
+    query stages (a reused exchange counts where it first runs)."""
+    name = plan.nodeName()
+    if name == "AdaptiveSparkPlan":
+        kids = [plan.executedPlan()]
+    elif name.endswith("QueryStage"):
+        kids = [plan.plan()]
+    else:
+        seq = plan.children()
+        kids = [seq.apply(i) for i in range(seq.size())]
+    return [name] + [n for k in kids for n in _plan_nodes(k)]
+
+
+def test_semantic_dup_pairs_arrow_runs_assignment_once(spark):
+    """The tiled Arrow tier sizes its cells on the cell-keyed exchange
+    itself, so the executed plan evaluates the ``ivf_assign`` Arrow UDF
+    once (one ArrowEvalPython), with and without cells over the bound."""
+    rng = random.Random(11)
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(4)]) for i in range(60)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
+    for max_cell in (D.MAX_TILE_ROWS, 8):
+        pairs = D.semantic_dup_pairs(
+            emb, cents, threshold=0.5, use_arrow=True, max_cell=max_cell
+        )
+        assert pairs.collect()
+        nodes = _plan_nodes(pairs._jdf.queryExecution().executedPlan())
+        assert nodes.count("ArrowEvalPython") == 1, (max_cell, nodes)
+
+
+def _giant_bucket_docs(spark):
+    """600 docs of 40 random tokens; every third one is a copy of doc 0,
+    so each band has one ~200-row bucket."""
+    rng = random.Random(13)
+    base = [rng.randrange(4096) for _ in range(40)]
+    rows = [
+        (f"g{i:04d}", list(base) if i % 3 == 0 else [rng.randrange(4096) for _ in range(40)])
+        for i in range(600)
+    ]
+    return spark.createDataFrame(rows, "doc_id string, tokens array<int>")
+
+
+def _pair_set(df):
+    return {(r.id_a, r.id_b) for r in df.select("id_a", "id_b").collect()}
+
+
+def test_lsh_tiling_planted_giant_bucket_exact_and_bounded(spark, monkeypatch):
+    """A planted 200-doc band bucket under a tile bound of 50: the LSH
+    candidates are the unguarded pair set, the bucket really splits,
+    and no (band, __ti, __tj) task holds more than twice the bound."""
+    from collections import Counter
+
+    docs = _giant_bucket_docs(spark)
+    default = _pair_set(D.minhash_lsh_candidates(docs, "doc_id"))
+    assert len(default) >= 200 * 199 // 2
+    bound = 50
+    monkeypatch.setattr(D, "MAX_TILE_ROWS", bound)
+    assert _pair_set(D.minhash_lsh_candidates(docs, "doc_id")) == default
+
+    banded = docs.select(
+        F.col("doc_id").alias("__id"),
+        F.explode(D.lsh_bands(D.minhash_signature(F.col("tokens")))).alias("band"),
+    )
+    tasks = Counter(
+        tuple(r)
+        for r in D._tiles(banded, "band", bound).select("band", "__ti", "__tj").collect()
+    )
+    assert max(tasks.values()) <= 2 * bound
+    per_band = Counter(band for band, _, _ in tasks)
+    assert max(per_band.values()) > 1  # the hot bucket is tiled
+
+
+def test_simhash_and_embedding_lsh_tiling_keep_pair_sets(spark, monkeypatch):
+    """Under a bound that tiles their hot buckets, SimHash near-dups and
+    the embedding sign-LSH candidates equal their unguarded pair sets."""
+    docs = _giant_bucket_docs(spark)
+    sim_default = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in D.simhash_near_duplicates(docs, "doc_id").collect()
+    }
+    rng = random.Random(17)
+    emb = spark.createDataFrame(
+        [(i, [rng.gauss(0, 1) for _ in range(8)]) for i in range(400)],
+        "vec_id long, embedding array<double>",
+    )
+    emb_default = _pair_set(D.embedding_lsh_candidates(emb, n_planes=2))
+    assert len(sim_default) >= 200 * 199 // 2 and len(emb_default) > 0
+
+    monkeypatch.setattr(D, "MAX_TILE_ROWS", 30)
+    sim = {
+        (r.id_a, r.id_b, r.hamming)
+        for r in D.simhash_near_duplicates(docs, "doc_id").collect()
+    }
+    assert sim == sim_default
+    # 400 vectors in 4 buckets per table: every bucket is over the bound
+    assert _pair_set(D.embedding_lsh_candidates(emb, n_planes=2)) == emb_default
 
 
 def test_shingles3_large_vocab_no_aliasing_and_range_check(spark):

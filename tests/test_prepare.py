@@ -56,7 +56,7 @@ def _composed(spark):
         TX.quality_score_ppm(F.col("text")) >= PARAMS["min_quality_ppm"]
     )
     exact = D.exact_dedup(kept, "doc_id", F.col("text"))
-    pairs = D.minhash_near_duplicates(
+    pairs = D.ngram_near_duplicates(
         exact, "doc_id", threshold=PARAMS["jaccard_threshold"]
     ).select("id_a", "id_b")
     final = D.near_dedup_keep_canonical(exact, pairs, "doc_id")
@@ -448,7 +448,7 @@ def test_prepare_learned_quality_dsir_and_bpe_stages(spark, tmp_path):
         "doc_id", "inner",
     )
     exact = D.exact_dedup(kept, "doc_id", F.col("text"))
-    pairs = D.minhash_near_duplicates(
+    pairs = D.ngram_near_duplicates(
         exact, "doc_id", threshold=0.9
     ).select("id_a", "id_b")
     deduped = D.near_dedup_keep_canonical(exact, pairs, "doc_id")

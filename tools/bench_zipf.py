@@ -9,7 +9,9 @@ near-duplicates, rank-frequency ~ 1/k), where candidate rates and df
 distributions have production shape.
 
 Usage: python tools/bench_zipf.py [n_docs]   (default 100000)
-Prints one JSON line; paste the rows into BENCH/OPS.md.
+Prints one JSON line; paste the rows into BENCH/OPS.md. The session
+takes ``get_spark``'s host defaults (SPARK_GRAFT_CPUS and
+SPARK_GRAFT_DRIVER_MEM override them).
 """
 
 from __future__ import annotations
@@ -36,29 +38,21 @@ def main() -> None:
     from go_html_transform_spark.session import get_spark
     from go_html_transform_spark.sources import synth as Z
 
-    spark = get_spark(
-        app_name="bench-zipf",
-        cores=int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
-        shuffle_partitions=int(os.environ.get("SPARK_GRAFT_PARTITIONS", "128")),
-        extra_conf={
-            "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"),
-            "spark.shuffle.compress": "false",
-            "spark.shuffle.spill.compress": "false",
-        },
-    )
+    spark = get_spark(app_name="bench-zipf")
     spark.sparkContext.setLogLevel("ERROR")
     jvm = spark.sparkContext._jvm
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
 
     docs = (
         Z.zipf_documents(spark, n_docs, vocab_size=vocab, avg_len=200)
-        .repartition(128)
+        .repartition(width)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n = docs.count()
     n_planted = docs.filter("is_dup").count()
     emb = (
         Z.hashed_embeddings(docs)
-        .repartition(128)
+        .repartition(width)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     emb.count()

@@ -173,9 +173,11 @@ def main() -> None:
         ),
         (
             "MinHash-LSH near-duplicate pairs",
-            "MUST: the band equi-join is the ONLY join over candidates "
-            "(never an all-pairs cross join); signatures are array-native "
-            "projections (no Python).",
+            "MUST: the tiled band equi-join on (band, __ti, __tj) is the "
+            "ONLY join over candidates (never an all-pairs cross join); the "
+            "band and tile exchanges and the verify joins are "
+            "REPARTITION_BY_NUM (user-keyed, never AQE-coalesced); the "
+            "signatures are the Arrow MinHash-16 kernel (ArrowEvalPython).",
             D.minhash_near_duplicates(
                 S.documents_tokenized(spark, sf_dir), "doc_id", threshold=0.9
             ),
@@ -312,10 +314,12 @@ def main() -> None:
         ),
         (
             "SemDeDup within-cluster pairs",
-            "MUST: the pair join is an equi-join keyed on centroid_id "
-            "(SortMerge/ShuffledHash/BroadcastHash all acceptable) — "
-            "NEVER CartesianProduct/BroadcastNestedLoop; the assignment "
-            "itself is a zero-shuffle projection (literal codebook argmax).",
+            "MUST: the pair join is an equi-join keyed on (cid, __ti, "
+            "__tj), the tiled cell (SortMerge/ShuffledHash/BroadcastHash "
+            "all acceptable) — NEVER CartesianProduct/BroadcastNestedLoop; "
+            "the cell sizes are a Window on the cell-keyed exchange (no "
+            "count joined back); the assignment itself is a zero-shuffle "
+            "projection (literal codebook argmax).",
             D.semantic_dup_pairs(emb_d, sem_cents, threshold=0.4),
         ),
         (
