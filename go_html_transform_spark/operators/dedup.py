@@ -161,6 +161,42 @@ def lsh_bands(sig: Column, bands: int = 4, rows: int = 4) -> Column:
     return F.array(*keys)
 
 
+def _minhash_bands(
+    df: DataFrame,
+    id_col: str,
+    tokens_col: str = "tokens",
+    num_hashes: int = 16,
+    bands: int = 4,
+    use_arrow: bool | None = None,
+) -> DataFrame:
+    """The band step of MinHash-LSH: (__id, band), one row per document
+    and band, the signature evaluated on the way. See
+    ``minhash_lsh_candidates`` for ``use_arrow``."""
+    rows = num_hashes // bands
+    if use_arrow is None:
+        use_arrow = num_hashes == 16
+    if use_arrow:
+        if num_hashes != 16:
+            raise ValueError(
+                f"the Arrow kernel is MinHash-16 only, got num_hashes={num_hashes}"
+            )
+        from go_html_transform_spark.functions.kernels import minhash16_arrow
+
+        sig = minhash16_arrow(F.col(tokens_col))
+    else:
+        sig = minhash_signature(F.col(tokens_col), num_hashes)
+    return df.select(
+        F.col(id_col).alias("__id"),
+        F.explode(lsh_bands(sig, bands, rows)).alias("band"),
+    )
+
+
+def _band_candidates(banded: DataFrame) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of the rows of an (__id,
+    band) frame that share a band: the tiled band self-join."""
+    return _pairs(banded, "band", MAX_TILE_ROWS).select("id_a", "id_b").distinct()
+
+
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,
@@ -187,25 +223,17 @@ def minhash_lsh_candidates(
     signature pass dominates candidate generation at realistic
     vocabulary sizes (57x measured at 32k-vocab, BENCH/OPS.md zipf
     rows), and both tiers return identical signatures. Pass False to
-    force the expression form (the DuckDB-oracle anchor shape)."""
-    rows = num_hashes // bands
-    if use_arrow is None:
-        use_arrow = num_hashes == 16
-    if use_arrow:
-        if num_hashes != 16:
-            raise ValueError(
-                f"the Arrow kernel is MinHash-16 only, got num_hashes={num_hashes}"
-            )
-        from go_html_transform_spark.functions.kernels import minhash16_arrow
+    force the expression form (the DuckDB-oracle anchor shape).
 
-        sig = minhash16_arrow(F.col(tokens_col))
-    else:
-        sig = minhash_signature(F.col(tokens_col), num_hashes)
-    banded = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(lsh_bands(sig, bands, rows)).alias("band"),
+    The band frame is not cached here: the caller owns any cache of its
+    input. Over a persisted ``df`` Spark plans the band self-join with
+    no ``ReusedExchange``, so each side evaluates the signature again;
+    a caller that reads a persisted frame composes ``_minhash_bands``,
+    its own persist, and ``_band_candidates`` (or ``_jaccard_verify``),
+    as ``prepare_training_corpus`` does."""
+    return _band_candidates(
+        _minhash_bands(df, id_col, tokens_col, num_hashes, bands, use_arrow)
     )
-    return _pairs(banded, "band", MAX_TILE_ROWS).select("id_a", "id_b").distinct()
 
 
 def _join_width(spark) -> int:
@@ -348,9 +376,17 @@ def minhash_near_duplicates(
     inclusion-exclusion the DuckDB twin ``jaccard_ppm_sql`` uses) and
     both the double jaccard and the exact-ppm output share the two
     counts. One array op per pair instead of eight."""
-    cands = minhash_lsh_candidates(
-        df, id_col, tokens_col, num_hashes, bands, use_arrow=use_arrow
-    )
+    banded = _minhash_bands(df, id_col, tokens_col, num_hashes, bands, use_arrow)
+    return _jaccard_verify(banded, df, id_col, tokens_col, threshold)
+
+
+def _jaccard_verify(
+    banded: DataFrame, df: DataFrame, id_col: str, tokens_col: str, threshold: float
+) -> DataFrame:
+    """The verify step of ``minhash_near_duplicates``: the band
+    candidates of ``banded`` (``_minhash_bands`` over ``df``) joined to
+    their token sets in ``df`` and kept at raw Jaccard >= threshold."""
+    cands = _band_candidates(banded)
     # Pin the verify joins' width: AQE coalesces by the CANDIDATE set's
     # shuffle bytes (two ids/row — tiny), but each joined row then pays
     # an array_intersect over two full token sets, so the real work per
@@ -627,8 +663,9 @@ def embedding_lsh_candidates(
             for t in range(tables)
         ]
     )
-    banded = emb.select(F.col(id_col).alias("__id"), F.explode(keys).alias("band"))
-    return _pairs(banded, "band", MAX_TILE_ROWS).select("id_a", "id_b").distinct()
+    return _band_candidates(
+        emb.select(F.col(id_col).alias("__id"), F.explode(keys).alias("band"))
+    )
 
 
 def embedding_lsh_near_duplicates(
@@ -678,16 +715,19 @@ def connected_components(
 ) -> DataFrame:
     """(node, component) for every node appearing in the pair list, where
     component = min node id in its connected component — hash-min label
-    propagation with pointer jumping: every node starts labelled with
-    itself; each round a node takes the min label among itself and its
-    neighbours, then jumps through its new label's PREVIOUS-round label
-    (component := min(component, label-of(component))). The jump roughly
-    doubles how far the cluster minimum has propagated each round, so
-    rounds needed = O(log diameter) instead of O(diameter) — a chain of
-    1000 near-identical docs (templated boilerplate, the adversarial
-    shape for near-dup graphs) converges in ~10 rounds, not 1000
-    (capped by max_iters with a loud failure rather than a silent wrong
-    answer; 30 rounds covers diameter ~2^30).
+    propagation with pointer jumping. The initial labels are the first
+    hash-min step, read off the symmetric edge list: each node starts
+    labelled min(itself, its neighbours). Each round a node takes the
+    min label among itself and its neighbours, then jumps through its
+    new label's PREVIOUS-round label (component := min(component,
+    label-of(component))). The jump roughly doubles how far the cluster
+    minimum has propagated each round, so rounds needed = O(log
+    diameter) instead of O(diameter) — a chain of 1000 near-identical
+    docs (templated boilerplate, the adversarial shape for near-dup
+    graphs) converges in ~10 rounds, not 1000 (capped by max_iters with
+    a loud failure rather than a silent wrong answer; 30 rounds covers
+    diameter ~2^30). A graph of disjoint pairs is labelled on
+    initialisation, and its one round only confirms it.
 
     Scale shape: one edge-to-label equi-join + one groupBy-min + one
     label-to-label equi-join per round over the PAIR set (orders of
@@ -713,9 +753,9 @@ def connected_components(
     # planning cost constant (the standard iterative-algorithm discipline
     # on Spark).
     labels = (
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("component", F.col("node"))
+        edges.groupBy(F.col("src").alias("node"))
+        .agg(F.min("dst").alias("__nmin"))
+        .select("node", F.least("node", "__nmin").alias("component"))
         .localCheckpoint(eager=True)
     )
     for _ in range(max_iters):
@@ -878,7 +918,13 @@ def semantic_dup_pairs(
         return _semantic_dup_pairs_arrow(_tiles(assigned, "cid", max_cell), threshold)
     return (
         _pairs(assigned, "cid", None, ("__v",))
-        .withColumn("__c", cosine(F.col("__v_a"), F.col("__v_b")))
+        # guarded: Spark pushes the threshold filter into the join
+        # condition ahead of id_a < id_b, where an unguarded cosine runs
+        # on all c^2 ordered row pairs of a cell, not the c(c-1)/2 kept
+        .withColumn(
+            "__c",
+            F.when(F.col("id_a") < F.col("id_b"), cosine(F.col("__v_a"), F.col("__v_b"))),
+        )
         .filter(F.col("__c") >= threshold)
         .select("cid", "id_a", "id_b", F.round("__c", 6).alias("cos"))
     )

@@ -496,11 +496,11 @@ def test_connected_components_vs_union_find(spark):
 
 def test_connected_components_long_chain_logarithmic(spark):
     """A 1000-node chain (the templated-boilerplate adversarial shape)
-    converges in O(log n) ROUNDS, pinned exactly: pointer jumping
-    reaches distance 2^t - 1 after t rounds, so diameter 999 needs
-    ceil(log2(1000)) = 10 propagation rounds (plus the final all-stable
-    round that proves convergence) — plain hash-min would need 999 and
-    blow the max_iters=30 cap."""
+    converges in O(log n) ROUNDS, pinned exactly: the initial labels
+    reach distance 1 and pointer jumping reaches 2^(t+1) - 1 after t
+    rounds, so diameter 999 needs 9 propagation rounds (plus the final
+    all-stable round that proves convergence) — plain hash-min would
+    need 999 and blow the max_iters=30 cap."""
     pairs = spark.createDataFrame(
         [(i, i + 1) for i in range(999)], "id_a long, id_b long"
     )
@@ -513,6 +513,21 @@ def test_connected_components_long_chain_logarithmic(spark):
     assert set(got.values()) == {0}
     assert len(rounds) <= 14  # O(log n), not O(n)
     assert rounds[-1] == 0  # last round observed a fixed point
+
+
+def test_connected_components_pairs_converge_on_initial_labels(spark):
+    """The initial labels are the first hash-min step, so a graph of
+    disjoint pairs is already labelled: its one round changes nothing."""
+    pairs = spark.createDataFrame(
+        [("p0", "p1"), ("q1", "q0")], "id_a string, id_b string"
+    )
+    rounds: list[int] = []
+    got = {
+        r.node: r.component
+        for r in D.connected_components(pairs, rounds=rounds).collect()
+    }
+    assert got == {"p0": "p0", "p1": "p0", "q0": "q0", "q1": "q0"}
+    assert rounds == [0]
 
 
 def test_connected_components_nonconvergence_raises(spark):
@@ -871,6 +886,40 @@ def test_semantic_dup_pairs_plan_is_equi_join(spark, vectors):
     plan = D.semantic_dup_pairs(vectors, cents, threshold=0.5)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+
+
+def _conjuncts(expr):
+    if expr.nodeName() == "And":
+        return _conjuncts(expr.left()) + _conjuncts(expr.right())
+    return [expr]
+
+
+def test_semantic_dup_pairs_join_scores_only_kept_pairs(spark, vectors):
+    """The join tier's threshold filter lands in the join condition; its
+    cosine is guarded by id_a < id_b, so the interpreted fold runs on the
+    c(c-1)/2 kept pairs of a cell, not on all c^2 ordered row pairs,
+    whatever order the conjuncts take."""
+    cents = SIM.ivf_centroids(vectors, k=4)
+    pairs = D.semantic_dup_pairs(vectors, cents, threshold=0.5)
+    joins = []
+
+    def walk(node):
+        name = node.nodeName()
+        if name.endswith("Join") and node.condition().isDefined():
+            joins.append(node.condition().get())
+        seq = node.children()
+        for i in range(seq.size()):
+            walk(seq.apply(i))
+
+    walk(pairs._jdf.queryExecution().optimizedPlan())
+    scored = [
+        c for j in joins for c in _conjuncts(j) if "SQRT(" in c.toString()
+    ]
+    assert scored
+    for c in scored:
+        assert c.nodeName() == "CaseWhen", c.toString()
+        guard = c.branches().apply(0)._1()
+        assert guard.nodeName() == "LessThan" and "__id" in guard.toString()
 
 
 def test_semantic_dedup_composes_with_trained_centroids(spark):

@@ -108,6 +108,67 @@ def test_prepare_sink_partitioned_by_shard(spark, tmp_path):
     assert back.count() == stats["after_near_dedup"]
 
 
+def _sql_executions(spark):
+    # the SQL status store is fed by the (asynchronous) listener bus
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+    store = spark._jsparkSession.sharedState().statusStore()
+    seq = store.executionsList()
+    return {seq.apply(i).executionId() for i in range(seq.size())}
+
+
+def _minhash_kernel_nodes(spark, executions):
+    """Distinct ``ArrowEvalPython`` nodes of the MinHash kernel in the
+    plans of ``executions``, a node told by its metric accumulators: a
+    cached subtree shows in every execution that reads the cache, with
+    the same accumulators."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    nodes = set()
+    for e in executions:
+        graph = store.planGraph(e).allNodes()
+        for i in range(graph.size()):
+            n = graph.apply(i)
+            if n.name() == "ArrowEvalPython" and "_minhash16_impl" in n.desc():
+                ms = n.metrics()
+                nodes.add(frozenset(ms.apply(j).accumulatorId() for j in range(ms.size())))
+    return nodes
+
+
+@pytest.fixture(scope="module")
+def sunk_three_shards(spark, tmp_path_factory):
+    """(sink dir, stats, MinHash kernel nodes) of one sink-mode call with
+    n_shards=3."""
+    out = tmp_path_factory.mktemp("three_shards") / "corpus"
+    before = _sql_executions(spark)
+    _, stats = prepare_training_corpus(
+        spark, SF_DIR, out_dir=str(out), n_shards=3, **PARAMS
+    )
+    kernel = _minhash_kernel_nodes(spark, _sql_executions(spark) - before)
+    return out, stats, kernel
+
+
+def test_prepare_runs_minhash_kernel_once(sunk_three_shards):
+    """The band frame is pinned, so both sides of the band self-join read
+    one evaluation of the signature kernel."""
+    _, _, kernel = sunk_three_shards
+    assert len(kernel) == 1
+
+
+def test_prepare_sink_writes_each_shard_from_bounded_tasks(spark, sunk_three_shards):
+    """The sink repartitions on (shard, salt): the files come from more
+    than one writer task, and each shard from at most ceil(width /
+    n_shards) of them."""
+    out, stats, _ = sunk_three_shards
+    per_shard = -(-D._join_width(spark) // 3)
+    files = {
+        d.name: [f.name for f in d.glob("part-*")] for d in out.glob("shard=*")
+    }
+    assert set(files) <= {"shard=0", "shard=1", "shard=2"}
+    assert all(0 < len(fs) <= per_shard for fs in files.values())
+    writers = {f.split("-")[1] for fs in files.values() for f in fs}
+    assert len(writers) > 1
+    assert spark.read.parquet(str(out)).count() == stats["after_near_dedup"]
+
+
 def test_prepare_sink_stats_add_no_spark_job(spark, tmp_path):
     """The observed stats ride the production execution: the sink-mode
     recipe runs no more jobs than it did with no stats at all."""
@@ -256,11 +317,14 @@ def test_prepare_with_boilerplate_stage(spark):
 def test_prepare_release_unpins_exactly_what_it_persisted(spark):
     df, _ = prepare_training_corpus(spark, SF_DIR, n_shards=4, **PARAMS)
     pinned = df._prepare_persisted
-    # the default recipe pins the doubly-consumed exact-dedup stage AND
-    # the near-dup pair graph (unpersisted, the iterative connected-
-    # components loop would recompute the whole LSH pipeline per round —
-    # measured 1.64x on the end-to-end recipe, BENCH/OPS.md round 5)
-    assert len(pinned) == 2
+    # the default recipe pins the doubly-consumed exact-dedup stage, the
+    # MinHash band frame (a self-join over a persisted input plans no
+    # ReusedExchange, so unpinned each side of the band join re-runs the
+    # signature kernel) AND the near-dup pair graph (unpersisted, the
+    # iterative connected-components loop would recompute the whole LSH
+    # pipeline per round — measured 1.64x on the end-to-end recipe,
+    # BENCH/OPS.md round 5)
+    assert len(pinned) == 3
     assert all(p.storageLevel.useMemory or p.storageLevel.useDisk for p in pinned)
     release_training_corpus(df)
     assert all(
