@@ -151,21 +151,6 @@ def quality_score_ppm_sql(text: str = "text") -> str:
     return f"(({num} * 1000000 + 320 * {n1}) // (640 * {n1}))"
 
 
-def quality_score_sql(text: str = "text") -> str:
-    w = words_sql(text)
-    sw = ", ".join(repr(s) for s in STOPWORDS["en"])
-    return (
-        f"ROUND("
-        f"0.3 * LEAST(len({w}) / 64.0, 1.0)"
-        f" + 0.2 * (len(list_filter({w}, x -> lower(x) IN ({sw})))"
-        f"          / GREATEST(len({w}), 1))"
-        f" + 0.2 * LEAST((list_sum(list_transform({w}, x -> length(x)))"
-        f"               / GREATEST(len({w}), 1)) / 8.0, 1.0)"
-        f" + 0.3 * (len(list_distinct({w})) / GREATEST(len({w}), 1))"
-        f", 6)"
-    )
-
-
 # ---------------------------------------------------------------------------
 # token counting
 # ---------------------------------------------------------------------------

@@ -8,10 +8,10 @@ Design for 10^12 rows:
   shuffle); banding turns near-dup detection into an equi-join on
   (band_id, band_key) — candidates only, verified by true Jaccard.
   Every all-pairs-within-a-key join here (LSH band buckets and SemDeDup
-  cells) runs through one exact tiling, ``_tiles``/``_pairs``: a key
-  over ``MAX_TILE_ROWS`` rows is split into bounded tasks that together
-  yield exactly its pairs, so an identical-band group no longer runs as
-  one task.
+  cells) runs through one exact tiling, ``_tiles`` then ``_tile_join``
+  (``_pairs`` composes the two): a key over ``MAX_TILE_ROWS`` rows is
+  split into bounded tasks that together yield exactly its pairs, so an
+  identical-band group no longer runs as one task.
 * SimHash: 16-bit signature via pure bit arithmetic; Hamming-adjacent
   buckets join.
 * n-gram Jaccard: shingles packed into int64 (t0<<20|t1<<10|t2), same
@@ -191,10 +191,16 @@ def _minhash_bands(
     )
 
 
-def _band_candidates(banded: DataFrame) -> DataFrame:
-    """Distinct (id_a, id_b), id_a < id_b, of the rows of an (__id,
-    band) frame that share a band: the tiled band self-join."""
-    return _pairs(banded, "band", MAX_TILE_ROWS).select("id_a", "id_b").distinct()
+def _band_tiles(banded: DataFrame) -> DataFrame:
+    """The tiling of an (__id, band) frame for the band self-join."""
+    return _tiles(banded, "band", MAX_TILE_ROWS)
+
+
+def _band_candidates(tiled: DataFrame) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of the rows of a
+    ``_band_tiles`` frame that share a band: the band self-join
+    (``_tile_join``)."""
+    return _tile_join(tiled, "band").select("id_a", "id_b").distinct()
 
 
 def minhash_lsh_candidates(
@@ -227,13 +233,13 @@ def minhash_lsh_candidates(
 
     The band frame is not cached here: the caller owns any cache of its
     input. Over a persisted ``df`` Spark plans the band self-join with
-    no ``ReusedExchange``, so each side evaluates the signature again;
-    a caller that reads a persisted frame composes ``_minhash_bands``,
-    its own persist, and ``_band_candidates`` (or ``_jaccard_verify``),
-    as ``prepare_training_corpus`` does."""
-    return _band_candidates(
-        _minhash_bands(df, id_col, tokens_col, num_hashes, bands, use_arrow)
-    )
+    no ``ReusedExchange``, so each side evaluates the signature and the
+    tiling again; a caller that reads a persisted frame composes
+    ``_minhash_bands``, ``_band_tiles``, its own persist of the tiled
+    frame, and ``_band_candidates``, as ``prepare_training_corpus``
+    does."""
+    banded = _minhash_bands(df, id_col, tokens_col, num_hashes, bands, use_arrow)
+    return _band_candidates(_band_tiles(banded))
 
 
 def _join_width(spark) -> int:
@@ -267,8 +273,8 @@ def _tiles(frame: DataFrame, key: str, bound: int | None) -> DataFrame:
     (an id and a key), so AQE would coalesce an automatic shuffle to a
     handful of tasks while the join OUTPUT is the pair explosion; a
     user-specified distribution is never coalesced, and the pair join
-    (or grouping) on (key, __ti, __tj) reads the second exchange without
-    one of its own."""
+    ``_tile_join`` (or a grouping) on (key, __ti, __tj) reads the second
+    exchange without one of its own."""
     if bound is None:
         return frame.withColumns({c: F.lit(0) for c in ("__sl", "__ti", "__tj")})
     width = _join_width(frame.sparkSession)
@@ -291,18 +297,16 @@ def _tiles(frame: DataFrame, key: str, bound: int | None) -> DataFrame:
     )
 
 
-def _pairs(
-    frame: DataFrame, key: str, bound: int | None, payload: tuple[str, ...] = ()
-) -> DataFrame:
-    """Every pair of rows of ``frame`` that share ``key``, as (key,
-    id_a, id_b, <p>_a, <p>_b for each payload column p), id_a < id_b:
-    one self-join of ``_tiles(frame, key, bound)`` on (key, __ti, __tj)
-    and b's slice = a's partner slice ``__ti + __tj - a.__sl`` (a's own
-    slice in a diagonal task, the other slice in an off-diagonal one),
-    so each task forms only the pairs it owns, even when a caller's
-    filter is pushed into the join. The pair set is that of the plain
-    equi-join on ``key``."""
-    tiled = _tiles(frame, key, bound)
+def _tile_join(tiled: DataFrame, key: str, payload: tuple[str, ...] = ()) -> DataFrame:
+    """Every pair of rows of a ``_tiles`` frame that share ``key``, as
+    (key, id_a, id_b, <p>_a, <p>_b for each payload column p), id_a <
+    id_b: one self-join on (key, __ti, __tj) and b's slice = a's
+    partner slice ``__ti + __tj - a.__sl`` (a's own slice in a diagonal
+    task, the other slice in an off-diagonal one), so each task forms
+    only the pairs it owns, even when a caller's filter is pushed into
+    the join. The pair set is that of the plain equi-join on ``key``.
+    A caller that pins the tiled frame runs the tiling once for both
+    sides of the join."""
     a, b = tiled.alias("a"), tiled.alias("b")
     on = [F.col(f"a.{c}") == F.col(f"b.{c}") for c in (key, "__ti", "__tj")] + [
         F.col("b.__sl") == F.col("a.__ti") + F.col("a.__tj") - F.col("a.__sl"),
@@ -314,6 +318,14 @@ def _pairs(
         F.col("b.__id").alias("id_b"),
         *[F.col(f"{s}.{p}").alias(f"{p}_{s}") for p in payload for s in ("a", "b")],
     )
+
+
+def _pairs(
+    frame: DataFrame, key: str, bound: int | None, payload: tuple[str, ...] = ()
+) -> DataFrame:
+    """``_tile_join(_tiles(frame, key, bound), key, payload)``: every
+    pair of rows of ``frame`` that share ``key``, tiled at ``bound``."""
+    return _tile_join(_tiles(frame, key, bound), key, payload)
 
 
 def jaccard(tokens_a: Column, tokens_b: Column) -> Column:
@@ -375,18 +387,29 @@ def minhash_near_duplicates(
     derived arithmetically (|A| + |B| - |I|, exact for sets; the same
     inclusion-exclusion the DuckDB twin ``jaccard_ppm_sql`` uses) and
     both the double jaccard and the exact-ppm output share the two
-    counts. One array op per pair instead of eight."""
-    banded = _minhash_bands(df, id_col, tokens_col, num_hashes, bands, use_arrow)
-    return _jaccard_verify(banded, df, id_col, tokens_col, threshold)
+    counts. One array op per pair instead of eight.
+
+    The steps are ``_token_sets`` (read by the band step and by both
+    verify joins), ``_minhash_bands``, ``_band_tiles``,
+    ``_band_candidates`` and ``_jaccard_verify``; nothing is cached
+    here, and ``prepare_training_corpus`` composes them with the token
+    sets and the tiled bands persisted."""
+    sets = _token_sets(df, id_col, F.col(tokens_col))
+    banded = _minhash_bands(sets, "__id", "__t", num_hashes, bands, use_arrow)
+    return _jaccard_verify(_band_candidates(_band_tiles(banded)), sets, threshold)
 
 
-def _jaccard_verify(
-    banded: DataFrame, df: DataFrame, id_col: str, tokens_col: str, threshold: float
-) -> DataFrame:
-    """The verify step of ``minhash_near_duplicates``: the band
-    candidates of ``banded`` (``_minhash_bands`` over ``df``) joined to
-    their token sets in ``df`` and kept at raw Jaccard >= threshold."""
-    cands = _band_candidates(banded)
+def _token_sets(df: DataFrame, id_col: str, tokens: Column) -> DataFrame:
+    """(__id, __t): each document's distinct token set. MinHash over
+    the set equals MinHash over the multiset, so one frame feeds the
+    band step and the verify joins."""
+    return df.select(F.col(id_col).alias("__id"), F.array_distinct(tokens).alias("__t"))
+
+
+def _jaccard_verify(cands: DataFrame, sets: DataFrame, threshold: float) -> DataFrame:
+    """The verify step of ``minhash_near_duplicates``: the candidate
+    pairs ``cands`` (id_a, id_b) joined to their token sets in ``sets``
+    (a ``_token_sets`` frame) and kept at raw Jaccard >= threshold."""
     # Pin the verify joins' width: AQE coalesces by the CANDIDATE set's
     # shuffle bytes (two ids/row — tiny), but each joined row then pays
     # an array_intersect over two full token sets, so the real work per
@@ -396,16 +419,16 @@ def _jaccard_verify(
     # each join survives AQE (user-specified distributions are never
     # coalesced) and costs only an exchange of data that had to shuffle
     # for the join anyway.
-    npart = _join_width(df.sparkSession)
-    toks = df.select(
-        F.col(id_col).alias("__id"),
-        F.array_distinct(F.col(tokens_col)).alias("__t"),
-    )
+    npart = _join_width(sets.sparkSession)
+
+    def side(i: str, t: str) -> DataFrame:
+        return sets.select(F.col("__id").alias(i), F.col("__t").alias(t))
+
     paired = (
         cands.repartition(npart, F.col("id_a"))
-        .join(toks.withColumnRenamed("__id", "id_a").withColumnRenamed("__t", "ta"), "id_a")
+        .join(side("id_a", "ta"), "id_a")
         .repartition(npart, F.col("id_b"))
-        .join(toks.withColumnRenamed("__id", "id_b").withColumnRenamed("__t", "tb"), "id_b")
+        .join(side("id_b", "tb"), "id_b")
     )
     inter = F.size(F.array_intersect(F.col("ta"), F.col("tb"))).cast("long")
     union = F.size("ta").cast("long") + F.size("tb").cast("long") - inter
@@ -663,9 +686,8 @@ def embedding_lsh_candidates(
             for t in range(tables)
         ]
     )
-    return _band_candidates(
-        emb.select(F.col(id_col).alias("__id"), F.explode(keys).alias("band"))
-    )
+    banded = emb.select(F.col(id_col).alias("__id"), F.explode(keys).alias("band"))
+    return _band_candidates(_band_tiles(banded))
 
 
 def embedding_lsh_near_duplicates(
@@ -726,8 +748,15 @@ def connected_components(
     docs (templated boilerplate, the adversarial shape for near-dup
     graphs) converges in ~10 rounds, not 1000 (capped by max_iters with
     a loud failure rather than a silent wrong answer; 30 rounds covers
-    diameter ~2^30). A graph of disjoint pairs is labelled on
-    initialisation, and its one round only confirms it.
+    diameter ~2^30).
+
+    Degree fixpoint: the initialising aggregation also counts each
+    node's neighbours, and an Observation on the same job reads the
+    largest count. When no node has two neighbours, every component is
+    one edge (or a self-loop) and its initial labels are final, so no
+    round runs and ``rounds`` stays empty; an empty pair list observes
+    no count and runs no round either. Any node of degree >= 2 runs the
+    loop below until a round changes nothing.
 
     Scale shape: one edge-to-label equi-join + one groupBy-min + one
     label-to-label equi-join per round over the PAIR set (orders of
@@ -752,13 +781,18 @@ def connected_components(
     # the logical plan to the materialized result, keeping per-round
     # planning cost constant (the standard iterative-algorithm discipline
     # on Spark).
+    degree = Observation()
     labels = (
         edges.groupBy(F.col("src").alias("node"))
-        .agg(F.min("dst").alias("__nmin"))
+        .agg(F.min("dst").alias("__nmin"), F.count(F.lit(1)).alias("__deg"))
+        .observe(degree, F.max("__deg").alias("max_deg"))
         .select("node", F.least("node", "__nmin").alias("component"))
         .localCheckpoint(eager=True)
     )
+    changed = (degree.get["max_deg"] or 0) > 1
     for _ in range(max_iters):
+        if not changed:
+            break
         neighbor_min = (
             edges.join(labels, edges["dst"] == labels["node"])
             .groupBy("src")
@@ -800,11 +834,10 @@ def connected_components(
             .localCheckpoint(eager=True)
         )
         labels = new_labels
+        changed = obs.get["changed"]
         if rounds is not None:
-            rounds.append(int(obs.get["changed"]))
-        if not obs.get["changed"]:
-            break
-    else:
+            rounds.append(changed)
+    if changed:
         raise RuntimeError(
             f"connected_components did not converge in {max_iters} rounds "
             "(component diameter exceeds the cap) — raise max_iters"

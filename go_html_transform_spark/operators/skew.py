@@ -61,15 +61,3 @@ def salted_join(
     out = f.join(d, [key, "__salt"], how)
     return out.drop("__salt")
 
-
-def skew_stats(df: DataFrame, key: str, top: int = 10) -> DataFrame:
-    """Per-key row counts + share of total — the bench harness records
-    peak-skew before/after salting (BASELINE.md)."""
-    total = df.count()
-    return (
-        df.groupBy(key)
-        .agg(F.count("*").alias("cnt"))
-        .withColumn("share", F.round(F.col("cnt") / F.lit(total), 6))
-        .orderBy(F.desc("cnt"))
-        .limit(top)
-    )

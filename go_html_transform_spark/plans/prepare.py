@@ -17,10 +17,12 @@ corpus again only through one anti-join.
 A frame read twice is persisted so no stage re-executes (the round-1
 lineage lesson, VERDICT.md item 5); stage stats are observed on that one
 execution. The default recipe's persist boundaries are the exact-dedup
-output (read by the band step, the Jaccard verify and the anti-join),
-the MinHash band frame (read by both sides of the band self-join, so the
-signature kernel runs once) and the verified pair graph (read by every
-connected-components round); each optional stage that reads its input
+output (read by the token sets and the anti-join), the distinct token
+sets (read by the MinHash band step and both sides of the Jaccard
+verify, so shingles are built once), the tiled band frame (read by both
+sides of the band self-join, so the signature kernel and the tiling
+window run once) and the verified pair graph (read by the
+connected-components jobs); each optional stage that reads its input
 twice pins that input too.
 
 Reference analogue: this is the engine's `Transformer.ApplyAll` — a whole
@@ -236,17 +238,23 @@ def prepare_training_corpus(
     # on skewed vocabularies (see ngram_near_duplicates: raw-token minhash
     # degenerates on a Zipf head, token-set Jaccard saturates)
     if near_dup_on == "shingles3":
-        sets = exact.select("doc_id", D.shingles3(F.col("tokens")).alias("tokens"))
+        toks = D.shingles3(F.col("tokens"))
     elif near_dup_on == "tokens":
-        sets = exact
+        toks = F.col("tokens")
     else:
         raise ValueError("near_dup_on must be 'tokens' or 'shingles3'")
-    # ngram_/minhash_near_duplicates, split at the band frame to pin it:
-    # a self-join over a persisted input plans no ReusedExchange, so each
-    # side of the band join would run the MinHash kernel again
-    banded = D._minhash_bands(sets, "doc_id").persist(StorageLevel.MEMORY_AND_DISK)
-    persisted.append(banded)
-    pairs = D._jaccard_verify(banded, sets, "doc_id", "tokens", jaccard_threshold)
+    # ngram_/minhash_near_duplicates, split to pin what two consumers
+    # read: a self-join over a persisted input plans no ReusedExchange,
+    # so each side would run its subtree again. The token sets feed the
+    # band step and both verify joins; the tiled band frame (MinHash
+    # kernel, tiling window and its two exchanges) feeds both sides of
+    # the band self-join.
+    sets = D._token_sets(exact, "doc_id", toks).persist(StorageLevel.MEMORY_AND_DISK)
+    persisted.append(sets)
+    tiled = D._band_tiles(D._minhash_bands(sets, "__id", "__t"))
+    tiled = tiled.persist(StorageLevel.MEMORY_AND_DISK)
+    persisted.append(tiled)
+    pairs = D._jaccard_verify(D._band_candidates(tiled), sets, jaccard_threshold)
     # ALWAYS persist the pair graph (tiny relative to the corpus):
     # connected_components iterates over it, and an unpersisted lineage
     # would recompute the whole LSH candidate+verify pipeline on EVERY

@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_html_transform_spark.operators import dedup as D
-from go_html_transform_spark.operators import transforms as X
 from go_html_transform_spark.operators.similarity import (
     cosine_sql as _cos,
     ivfpq_encode_cte_sql as _ivfpq_sql,
@@ -24,15 +23,6 @@ from go_html_transform_spark.operators.similarity import (
 from go_html_transform_spark.plans.pipeline import Transformer
 from go_html_transform_spark.plans.registry import _cte, register
 from go_html_transform_spark.sources import tables as S
-
-
-def _tokens_csv(df: DataFrame) -> DataFrame:
-    return df.select("event_id", F.concat_ws(",", F.col("tokens")).alias("tokens_csv"))
-
-
-# ---------------------------------------------------------------------------
-# §2.10 remaining mutation operators
-# ---------------------------------------------------------------------------
 
 
 # ---------------------------------------------------------------------------

@@ -21,7 +21,7 @@ Layout rationale at 10^12 rows / ~100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from go_html_transform_spark.sources.sinks import iceberg_available
 
@@ -95,10 +95,3 @@ def current_snapshot_id(spark: SparkSession, table: str) -> str | None:
         f"SELECT snapshot_id FROM {table}.snapshots ORDER BY committed_at DESC LIMIT 1"
     ).first()
     return str(row["snapshot_id"]) if row else None
-
-
-def append_sequences(df: DataFrame, table: str) -> None:
-    """Append through the v2 writer — Iceberg's hash distribution mode
-    lines rows up with the bucket(doc_id) spec, so the write itself is the
-    co-locating shuffle that later as-of joins reuse."""
-    df.writeTo(table).append()

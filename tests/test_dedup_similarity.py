@@ -468,30 +468,27 @@ def test_connected_components_vs_union_find(spark):
         r.node: r.component
         for r in D.connected_components(pairs).collect()
     }
+    assert got == _union_find_labels(edges)
+    # hash-min labels are specifically the MIN id of each component
+    assert got["c5"] == "c0" and got["t2"] == "t0" and got["s3"] == "s0"
 
+
+def _union_find_labels(edges):
+    """{node: min node of its component}, by a python union-find."""
     parent = {}
+
     def find(x):
         parent.setdefault(x, x)
         while parent[x] != x:
             parent[x] = parent[parent[x]]
             x = parent[x]
         return x
-    def union(a, b):
+
+    for a, b in edges:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    for a, b in edges:
-        union(a, b)
-    want = {n: find(n) for n in parent}
-    # canonicalize both sides to min-of-component
-    def canon(lbl):
-        groups = {}
-        for n, c in lbl.items():
-            groups.setdefault(c, set()).add(n)
-        return {frozenset(g) for g in groups.values()}
-    assert canon(got) == canon(want)
-    # hash-min labels are specifically the MIN id of each component
-    assert got["c5"] == "c0" and got["t2"] == "t0" and got["s3"] == "s0"
+    return {n: find(n) for n in parent}
 
 
 def test_connected_components_long_chain_logarithmic(spark):
@@ -517,7 +514,8 @@ def test_connected_components_long_chain_logarithmic(spark):
 
 def test_connected_components_pairs_converge_on_initial_labels(spark):
     """The initial labels are the first hash-min step, so a graph of
-    disjoint pairs is already labelled: its one round changes nothing."""
+    disjoint pairs (no node of degree 2) is already labelled: the degree
+    observed at initialisation proves it and no round runs."""
     pairs = spark.createDataFrame(
         [("p0", "p1"), ("q1", "q0")], "id_a string, id_b string"
     )
@@ -527,7 +525,31 @@ def test_connected_components_pairs_converge_on_initial_labels(spark):
         for r in D.connected_components(pairs, rounds=rounds).collect()
     }
     assert got == {"p0": "p0", "p1": "p0", "q0": "q0", "q1": "q0"}
-    assert rounds == [0]
+    assert rounds == []
+
+
+def test_connected_components_pairs_and_a_triangle_run_rounds(spark):
+    """One node of degree 2 sends the whole graph through the label
+    rounds: the disjoint pairs and the triangle still get the union-find
+    components, and the last round observes the fixed point."""
+    edges = [("p0", "p1"), ("q1", "q0"), ("t2", "t1"), ("t1", "t0"), ("t0", "t2")]
+    pairs = spark.createDataFrame(edges, "id_a string, id_b string")
+    rounds: list[int] = []
+    got = {
+        r.node: r.component
+        for r in D.connected_components(pairs, rounds=rounds).collect()
+    }
+    assert got == _union_find_labels(edges)
+    assert len(rounds) >= 1 and rounds[-1] == 0
+
+
+def test_connected_components_empty_pairs_run_no_round(spark):
+    pairs = spark.createDataFrame([], "id_a string, id_b string")
+    rounds: list[int] = []
+    got = D.connected_components(pairs, rounds=rounds)
+    assert got.columns == ["node", "component"]
+    assert got.collect() == []
+    assert rounds == []
 
 
 def test_connected_components_nonconvergence_raises(spark):

@@ -116,8 +116,8 @@ def _sql_executions(spark):
     return {seq.apply(i).executionId() for i in range(seq.size())}
 
 
-def _minhash_kernel_nodes(spark, executions):
-    """Distinct ``ArrowEvalPython`` nodes of the MinHash kernel in the
+def _plan_nodes(spark, executions, name, text):
+    """Distinct ``name`` nodes whose description holds ``text`` in the
     plans of ``executions``, a node told by its metric accumulators: a
     cached subtree shows in every execution that reads the cache, with
     the same accumulators."""
@@ -127,7 +127,7 @@ def _minhash_kernel_nodes(spark, executions):
         graph = store.planGraph(e).allNodes()
         for i in range(graph.size()):
             n = graph.apply(i)
-            if n.name() == "ArrowEvalPython" and "_minhash16_impl" in n.desc():
+            if n.name() == name and text in n.desc():
                 ms = n.metrics()
                 nodes.add(frozenset(ms.apply(j).accumulatorId() for j in range(ms.size())))
     return nodes
@@ -135,22 +135,33 @@ def _minhash_kernel_nodes(spark, executions):
 
 @pytest.fixture(scope="module")
 def sunk_three_shards(spark, tmp_path_factory):
-    """(sink dir, stats, MinHash kernel nodes) of one sink-mode call with
-    n_shards=3."""
+    """(sink dir, stats, plan nodes by kind) of one sink-mode call with
+    n_shards=3: the MinHash kernel's and the band tiling window's."""
     out = tmp_path_factory.mktemp("three_shards") / "corpus"
     before = _sql_executions(spark)
     _, stats = prepare_training_corpus(
         spark, SF_DIR, out_dir=str(out), n_shards=3, **PARAMS
     )
-    kernel = _minhash_kernel_nodes(spark, _sql_executions(spark) - before)
-    return out, stats, kernel
+    executions = _sql_executions(spark) - before
+    nodes = {
+        "kernel": _plan_nodes(spark, executions, "ArrowEvalPython", "_minhash16_impl"),
+        "band_window": _plan_nodes(spark, executions, "Window", "band"),
+    }
+    return out, stats, nodes
 
 
 def test_prepare_runs_minhash_kernel_once(sunk_three_shards):
-    """The band frame is pinned, so both sides of the band self-join read
-    one evaluation of the signature kernel."""
-    _, _, kernel = sunk_three_shards
-    assert len(kernel) == 1
+    """The tiled band frame is pinned, so both sides of the band
+    self-join read one evaluation of the signature kernel."""
+    _, _, nodes = sunk_three_shards
+    assert len(nodes["kernel"]) == 1
+
+
+def test_prepare_plans_the_band_tiling_once(sunk_three_shards):
+    """The pinned frame is the TILED band frame, so both sides of the
+    band self-join read one tiling window (and its two exchanges)."""
+    _, _, nodes = sunk_three_shards
+    assert len(nodes["band_window"]) == 1
 
 
 def test_prepare_sink_writes_each_shard_from_bounded_tasks(spark, sunk_three_shards):
@@ -318,13 +329,14 @@ def test_prepare_release_unpins_exactly_what_it_persisted(spark):
     df, _ = prepare_training_corpus(spark, SF_DIR, n_shards=4, **PARAMS)
     pinned = df._prepare_persisted
     # the default recipe pins the doubly-consumed exact-dedup stage, the
-    # MinHash band frame (a self-join over a persisted input plans no
+    # distinct token sets (read by the band step and both verify joins),
+    # the tiled band frame (a self-join over a persisted input plans no
     # ReusedExchange, so unpinned each side of the band join re-runs the
-    # signature kernel) AND the near-dup pair graph (unpersisted, the
-    # iterative connected-components loop would recompute the whole LSH
-    # pipeline per round — measured 1.64x on the end-to-end recipe,
-    # BENCH/OPS.md round 5)
-    assert len(pinned) == 3
+    # signature kernel and the tiling) AND the near-dup pair graph
+    # (unpersisted, the iterative connected-components loop would
+    # recompute the whole LSH pipeline per round — measured 1.64x on the
+    # end-to-end recipe, BENCH/OPS.md round 5)
+    assert len(pinned) == 4
     assert all(p.storageLevel.useMemory or p.storageLevel.useDisk for p in pinned)
     release_training_corpus(df)
     assert all(

@@ -4,6 +4,9 @@ sf0.01, compare row count + column names + order-insensitive values.
 
 Usage: python tools/crosscheck.py [--strict] [sf_dir] [query_name ...]
 
+Named queries run alone (a name not in the registry raises before any
+query runs), and the summary counts the queries that ran.
+
 ``--strict`` replicates the driver's dtype-sensitive value hash: both
 results are fetched THROUGH PANDAS (Spark ``toPandas()``, DuckDB
 ``.df()``) and cells compared by their string form WITHOUT float
@@ -16,9 +19,10 @@ strict locally before it can be trusted to hash-match in the driver.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 
@@ -76,6 +80,13 @@ def main():
 
     import __spark_entry__ as E
 
+    qs, os_ = E.queries(), E.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        raise ValueError(f"not in the query registry: {', '.join(unknown)}")
+    if only:
+        qs = {name: fn for name, fn in qs.items() if name in only}
+
     spark = get_spark(app_name="crosscheck", cores=8, shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
@@ -83,11 +94,8 @@ def main():
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
 
-    qs, os_ = E.queries(), E.oracle_sql()
     failures = []
     for name, fn in qs.items():
-        if only and name not in only:
-            continue
         try:
             sdf = fn(spark, sf_dir)
             s_cols = sorted(sdf.columns)
