@@ -17,7 +17,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import ArrayType, LongType
 
 
 def _token_entropy_impl(tokens: pd.Series) -> pd.Series:
@@ -75,14 +74,20 @@ def entropy_expr(tokens: Column | str = "tokens") -> Column:
     )
 
 
-def _minhash16_impl(tokens: pd.Series) -> pd.Series:
+def minhash_kernel(n_hashes: int):
+    """The Series -> Series MinHash kernel of width ``n_hashes`` behind
+    operators/dedup.minhash_signature: for hash i the affine
+    ``(t % P * a_i + b_i) % P`` of dedup._h over each row's distinct
+    tokens, NULL elements skipped, the sentinel P for an empty or NULL
+    row. ``%`` truncates, as in Java and DuckDB, so a negative id hashes
+    as it does in ``_h`` and ``h_sql``. One flattened (M x n_hashes)
+    numpy pass per Arrow batch."""
     from go_html_transform_spark.operators.dedup import (
         MINHASH_A,
         MINHASH_B,
         MINHASH_P,
     )
 
-    n_hashes = 16
     A = np.array(
         [(2 * i + 1) * MINHASH_A % MINHASH_P for i in range(n_hashes)],
         dtype=np.int64,
@@ -92,48 +97,45 @@ def _minhash16_impl(tokens: pd.Series) -> pd.Series:
     )
     sentinel = np.full(n_hashes, MINHASH_P, dtype=np.int64)
 
-    empty = np.empty(0, dtype=np.int64)
-
     def _uniq(a):
-        if a is None or not len(a):
-            return empty
-        try:
-            return np.unique(np.asarray(a, dtype=np.int64))
-        except (TypeError, ValueError):
-            # NULL-bearing row: skip nulls/NaNs to match the expression twin
-            # (array_min ignores NULL elements); np.asarray raises on None.
-            vals = [t for t in a if t is not None and t == t]
-            return np.unique(np.asarray(vals, dtype=np.int64)) if vals else empty
+        if a is None:
+            return np.empty(0, dtype=np.int64)
+        a = np.asarray(a)
+        if a.dtype.kind == "f":
+            # a batch holding a NULL element arrives as float64 with NaN,
+            # exact only below 2^53: drop the NaNs, refuse what is not
+            a = a[~np.isnan(a)]
+            if np.any(np.abs(a) >= 2.0**53):
+                raise ValueError(
+                    "minhash: a batch with a NULL element holds an id of "
+                    "magnitude >= 2^53, which its float64 Arrow batch rounds"
+                )
+        return np.unique(a.astype(np.int64, copy=False))
 
-    uniqs = [_uniq(a) for a in tokens]
-    lens = np.fromiter((u.size for u in uniqs), dtype=np.int64, count=len(uniqs))
-    out = [None] * len(uniqs)
-    nonempty = np.flatnonzero(lens)
-    if nonempty.size:
-        flat = np.concatenate([uniqs[i] for i in nonempty])
-        # (M, 16): one pass over all tokens of the batch for all 16
-        # hashes; reduce mod P BEFORE the multiply — same residues
-        # ((v % P) * a == v * a mod P) and overflow-safe for full-range
-        # int64 inputs (2^21-base packed shingles), where the raw
-        # multiply would silently wrap in numpy
-        H = ((flat % MINHASH_P)[:, None] * A + B) % MINHASH_P
-        starts = np.concatenate(([0], np.cumsum(lens[nonempty])[:-1]))
-        mins = np.minimum.reduceat(H, starts, axis=0)
-        for j, i in enumerate(nonempty):
-            out[i] = mins[j]
-    for i in np.flatnonzero(lens == 0):
-        out[i] = sentinel
-    return pd.Series(out)
+    def _minhash_impl(tokens):
+        uniqs = [_uniq(a) for a in tokens]
+        lens = np.fromiter((u.size for u in uniqs), dtype=np.int64, count=len(uniqs))
+        out = [sentinel] * len(uniqs)
+        nonempty = np.flatnonzero(lens)
+        if nonempty.size:
+            flat = np.concatenate([uniqs[i] for i in nonempty])
+            # reduce mod P BEFORE the multiply — same residues and
+            # overflow-safe for full-range int64 inputs (2^21-base packed
+            # shingles), where the raw multiply would wrap
+            H = np.fmod(np.fmod(flat, MINHASH_P)[:, None] * A + B, MINHASH_P)
+            starts = np.concatenate(([0], np.cumsum(lens[nonempty])[:-1]))
+            for j, m in zip(nonempty, np.minimum.reduceat(H, starts, axis=0)):
+                out[j] = m
+        return pd.Series(out)
+
+    return _minhash_impl
 
 
 def minhash16_arrow(col) -> Column:
-    """Vectorized MinHash-16 twin of operators/dedup.minhash_signature
-    (identical affine hashes over the distinct token set, sentinel P for
-    empty rows). The expression form walks the array 16 times through
-    interpreted higher-order functions; this kernel does ONE flattened
-    (M x 16) numpy pass per Arrow batch — the hot-path choice for the
-    10^12-row dedup sweep."""
-    return pandas_udf(_minhash16_impl, ArrayType(LongType()))(col)
+    """``dedup.minhash_signature(col, 16)``: MinHash-16."""
+    from go_html_transform_spark.operators.dedup import minhash_signature
+
+    return minhash_signature(col, 16)
 
 
 # ---------------------------------------------------------------------------

@@ -4,14 +4,15 @@ exact, MinHash+LSH, SimHash, n-gram Jaccard.
 Design for 10^12 rows:
 
 * exact: hash-groupBy on a canonical key — one shuffle, map-side partial.
-* MinHash+LSH: signatures are array-native Column arithmetic (no UDF, no
+* MinHash+LSH: signatures are one vectorized Arrow pass per batch (no
   shuffle); banding turns near-dup detection into an equi-join on
   (band_id, band_key) — candidates only, verified by true Jaccard.
-  Every all-pairs-within-a-key join here (LSH band buckets and SemDeDup
-  cells) runs through one exact tiling, ``_tiles`` then ``_tile_join``
-  (``_pairs`` composes the two): a key over ``MAX_TILE_ROWS`` rows is
-  split into bounded tasks that together yield exactly its pairs, so an
-  identical-band group no longer runs as one task.
+  Every all-pairs-within-a-key step here (LSH band buckets and SemDeDup
+  cells) runs through one exact tiling, ``_tiles`` (the band joins then
+  ``_tile_join``; ``_pairs`` composes the two): a key over
+  ``MAX_TILE_ROWS`` rows is split into bounded tasks that together yield
+  exactly its pairs, so an identical-band group no longer runs as one
+  task.
 * SimHash: 16-bit signature via pure bit arithmetic; Hamming-adjacent
   buckets join.
 * n-gram Jaccard: shingles packed into int64 (t0<<20|t1<<10|t2), same
@@ -25,6 +26,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import ArrayType, LongType
+
+from go_html_transform_spark.functions.kernels import minhash_kernel
 
 MINHASH_P = 524287  # 2^19 - 1, prime
 MINHASH_A = 40503
@@ -127,20 +132,13 @@ def exact_dedup(df: DataFrame, id_col: str, key: Column) -> DataFrame:
 
 
 def minhash_signature(tokens: Column, num_hashes: int = 16) -> Column:
-    """array<bigint> of per-hash minima over the DISTINCT token set.
-    Empty sets get sentinel P (never collides with real minima)."""
-    uniq = F.array_distinct(tokens)
-
-    def hasher(i: int):
-        # closure factory — a `_i=i` default would be miscounted by
-        # PySpark's lambda-arity inspection as the (element, index) form
-        return lambda t: _h(i, t)
-
-    sig = [
-        F.coalesce(F.array_min(F.transform(uniq, hasher(i))), F.lit(MINHASH_P))
-        for i in range(num_hashes)
-    ]
-    return F.array(*sig)
+    """array<bigint> of per-hash minima over the DISTINCT token set, NULL
+    elements skipped (``_h`` for hash i); an empty or NULL set gets the
+    sentinel P in every slot (it never collides with a real minimum).
+    One vectorized Arrow pass per batch for every width
+    (functions/kernels.py); ``minhash_signature_sql`` is its DuckDB
+    twin."""
+    return pandas_udf(minhash_kernel(num_hashes), ArrayType(LongType()))(tokens)
 
 
 def minhash_signature_sql(tokens: str = "tokens", num_hashes: int = 16) -> str:
@@ -167,27 +165,13 @@ def _minhash_bands(
     tokens_col: str = "tokens",
     num_hashes: int = 16,
     bands: int = 4,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """The band step of MinHash-LSH: (__id, band), one row per document
-    and band, the signature evaluated on the way. See
-    ``minhash_lsh_candidates`` for ``use_arrow``."""
-    rows = num_hashes // bands
-    if use_arrow is None:
-        use_arrow = num_hashes == 16
-    if use_arrow:
-        if num_hashes != 16:
-            raise ValueError(
-                f"the Arrow kernel is MinHash-16 only, got num_hashes={num_hashes}"
-            )
-        from go_html_transform_spark.functions.kernels import minhash16_arrow
-
-        sig = minhash16_arrow(F.col(tokens_col))
-    else:
-        sig = minhash_signature(F.col(tokens_col), num_hashes)
+    and band, the signature evaluated on the way."""
+    sig = minhash_signature(F.col(tokens_col), num_hashes)
     return df.select(
         F.col(id_col).alias("__id"),
-        F.explode(lsh_bands(sig, bands, rows)).alias("band"),
+        F.explode(lsh_bands(sig, bands, num_hashes // bands)).alias("band"),
     )
 
 
@@ -209,7 +193,6 @@ def minhash_lsh_candidates(
     tokens_col: str = "tokens",
     num_hashes: int = 16,
     bands: int = 4,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs (id_a < id_b) sharing >=1 LSH band.
     One explode + one tiled equi-join self-join on the band key.
@@ -222,15 +205,6 @@ def minhash_lsh_candidates(
     buckets discriminative in the first place (BENCH/OPS.md, round-5
     prepare table).
 
-    ``use_arrow`` picks the signature tier: the Arrow kernel
-    (functions/kernels.minhash16_arrow, element-wise parity-pinned to
-    the expression form) or the interpreted-HOF expression. Default
-    ``None`` = auto: the kernel whenever num_hashes == 16 — the
-    signature pass dominates candidate generation at realistic
-    vocabulary sizes (57x measured at 32k-vocab, BENCH/OPS.md zipf
-    rows), and both tiers return identical signatures. Pass False to
-    force the expression form (the DuckDB-oracle anchor shape).
-
     The band frame is not cached here: the caller owns any cache of its
     input. Over a persisted ``df`` Spark plans the band self-join with
     no ``ReusedExchange``, so each side evaluates the signature and the
@@ -238,7 +212,7 @@ def minhash_lsh_candidates(
     ``_minhash_bands``, ``_band_tiles``, its own persist of the tiled
     frame, and ``_band_candidates``, as ``prepare_training_corpus``
     does."""
-    banded = _minhash_bands(df, id_col, tokens_col, num_hashes, bands, use_arrow)
+    banded = _minhash_bands(df, id_col, tokens_col, num_hashes, bands)
     return _band_candidates(_band_tiles(banded))
 
 
@@ -374,7 +348,6 @@ def minhash_near_duplicates(
     threshold: float = 0.8,
     num_hashes: int = 16,
     bands: int = 4,
-    use_arrow: bool | None = None,
 ) -> DataFrame:
     """LSH candidates verified by true Jaccard >= threshold. Returns
     (id_a, id_b, jaccard). The verify join is two broadcast-able semi
@@ -395,7 +368,7 @@ def minhash_near_duplicates(
     here, and ``prepare_training_corpus`` composes them with the token
     sets and the tiled bands persisted."""
     sets = _token_sets(df, id_col, F.col(tokens_col))
-    banded = _minhash_bands(sets, "__id", "__t", num_hashes, bands, use_arrow)
+    banded = _minhash_bands(sets, "__id", "__t", num_hashes, bands)
     return _jaccard_verify(_band_candidates(_band_tiles(banded)), sets, threshold)
 
 
@@ -465,7 +438,7 @@ def simhash16(tokens: Column) -> Column:
     NULL elements are skipped (DuckDB's list_sum null-skips, so a NULL
     contributing to Spark's fold would poison the balance to NULL and
     zero every bit — found by tests/test_oracle_fuzz.py; same contract
-    as minhash_signature and the _minhash16_impl Arrow kernel)."""
+    as minhash_signature)."""
     toks = F.filter(tokens, lambda t: t.isNotNull())
     h = lambda t: (t.cast("long") * SIMHASH_A + SIMHASH_B) % SIMHASH_P  # noqa: E731
 
@@ -620,16 +593,16 @@ def ngram_near_duplicates(
 # ---------------------------------------------------------------------------
 
 
-def cosine(a: Column, b: Column, dim: int | None = None) -> Column:
-    """Cosine similarity (interpreted-HOF form — zip_with/aggregate are
-    CodegenFallback, so this costs ~3*dim interpreted ops per call).
-    ``dim`` is accepted for signature stability and ignored: unrolling
-    the fold into 3*dim scalar terms was tried and REJECTED — at dim=64
-    the generated Java exceeds the compiler limits, codegen fails, and
-    the giant tree interprets SLOWER than the HOF form. The vectorized
-    scale path for cosine-heavy stages is the Arrow kernel tier instead
-    (ivf_assign(use_arrow=True), semantic_dup_pairs(use_arrow=True):
-    batch matmul per Arrow batch/cluster)."""
+def cosine(a: Column, b: Column) -> Column:
+    """Cosine similarity as a Column expression (zip_with/aggregate
+    folds, interpreted: ~3*dim ops per call). It scores pairs whose
+    vectors already sit in the row after a join or a broadcast: the
+    rescores of ``cosine_topk`` and ``lsh_topk_batch`` and the verify
+    of ``embedding_near_duplicates`` and
+    ``embedding_lsh_near_duplicates``. The cosine-heavy passes (the IVF
+    assignment and the SemDeDup pairs) run the vectorized kernel of
+    operators/similarity.py instead, whose scores are this fold's bit
+    for bit (``similarity.fold_cosine``)."""
     dot = F.aggregate(
         F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v
     )
@@ -643,7 +616,6 @@ def embedding_near_duplicates(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    dim: int | None = None,
 ) -> DataFrame:
     """Brute-force within-corpus cosine near-dup pairs (the O(n^2) baseline;
     the LSH-bucketed scale path lives in operators/similarity.py)."""
@@ -697,7 +669,6 @@ def embedding_lsh_near_duplicates(
     threshold: float = 0.95,
     n_planes: int = 6,
     tables: int = 2,
-    dim: int | None = None,
 ) -> DataFrame:
     """LSH-bucketed embedding near-dup pairs — the scale path twin of
     ``embedding_near_duplicates``: same verify predicate (true cosine >=
@@ -888,7 +859,6 @@ def semantic_dup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = False,
     max_cell: int | None = MAX_TILE_ROWS,
 ) -> DataFrame:
     """SemDeDup candidate stage (Abbas et al. 2023, arXiv:2303.09540):
@@ -900,35 +870,27 @@ def semantic_dup_pairs(
     only).
 
     Scale shape: the assignment is the zero-shuffle ``ivf_assign`` map
-    pass; the pairs come from the cell-keyed pair step (``_tiles``).
-    Per-cluster work is quadratic in cluster size, so k is the first
-    knob: pick k ~ n/target_cluster_size (the paper runs k=50k over 5B
-    docs) and the Lloyd-trained codebook
+    pass; the pairs come from one ``applyInPandas`` task per tile of a
+    cell (``_tiles``), which ships each vector once per task and scores
+    the task's block with the cosine kernel of operators/similarity.py:
+    a blocked matmul keeps the pairs within a slack of the threshold,
+    and the exact fold rescoring them decides, so the pair set and the
+    cosines are those of ``cosine()`` and of the DuckDB twin. A pair
+    join would instead materialize sum_c |c|^2 rows carrying two full
+    vectors each. Per-cluster work is quadratic in cluster size, so k
+    is the first knob: pick k ~ n/target_cluster_size (the paper runs
+    k=50k over 5B docs) and the Lloyd-trained codebook
     (``similarity.ivf_trained_centroids``) keeps clusters balanced.
-    Seeded centroids stay the DuckDB-oracle anchor (assignment
-    reproducible cross-engine).
 
-    ``use_arrow=True`` is the SCALE path for the pair stage: one
-    ``applyInPandas`` task per cell computing the pair cosines as a
-    blocked numpy matmul instead of the self-join — the join
-    materializes sum_c |c|^2 candidate ROWS each carrying two full
-    vectors (the measured bottleneck: ~1 KB/candidate at dim=64, row
-    materialization dominating, not arithmetic), while the kernel ships
-    each vector ONCE per cell and the c x c cosine block is BLAS.
-    Same pair set and same rounded cos up to float summation order
-    (matmul vs sequential fold — parity-pinned with tolerance in
-    tests); the expression form stays the default because the DuckDB
-    oracle replays ITS fold order bit-exactly.
-
-    HOT-CELL GUARD (Arrow tier; ``max_cell``, default ``MAX_TILE_ROWS``
-    = 8192): a skewed codebook can leave one giant cluster — a Zipf
-    hashed-BoW corpus measurably concentrates in a hot-token direction
-    — and one cell's pairs in one task serialize the job at 10^12 rows
-    no matter how fast the BLAS is. Cells over ``max_cell`` rows are
-    tiled EXACTLY (``_tiles``): cut into ceil(c/max_cell) slices of at
-    most ``max_cell`` rows, every unordered slice pair its own task.
-    Each within-cell pair lands in exactly one tile, so the pair set is
-    the unguarded one; per-task input is at most 2*max_cell rows and the
+    HOT-CELL GUARD (``max_cell``, default ``MAX_TILE_ROWS`` = 8192): a
+    skewed codebook can leave one giant cluster — a Zipf hashed-BoW
+    corpus measurably concentrates in a hot-token direction — and one
+    cell's pairs in one task serialize the job at 10^12 rows no matter
+    how fast the BLAS is. Cells over ``max_cell`` rows are tiled EXACTLY
+    (``_tiles``): cut into ceil(c/max_cell) slices of at most
+    ``max_cell`` rows, every unordered slice pair its own task. Each
+    within-cell pair lands in exactly one tile, so the pair set is the
+    unguarded one; per-task input is at most 2*max_cell rows and the
     irreducible c^2 block (a direction of near-identical vectors has
     quadratic pair OUTPUT) spreads over ~(c/max_cell)^2 parallel tasks
     instead of one. Cells at or under ``max_cell`` (every cell of the
@@ -937,123 +899,60 @@ def semantic_dup_pairs(
     runs no Spark job, and the cell sizes come from a window on the
     cell-keyed exchange itself, so the assignment runs once per
     execution. ``max_cell=None`` drops the window and its exchanges and
-    leaves every cell one task. The expression/join form runs the same
-    pair step unbounded: its cell-keyed shuffle is AQE's, broadcast when
-    small and skew-splittable like any other skewed join."""
+    leaves every cell one task."""
     from go_html_transform_spark.operators.similarity import ivf_assign
 
-    assigned = ivf_assign(
-        emb, centroids, id_col, vec_col, out_col="cid", use_arrow=use_arrow
-    ).select(
+    assigned = ivf_assign(emb, centroids, id_col, vec_col, out_col="cid").select(
         "cid", F.col(id_col).alias("__id"), F.col(vec_col).cast("array<double>").alias("__v")
     )
-    if use_arrow:
-        return _semantic_dup_pairs_arrow(_tiles(assigned, "cid", max_cell), threshold)
-    return (
-        _pairs(assigned, "cid", None, ("__v",))
-        # guarded: Spark pushes the threshold filter into the join
-        # condition ahead of id_a < id_b, where an unguarded cosine runs
-        # on all c^2 ordered row pairs of a cell, not the c(c-1)/2 kept
-        .withColumn(
-            "__c",
-            F.when(F.col("id_a") < F.col("id_b"), cosine(F.col("__v_a"), F.col("__v_b"))),
-        )
-        .filter(F.col("__c") >= threshold)
-        .select("cid", "id_a", "id_b", F.round("__c", 6).alias("cos"))
-    )
+    pairs = _semantic_pair_tasks(_tiles(assigned, "cid", max_cell), threshold)
+    return pairs.withColumn("cos", F.round("cos", 6))
 
 
-def _semantic_dup_pairs_arrow(tiled: DataFrame, threshold: float) -> DataFrame:
-    """Per-task pair cosines as a blocked numpy matmul. One Arrow
-    batch per task ``(cid, __ti, __tj)`` (vectors ship once per task,
-    not once per pair); the similarity block between the task's slices
-    ``__ti`` and ``__tj`` is computed in row-blocks so peak memory stays
-    ~block x c doubles. A diagonal task (i == j) pairs its one slice
-    with itself and keeps the upper triangle; an off-diagonal task
-    (i < j) keeps the whole cross-block — the within-slice pairs belong
-    to the diagonal tasks. Zero-norm vectors score 0.0 against
-    everything (the ``cosine`` guard) and so never pass a positive
-    threshold.
+def _semantic_pair_tasks(tiled: DataFrame, threshold: float) -> DataFrame:
+    """(cid, id_a, id_b, raw cos) of one ``applyInPandas`` task per
+    ``(cid, __ti, __tj)``: ``similarity._cosine_pairs`` between the
+    task's slices ``__ti`` and ``__tj``. A diagonal task (i == j) pairs
+    its one slice with itself and keeps the upper triangle; an
+    off-diagonal task (i < j) keeps the whole cross-block — the
+    within-slice pairs belong to the diagonal tasks.
 
-    Pair orientation parity: the join form orders ids with Spark's
-    binary UTF8 comparison (``id_a < id_b``), so string ids here compare
-    as their UTF-8 encoded BYTES — by construction the same ordering
-    (UTF-8 is code-point order-preserving, so this also coincides with
-    Python's default str comparison for well-formed strings; encoding
-    makes the parity explicit instead of comparator-dependent, e.g.
+    Pair orientation: ``id_a < id_b`` as Spark compares the ids, so
+    string ids compare as their UTF-8 encoded BYTES (Spark's binary
+    UTF8 order; UTF-8 is code-point order-preserving, so this also
+    coincides with Python's str order for well-formed strings, but
     Java's UTF-16 code-unit order would NOT match); equal ids never
-    pair. NULL ids are dropped up front: the join form's ``id_a < id_b``
-    predicate is NULL for them, so they never appear in a pair there
-    either."""
+    pair. NULL ids are dropped up front: ``id_a < id_b`` is NULL for
+    them."""
     import numpy as np
     import pandas as pd
 
-    id_type = tiled.schema["__id"].dataType.simpleString()
-    out_schema = (
-        f"cid int, id_a {id_type}, id_b {id_type}, cos double"
-    )
-    thr = float(threshold)
-    BLOCK = 1024
+    from go_html_transform_spark.operators.similarity import _block, _cosine_pairs
 
-    def _norm(V: "np.ndarray") -> "np.ndarray":
-        norms = np.linalg.norm(V, axis=1)
-        safe = np.where(norms == 0.0, 1.0, norms)
-        Vn = V / safe[:, None]
-        Vn[norms == 0.0] = 0.0
-        return Vn
+    id_type = tiled.schema["__id"].dataType.simpleString()
+    out_schema = f"cid int, id_a {id_type}, id_b {id_type}, cos double"
+    thr = float(threshold)
 
     def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
+        cid, ti, tj = (int(pdf[c].iloc[0]) for c in ("cid", "__ti", "__tj"))
         pdf = pdf[pdf["__id"].notna()]
-        empty = pd.DataFrame(
-            {"cid": [], "id_a": [], "id_b": [], "cos": []}
-        ).astype({"cid": "int32", "cos": "float64"})
-        if pdf.empty:
-            return empty
-        cid = int(pdf["cid"].iloc[0])
-        ti, tj = int(pdf["__ti"].iloc[0]), int(pdf["__tj"].iloc[0])
-        A = pdf[pdf["__sl"] == ti]
-        B = pdf[pdf["__sl"] == tj]
-        if not len(A) or not len(B):
-            return empty
-        Va = _norm(np.vstack(A["__v"].to_numpy()).astype("float64"))
-        Vb = Va if ti == tj else _norm(np.vstack(B["__v"].to_numpy()).astype("float64"))
-        ids_a = A["__id"].to_numpy()
-        ids_b = B["__id"].to_numpy()
-        out_a, out_b, out_c = [], [], []
-        for lo in range(0, len(A), BLOCK):
-            hi = min(lo + BLOCK, len(A))
-            C = Va[lo:hi] @ Vb.T  # (hi-lo) x |B|
-            hit = C >= thr
-            if ti == tj:  # A is B: each unordered pair once
-                hit &= np.arange(lo, hi)[:, None] < np.arange(len(B))
-            ri, ci = np.nonzero(hit)
-            if not len(ri):
-                continue
-            a = ids_a[lo + ri]
-            b = ids_b[ci]
-            # orient each pair by the join form's id order
-            if a.dtype == object:
-                enc_a = np.array([x.encode("utf-8") for x in a], dtype=object)
-                enc_b = np.array([x.encode("utf-8") for x in b], dtype=object)
-                swap = enc_a > enc_b
-                keep = enc_a != enc_b
-            else:
-                swap = a > b
-                keep = a != b
-            lo_id = np.where(swap, b, a)[keep]
-            hi_id = np.where(swap, a, b)[keep]
-            if len(lo_id):
-                out_a.append(lo_id)
-                out_b.append(hi_id)
-                out_c.append(C[ri, ci][keep])
-        if not out_a:
-            return empty
+        A, B = pdf[pdf["__sl"] == ti], pdf[pdf["__sl"] == tj]
+        d = max((len(v) for v in pdf["__v"] if v is not None), default=0)
+        Va = _block(A["__v"], d)
+        i, j, cos = _cosine_pairs(Va, Va if ti == tj else _block(B["__v"], d), thr, ti == tj)
+        a, b = A["__id"].to_numpy()[i], B["__id"].to_numpy()[j]
+        if a.dtype == object:
+            ka = np.array([x.encode("utf-8") for x in a], dtype=object)
+            kb = np.array([x.encode("utf-8") for x in b], dtype=object)
+        else:
+            ka, kb = a, b
+        swap, keep = ka > kb, ka != kb
         return pd.DataFrame(
             {
-                "cid": np.int32(cid),
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-                "cos": np.round(np.concatenate(out_c), 6),
+                "cid": np.full(int(keep.sum()), cid, np.int32),
+                "id_a": np.where(swap, b, a)[keep],
+                "id_b": np.where(swap, a, b)[keep],
+                "cos": cos[keep],
             }
         )
 
@@ -1066,7 +965,6 @@ def semantic_dedup_keep(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow: bool = False,
     max_cell: int | None = MAX_TILE_ROWS,
 ) -> DataFrame:
     """SemDeDup keep-set: drop a vector iff a SMALLER-ID vector in its
@@ -1075,33 +973,27 @@ def semantic_dedup_keep(
     ``semantic_dup_pairs``'s id_b side; the paper's keep-farthest-from-
     centroid rule is one ORDER BY swap on the same machinery). Returns
     the surviving rows with their cluster id and cosine-to-own-centroid
-    (the paper's ranking signal, rounded output-only).
+    (the paper's ranking signal, rounded output-only), both read off the
+    one assignment pass.
 
     The corpus frame is scanned once; the only exchanges are the
-    cluster-keyed pair join (bounded as in ``semantic_dup_pairs``) and a
+    cell-keyed pair tasks (bounded as in ``semantic_dup_pairs``) and a
     broadcast-sized anti-join on the loser id set."""
-    from go_html_transform_spark.operators.similarity import _centroid_of, ivf_assign
+    from go_html_transform_spark.operators.similarity import _assign
 
     losers = (
-        semantic_dup_pairs(
-            emb, centroids, threshold, id_col, vec_col, use_arrow,
-            max_cell=max_cell,
-        )
+        semantic_dup_pairs(emb, centroids, threshold, id_col, vec_col, max_cell)
         .select(F.col("id_b").alias("__loser"))
         .distinct()
     )
-    assigned = ivf_assign(emb, centroids, id_col, vec_col, out_col="cid")
+    assigned = emb.withColumn(
+        "__a", _assign(F.col(vec_col).cast("array<double>"), centroids)
+    )
     kept = assigned.join(
         losers, assigned[id_col] == losers["__loser"], "left_anti"
     )
     return kept.select(
         F.col(id_col),
-        "cid",
-        F.round(
-            cosine(
-                F.col(vec_col).cast("array<double>"),
-                _centroid_of(centroids, F.col("cid")),
-            ),
-            6,
-        ).alias("cos_centroid"),
+        F.col("__a.cid").alias("cid"),
+        F.round("__a.cos", 6).alias("cos_centroid"),
     )

@@ -22,15 +22,18 @@
 
 Each shared primitive is written once, here:
 
-* ``_low_id_rows``: the seed collect of the seeded codebooks.
-* ``_nearest_centroid`` (cosine struct-max) and ``_nearest_code`` (L2
-  struct-min): the per-row nearest codeword.
+* ``fold_cosine``: ``dedup.cosine`` in numpy, bit-equal to it. The one
+  cosine kernel is ``_cosine_argmax`` (the per-row nearest centroid of
+  ``ivf_assign``, ``ivf_objective`` and SemDeDup) and ``_cosine_pairs``
+  (the SemDeDup pair block): a matmul prefilter, then ``fold_cosine`` on
+  the survivors, so every score it returns is ``cosine()``'s own.
+* ``_nearest_code`` (L2 struct-min): the per-row nearest PQ code.
 * ``_probe_ids``: the driver-side centroid ranking of a query.
 * ``_lsh_probes``: the Python mirror of ``lsh_bucket`` for a query.
 * ``_adc_tables`` and ``_adc_rerank``: the driver ADC tables, and the
   ADC shortlist followed by the exact rescore.
-* ``_centroid_of``: the id-keyed centroid lookup (``dedup`` uses it too).
-  ``_with_residual`` builds the IVF-PQ residual on it.
+* ``_centroid_of``: the id-keyed centroid lookup. ``_with_residual``
+  builds the IVF-PQ residual on it.
 * ``_lloyd_means``: the fixed-point Lloyd aggregation of IVF and PQ.
 * ``cosine_sql`` and ``seeded_assign_cte_sql``: the DuckDB cosine
   template and seeded assignment CTE. Every oracle of
@@ -42,6 +45,8 @@ oracle reproduces the exact same buckets, codes and assignments.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -245,20 +250,6 @@ def _lit_vec(v: list[float]) -> Column:
     return F.array(*[F.lit(float(x)) for x in v])
 
 
-def _nearest_centroid(v: Column, centroids: list[tuple[int, list[float]]]) -> Column:
-    """Per-row argmax-cosine over a literal codebook: the array_max of k
-    (c = cosine, negid = -centroid id) structs, so ties go to the lower
-    id. ``ivf_assign`` reads ``-negid``, ``ivf_objective`` reads ``c``."""
-    return F.array_max(
-        F.array(
-            *[
-                F.struct(cosine(v, _lit_vec(cv)).alias("c"), F.lit(-cid).alias("negid"))
-                for cid, cv in centroids
-            ]
-        )
-    )
-
-
 def _probe_ids(
     query_vec: list[float], centroids: list[tuple[int, list[float]]], nprobe: int
 ) -> list[int]:
@@ -285,71 +276,171 @@ def _centroid_of(centroids: list[tuple[int, list[float]]], cid: Column) -> Colum
     )[cid]
 
 
+# ---------------------------------------------------------------------------
+# The cosine kernel: a matmul prefilter, then cosine()'s own fold
+# ---------------------------------------------------------------------------
+
+# pairs refolded per numpy call: bounds the gathered (pairs, dim) blocks
+_FOLD_CHUNK = 1 << 16
+# rows of A per prefilter matmul block: a block x |B| score matrix
+_PAIR_BLOCK = 1024
+
+
+def _fold(X: np.ndarray) -> np.ndarray:
+    """Row sums of X added left to right from 0.0, as ``cosine()``'s
+    ``aggregate`` adds them: np.cumsum is sequential, and ``+ 0.0`` maps
+    the -0.0 of a fold of -0.0 terms onto the aggregate's 0.0."""
+    if not X.shape[1]:
+        return np.zeros(len(X))
+    return np.cumsum(X, axis=1)[:, -1] + 0.0
+
+
+def fold_cosine(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise ``cosine(A[r], B[r])`` of two (n, d) float64 blocks, bit-
+    equal to ``dedup.cosine``: the dot product and both squared norms
+    folded in sequence, then dot / (na * nb); a zero or NaN norm (a NULL
+    element arrives as NaN) gives 0.0."""
+    na, nb = np.sqrt(_fold(A * A)), np.sqrt(_fold(B * B))
+    return np.divide(
+        _fold(A * B), na * nb, out=np.zeros(len(A)), where=(na > 0) & (nb > 0)
+    )
+
+
+def _cosine_at(A: np.ndarray, B: np.ndarray, i: np.ndarray, j: np.ndarray) -> np.ndarray:
+    """``fold_cosine(A[i], B[j])`` in chunks of ``_FOLD_CHUNK`` pairs."""
+    return np.concatenate(
+        [np.zeros(0)]
+        + [
+            fold_cosine(A[i[s : s + _FOLD_CHUNK]], B[j[s : s + _FOLD_CHUNK]])
+            for s in range(0, len(i), _FOLD_CHUNK)
+        ]
+    )
+
+
+def _unit(V: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(unit rows, refold mask) of an (n, d) block for the prefilter. A
+    row is scaled by its fold norm when that norm lies in [2^-480,
+    2^480]; any other row gets a zero unit row. A zero or NaN norm
+    scores 0.0 against anything, which the zero row's matmul score is
+    exactly; a positive norm outside the range (deep underflow,
+    overflow, an infinite element) marks the row for the refold, since
+    ``_slack``'s bound assumes none of these."""
+    n = np.sqrt(_fold(V * V))
+    safe = (n >= 2.0**-480) & (n <= 2.0**480)
+    U = np.divide(V, n[:, None], out=np.zeros_like(V), where=safe[:, None])
+    return U, ~safe & (n > 0)
+
+
+def _slack(d: int) -> float:
+    """How far a prefilter score may lie from the folded cosine, doubled.
+    With u = 2^-53 and gamma_d = d*u / (1 - d*u), for rows within
+    ``_unit``'s range: the fold's dot is within gamma_d * |a| * |b| of
+    the exact one and each folded norm within gamma_d / 2 + u relatively,
+    so the fold is within 2 * gamma_d + 4u of the exact cosine. The
+    matmul of the unit rows, summed in any order, is within gamma_d of
+    their exact dot, and scaling leaves each unit row within gamma_d / 2
+    + 2u of the exact unit vector, so the score is within 2 * gamma_d +
+    4u as well: |score - fold| <= 4 * gamma_d + 8u, about (4d + 8)u.
+    The argmax needs twice that (the best score's row may be off by it
+    in the other direction); the extra 16u covers gamma_d's denominator
+    and the underflow of products of tiny unit-row elements."""
+    return (8 * d + 32) * 2.0**-53
+
+
+def _cosine_argmax(V: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(index, cosine) of each row of V's nearest row of C by ``cosine()``,
+    ties to the lower index: the fold over the rows of C whose matmul
+    score is within ``_slack`` of the row's best score (the true argmax
+    always is), and over every pair ``_unit`` marks."""
+    Uv, mv = _unit(V)
+    Uc, mc = _unit(C)
+    S = Uv @ Uc.T
+    must = mv[:, None] | mc[None, :]
+    best = np.where(must, -np.inf, S).max(axis=1, initial=-np.inf)
+    i, j = np.nonzero((S >= best[:, None] - _slack(V.shape[1])) | must)
+    folded = np.full(S.shape, -np.inf)
+    folded[i, j] = _cosine_at(V, C, i, j)
+    k = np.argmax(folded, axis=1)  # first max = lower index; NaN first, as Spark orders it
+    return k, folded[np.arange(len(V)), k]
+
+
+def _cosine_pairs(
+    A: np.ndarray, B: np.ndarray, threshold: float, upper: bool
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(i, j, cosine) of every pair of rows with ``cosine(A[i], B[j]) >=
+    threshold``: the fold over the pairs whose matmul score is at least
+    threshold - ``_slack`` (every pair that passes is), in row blocks of
+    ``_PAIR_BLOCK``. ``upper``: A is B, and only i < j is scored. A NaN
+    cosine passes, as it does Spark's and DuckDB's ``>=``."""
+    Ua, ma = _unit(A)
+    Ub, mb = (Ua, ma) if upper else _unit(B)
+    cut = threshold - _slack(A.shape[1])
+    out = [(np.zeros(0, dtype=np.int64),) * 2 + (np.zeros(0),)]
+    for lo in range(0, len(A), _PAIR_BLOCK):
+        hi = min(lo + _PAIR_BLOCK, len(A))
+        hit = (Ua[lo:hi] @ Ub.T >= cut) | ma[lo:hi, None] | mb[None, :]
+        if upper:
+            hit &= np.arange(lo, hi)[:, None] < np.arange(len(B))[None, :]
+        i, j = np.nonzero(hit)
+        c = _cosine_at(A, B, i + lo, j)
+        keep = (c >= threshold) | np.isnan(c)
+        out.append((i[keep] + lo, j[keep], c[keep]))
+    return tuple(np.concatenate(x) for x in zip(*out))
+
+
+def _block(vs: pd.Series, d: int) -> np.ndarray:
+    """The (n, d) float64 block of an Arrow batch of array<double>. A
+    NULL vector, or one of another length, is a NaN row, which scores
+    0.0 against anything, as a NULL vector or element does in
+    ``cosine()`` (a vector of another length scores NULL there)."""
+    V = np.full((len(vs), d), np.nan)
+    for r, v in enumerate(vs):
+        if v is not None and len(v) == d:
+            V[r] = v
+    return V
+
+
+def _assign(v: Column, centroids: list[tuple[int, list[float]]]) -> Column:
+    """struct<cid int, cos double> of an array<double> column: each row's
+    argmax-``cosine()`` centroid, ties to the lower id, and that cosine,
+    computed by ``_cosine_argmax`` in one Arrow pass. The codebook ships
+    as one (k, d) matrix sorted by id. Ids must fit the int32 ``cid``;
+    an id outside it raises here instead of wrapping downstream."""
+    from pyspark.sql.functions import pandas_udf
+
+    bad = [cid for cid, _ in centroids if not (-(2**31) <= cid < 2**31)]
+    if bad:
+        raise ValueError(f"ivf_assign emits int32 centroid ids; out-of-range: {bad[:3]}")
+    ordered = sorted(centroids, key=lambda t: t[0])
+    cids = np.array([cid for cid, _ in ordered], dtype=np.int32)
+    C = np.array([cv for _, cv in ordered], dtype=np.float64)
+
+    # no annotations: `from __future__ import annotations` stringifies
+    # them and pandas_udf's signature inference rejects the strings
+    def _assign_impl(vs):
+        k, cos = _cosine_argmax(_block(vs, C.shape[1]), C)
+        return pd.DataFrame({"cid": cids[k], "cos": cos})
+
+    return pandas_udf(_assign_impl, "cid int, cos double")(v)
+
+
 def ivf_assign(
     emb: DataFrame,
     centroids: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     out_col: str = "centroid_id",
-    use_arrow: bool = False,
 ) -> DataFrame:
-    """Assign every vector to its argmax-cosine centroid — ZERO shuffle:
-    the codebook is inlined as literals, the argmax is an array_max over
-    k (cos, -centroid_id) structs computed per row inside one projection.
-    At 10^12 rows this is the map-side quantization pass that feeds a
-    cluster-partitioned (Iceberg `bucket(centroid_id)`) layout, after
-    which every probe is partition-pruned to nprobe/k of the data.
-
-    ``use_arrow=True``: vectorized Arrow kernel — one batch matmul
-    against the (centroid-id-sorted) codebook matrix + argmax, still
-    zero shuffle. The expression form's per-row cost is k interpreted
-    HOF cosines (k*dim*3 interpreted ops — it DOMINATES large-k
-    assignment passes); the kernel is one BLAS call per Arrow batch.
-    Ties and zero-norm rows resolve to the min centroid id in both
-    forms; argmax values may differ in final-ulp from the expression
-    fold (matmul summation order), so the expression form remains the
-    DuckDB-oracle anchor.
-
-    Both forms emit the assignment as int32 (the expression form's
-    ``.cast("int")``, the kernel's ``returnType='int'``), so centroid
-    ids outside int32 would silently wrap — validated here instead of
-    discovered as a wrong cluster id downstream."""
-    _I32 = 2**31
-    bad = [cid for cid, _ in centroids if not (-_I32 <= cid < _I32)]
-    if bad:
-        raise ValueError(
-            f"ivf_assign emits int32 centroid ids; out-of-range: {bad[:3]}"
-        )
-    if use_arrow:
-        import numpy as np
-        import pandas as pd
-        from pyspark.sql.functions import pandas_udf
-
-        ordered = sorted(centroids, key=lambda t: t[0])
-        cids = np.array([cid for cid, _ in ordered], dtype="int64")
-        Cm = np.vstack([cv for _, cv in ordered]).astype("float64")
-        cn = np.linalg.norm(Cm, axis=1)
-        Cn = Cm / np.where(cn == 0.0, 1.0, cn)[:, None]
-        Cn[cn == 0.0] = 0.0
-
-        # no annotations: `from __future__ import annotations` stringifies
-        # them and pandas_udf's signature inference rejects the strings;
-        # the explicit "int" returnType + SCALAR default carry the typing
-        def _assign_impl(vs):
-            if not len(vs):
-                return pd.Series([], dtype="int32")
-            V = np.vstack(vs.to_numpy()).astype("float64")
-            n = np.linalg.norm(V, axis=1)
-            Vn = V / np.where(n == 0.0, 1.0, n)[:, None]
-            Vn[n == 0.0] = 0.0
-            best = np.argmax(Vn @ Cn.T, axis=1)  # first max = min cid
-            return pd.Series(cids[best].astype("int32"))
-
-        return emb.withColumn(
-            out_col, pandas_udf(_assign_impl, "int")(F.col(vec_col))
-        )
-    best = _nearest_centroid(F.col(vec_col).cast("array<double>"), centroids)
-    return emb.withColumn(out_col, (-best["negid"]).cast("int"))
+    """Assign every vector to its argmax-cosine centroid (int32
+    ``out_col``, ties to the lower id) — ZERO shuffle: one Arrow pass of
+    the cosine kernel per batch against the codebook, a matmul plus the
+    exact fold on the near-best centroids, so the assignment is the one
+    ``cosine()`` and the DuckDB twin give. At 10^12 rows this is the
+    map-side quantization pass that feeds a cluster-partitioned (Iceberg
+    `bucket(centroid_id)`) layout, after which every probe is
+    partition-pruned to nprobe/k of the data."""
+    best = _assign(F.col(vec_col).cast("array<double>"), centroids)
+    return emb.withColumn(out_col, best["cid"])
 
 
 def ivf_topk(
@@ -363,7 +454,8 @@ def ivf_topk(
 ) -> DataFrame:
     """IVF ANN top-k: rank centroids against the query driver-side, probe
     the nprobe nearest clusters only, exact-score the candidates. One
-    stage: filter + TakeOrderedAndProject, no shuffle, no Python."""
+    stage, no shuffle: the assignment's Arrow pass, the filter, and a
+    TakeOrderedAndProject."""
     probes = _probe_ids(query_vec, centroids, nprobe)
     assigned = ivf_assign(emb, centroids, id_col, vec_col)
     cand = assigned.filter(F.col("centroid_id").isin(probes))
@@ -1107,5 +1199,5 @@ def ivf_objective(
 ) -> float:
     """Mean cosine of every vector to its assigned centroid — the
     spherical k-means objective (higher is better)."""
-    best = _nearest_centroid(F.col(vec_col).cast("array<double>"), centroids)["c"]
-    return float(emb.select(F.avg(best)).first()[0])
+    best = _assign(F.col(vec_col).cast("array<double>"), centroids)["cos"]
+    return float(emb.select(best.alias("__c")).select(F.avg("__c")).first()[0])

@@ -51,13 +51,27 @@ def test_exact_dedup_hash_collisions_stay_correct(spark, monkeypatch):
     assert {r.doc_id for r in kept.collect()} == {"a", "c", "d"}
 
 
+def _expression_assign(emb, cents):
+    """{vec_id: (cid, cos)} of the argmax-``cosine()`` expression over a
+    literal codebook (array_max of (cos, -cid) structs, ties to the
+    lower id): the assignment ``ivf_assign`` replaced."""
+    v = F.col("embedding").cast("array<double>")
+    best = F.array_max(
+        F.array(
+            *[
+                F.struct(D.cosine(v, SIM._lit_vec(cv)).alias("c"), F.lit(-cid).alias("n"))
+                for cid, cv in cents
+            ]
+        )
+    )
+    return {r.vec_id: (-r.b.n, r.b.c) for r in emb.select("vec_id", best.alias("b")).collect()}
+
+
 def test_semantic_dup_pairs_arrow_matches_expression(spark):
-    """The Arrow kernel tier (blocked numpy matmul per cluster +
-    vectorized assignment) must produce the SAME pair set as the
-    expression form and cosines equal at the rounded-6 output precision
-    (summation order may differ in final ulp — tolerance 1e-5 guards the
-    comparison; fixture thresholds sit away from achievable cosines so
-    the pair SET is ulp-stable)."""
+    """The cosine kernel (matmul prefilter, then the exact fold) gives
+    the pair set and the rounded cosines of ``cosine()`` run on every
+    within-cluster pair, bit for bit, and the assignment of the
+    argmax-``cosine()`` expression."""
     import random
 
     from go_html_transform_spark.operators.similarity import (
@@ -77,26 +91,21 @@ def test_semantic_dup_pairs_arrow_matches_expression(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = ivf_lloyd_centroids(emb, k=8, iters=2)
 
-    expr = D.semantic_dup_pairs(emb, cents, threshold=0.9, use_arrow=False)
-    arrow = D.semantic_dup_pairs(emb, cents, threshold=0.9, use_arrow=True)
-    se = {(r.id_a, r.id_b): (r.cid, r.cos) for r in expr.collect()}
-    sa = {(r.id_a, r.id_b): (r.cid, r.cos) for r in arrow.collect()}
-    assert set(se) == set(sa) and len(se) > 0
-    for k_, (cid_e, cos_e) in se.items():
-        cid_a, cos_a = sa[k_]
-        assert cid_e == cid_a
-        assert abs(cos_e - cos_a) < 1e-5, (k_, cos_e, cos_a)
+    expr = _expression_assign(emb, cents)
+    got = {r.vec_id: r.centroid_id for r in ivf_assign(emb, cents).collect()}
+    assert got == {k: cid for k, (cid, _) in expr.items()}
 
-    # assignment tier parity (modulo exact argmax ties, absent here)
-    ae = {
-        r.vec_id: r.centroid_id
-        for r in ivf_assign(emb, cents, use_arrow=False).collect()
+    brute = {
+        (r.id_a, r.id_b): r.cos
+        for r in D.embedding_near_duplicates(emb, threshold=0.9).collect()
+        if got[r.id_a] == got[r.id_b]
     }
-    aa = {
-        r.vec_id: r.centroid_id
-        for r in ivf_assign(emb, cents, use_arrow=True).collect()
+    pairs = {
+        (r.id_a, r.id_b): (r.cid, r.cos)
+        for r in D.semantic_dup_pairs(emb, cents, threshold=0.9).collect()
     }
-    assert ae == aa
+    assert len(pairs) > 0
+    assert pairs == {p: (got[p[0]], c) for p, c in brute.items()}
 
 
 def test_exact_dedup_null_ids_keep_a_real_row(spark):
@@ -141,28 +150,33 @@ def test_minhash_near_duplicates(spark, corpus):
 
 
 def test_minhash_near_duplicates_arrow_path_identical(spark, corpus):
-    """use_arrow=True (the kernel signature hot path) returns the exact
-    same pair set and jaccards as the expression path — the two
-    signatures are parity-pinned element-wise, so the banding and
-    verify stages see identical inputs."""
-    expr = sorted(
+    """The Arrow kernel path returns the pair set and jaccards of the
+    same pipeline run on its DuckDB twin's signatures: band keys from
+    ``minhash_signature_sql``, pairs sharing a band, exact Jaccard >=
+    0.5."""
+    import itertools
+
+    import duckdb
+
+    rows = [(r.doc_id, list(r.tokens)) for r in corpus.collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE c (doc_id VARCHAR, tokens INTEGER[])")
+    con.executemany("INSERT INTO c VALUES (?, ?)", rows)
+    sigs = dict(
+        con.execute(f"SELECT doc_id, {D.minhash_signature_sql('tokens')} FROM c").fetchall()
+    )
+    toks = {i: set(t) for i, t in rows}
+    want = set()
+    for a, b in itertools.combinations(sorted(sigs), 2):
+        shared = any(sigs[a][k : k + 4] == sigs[b][k : k + 4] for k in range(0, 16, 4))
+        inter, union = len(toks[a] & toks[b]), len(toks[a] | toks[b])
+        if shared and inter / union >= 0.5:
+            want.add((a, b, (2 * inter * 1_000_000 + union) // (2 * union)))
+    got = {
         (r.id_a, r.id_b, r.jaccard_ppm)
         for r in D.minhash_near_duplicates(corpus, "doc_id", threshold=0.5).collect()
-    )
-    arrow = sorted(
-        (r.id_a, r.id_b, r.jaccard_ppm)
-        for r in D.minhash_near_duplicates(
-            corpus, "doc_id", threshold=0.5, use_arrow=True
-        ).collect()
-    )
-    assert expr == arrow and expr
-
-
-def test_minhash_arrow_rejects_non16(spark, corpus):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="MinHash-16"):
-        D.minhash_lsh_candidates(corpus, "doc_id", num_hashes=8, use_arrow=True)
+    }
+    assert got == want and got
 
 
 def test_simhash_near_for_near_docs(spark, corpus):
@@ -303,7 +317,8 @@ def test_ivf_assignment_partitions_corpus(spark):
 
 def test_ivf_topk_recall_and_plan(spark):
     """nprobe=8 (all clusters) == exact brute force; nprobe=2 keeps
-    reasonable recall. Physical plan: no exchange, no Python."""
+    reasonable recall. Physical plan: no exchange, and no Python but the
+    assignment's cosine kernel."""
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     cents = SIM.ivf_centroids(emb, k=8)
     qv = list(emb.filter("vec_id = 0").collect()[0].embedding)
@@ -315,7 +330,17 @@ def test_ivf_topk_recall_and_plan(spark):
     assert recall >= 0.3, (approx, exact)
     plan = SIM.ivf_topk(emb, qv, cents, k=10, nprobe=2)._jdf.queryExecution().executedPlan().toString()
     assert "Exchange hashpartitioning" not in plan
-    assert "Pandas" not in plan and "PythonUDF" not in plan
+    assert _python_udfs(plan) == {"_assign_impl"}, plan
+
+
+def _python_udfs(plan):
+    """The functions an executed plan string runs in Python workers: its
+    ArrowEvalPython UDFs by name, plus "<other>" for any other Python
+    node (a pandas grouped map, a row-at-a-time UDF)."""
+    import re
+
+    names = set(re.findall(r"ArrowEvalPython \[(\w+)\(", plan))
+    return names | ({"<other>"} if re.search(r"Pandas|BatchEvalPython", plan) else set())
 
 
 def test_ivf_lloyd_refinement(spark):
@@ -668,7 +693,8 @@ def test_ivf_index_at_rest_prunes_files_and_matches(spark, tmp_path):
 def test_ivfpq_encode_and_search(spark):
     """IVFPQ: residual codes match a numpy brute force; search with all
     probes + full rerank equals brute force; tight budgets keep recall;
-    plan stays exchange-free and Python-free."""
+    plan stays exchange-free, with no Python but the assignment's cosine
+    kernel."""
     import numpy as np
 
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -713,7 +739,7 @@ def test_ivfpq_encode_and_search(spark):
         .toString()
     )
     assert "Exchange hashpartitioning" not in plan
-    assert "Pandas" not in plan and "PythonUDF" not in plan
+    assert _python_udfs(plan) == {"_assign_impl"}, plan
 
 
 def test_trained_ivf_centroids_deterministic_and_better(spark):
@@ -900,48 +926,105 @@ def test_semantic_dedup_keep_matches_python_reference(spark, vectors):
         assert abs(cosc - _cos_py(vecs[vid], cmap[cid])) < 1e-6
 
 
-def test_semantic_dup_pairs_plan_is_equi_join(spark, vectors):
-    """The within-cluster pair join must be hash/sort-merge on the
-    cluster key — never a cartesian/nested-loop (that would be the
-    all-pairs scan SemDeDup exists to avoid)."""
+def test_semantic_dup_pairs_plan_is_cell_keyed(spark, vectors):
+    """The within-cluster pairs are formed by one grouped Arrow task per
+    tile of a cell, keyed on (cid, __ti, __tj) — never a
+    cartesian/nested-loop (that would be the all-pairs scan SemDeDup
+    exists to avoid)."""
     cents = SIM.ivf_centroids(vectors, k=4)
     plan = D.semantic_dup_pairs(vectors, cents, threshold=0.5)._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
+    assert "FlatMapGroupsInPandas [cid" in plan and "__ti" in plan, plan
 
 
-def _conjuncts(expr):
-    if expr.nodeName() == "And":
-        return _conjuncts(expr.left()) + _conjuncts(expr.right())
-    return [expr]
+def test_fold_cosine_bit_equal_to_cosine(spark):
+    """``fold_cosine`` is ``cosine()`` bit for bit: array<float> vectors
+    widened to double and array<double> vectors, norms spread over six
+    orders of magnitude, a zero vector, a NULL vector and a NULL
+    element (both score 0.0)."""
+    import numpy as np
 
-
-def test_semantic_dup_pairs_join_scores_only_kept_pairs(spark, vectors):
-    """The join tier's threshold filter lands in the join condition; its
-    cosine is guarded by id_a < id_b, so the interpreted fold runs on the
-    c(c-1)/2 kept pairs of a cell, not on all c^2 ordered row pairs,
-    whatever order the conjuncts take."""
-    cents = SIM.ivf_centroids(vectors, k=4)
-    pairs = D.semantic_dup_pairs(vectors, cents, threshold=0.5)
-    joins = []
-
-    def walk(node):
-        name = node.nodeName()
-        if name.endswith("Join") and node.condition().isDefined():
-            joins.append(node.condition().get())
-        seq = node.children()
-        for i in range(seq.size()):
-            walk(seq.apply(i))
-
-    walk(pairs._jdf.queryExecution().optimizedPlan())
-    scored = [
-        c for j in joins for c in _conjuncts(j) if "SQRT(" in c.toString()
+    rng = np.random.default_rng(5)
+    n, d = 600, 48
+    A = rng.normal(size=(n, d)) * 10.0 ** rng.uniform(-3, 3, size=(n, 1))
+    B = A + rng.normal(size=(n, d)) * 0.01 * np.abs(A).mean(axis=1, keepdims=True)
+    A[0] = 0.0
+    A32, B32 = A.astype(np.float32), B.astype(np.float32)
+    rows = [
+        (i, A[i].tolist(), B[i].tolist(), A32[i].tolist(), B32[i].tolist())
+        for i in range(n)
     ]
-    assert scored
-    for c in scored:
-        assert c.nodeName() == "CaseWhen", c.toString()
-        guard = c.branches().apply(0)._1()
-        assert guard.nodeName() == "LessThan" and "__id" in guard.toString()
+    df = spark.createDataFrame(
+        rows,
+        "id int, a array<double>, b array<double>, fa array<float>, fb array<float>",
+    )
+    dbl = lambda c: F.col(c).cast("array<double>")  # noqa: E731
+    got = sorted(
+        df.select(
+            "id",
+            D.cosine(F.col("a"), F.col("b")).alias("c"),
+            D.cosine(dbl("fa"), dbl("fb")).alias("cf"),
+        ).collect()
+    )
+    want = SIM.fold_cosine(A, B)
+    want32 = SIM.fold_cosine(A32.astype(np.float64), B32.astype(np.float64))
+    assert [r.c for r in got] == want.tolist()
+    assert [r.cf for r in got] == want32.tolist()
+    assert want[0] == 0.0
+    nulls = np.array([[1.0, np.nan, 2.0], [np.nan] * 3])
+    assert SIM.fold_cosine(nulls, np.ones((2, 3))).tolist() == [0.0, 0.0]
+
+
+def test_semantic_dup_pairs_threshold_is_the_folded_cosine(spark, vectors):
+    """A pair whose folded cosine equals the threshold is kept; at the
+    next double above it, it is dropped."""
+    import numpy as np
+
+    cents = [(0, [1.0] * 16)]
+    vecs = {r.vec_id: np.array(r.embedding) for r in vectors.collect()}
+    a, b = 0, 1
+    t = float(SIM.fold_cosine(vecs[a][None, :], vecs[b][None, :])[0])
+    at = {(r.id_a, r.id_b) for r in D.semantic_dup_pairs(vectors, cents, threshold=t).collect()}
+    above = {
+        (r.id_a, r.id_b)
+        for r in D.semantic_dup_pairs(
+            vectors, cents, threshold=float(np.nextafter(t, 2))
+        ).collect()
+    }
+    assert (a, b) in at and (a, b) not in above
+
+
+def test_ivf_assign_null_vector_and_null_element(spark):
+    """A NULL vector and a vector with a NULL element score 0.0 against
+    every centroid in ``cosine()``, so they go to the lowest centroid id
+    with cosine 0.0, as the argmax-``cosine()`` expression assigns them.
+    Rows whose norms leave the prefilter's range (deep underflow,
+    overflow) are refolded and match the expression too."""
+    emb = spark.createDataFrame(
+        [
+            (1, None), (2, [1.0, None]), (3, [0.0, 0.0]), (4, [0.0, 2.0]),
+            (5, [3e-160, 4e-160]), (6, [-1e-200, 1e-300]), (7, [1e200, -3e199]),
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    cents = [(7, [-1.0, 0.0]), (3, [0.0, -1.0]), (5, [0.0, 1.0])]
+    expr = _expression_assign(emb, cents)
+    assert {k: expr[k] for k in (1, 2, 3, 4)} == {
+        1: (3, 0.0), 2: (3, 0.0), 3: (3, 0.0), 4: (5, 1.0)
+    }
+    got = {
+        r.vec_id: (r.a.cid, r.a.cos)
+        for r in emb.select("vec_id", SIM._assign(F.col("embedding"), cents).alias("a")).collect()
+    }
+    assert got == expr
+    kept = {
+        r.vec_id: (r.cid, r.cos_centroid)
+        for r in D.semantic_dedup_keep(emb, cents, threshold=0.5).collect()
+    }
+    assert {k: kept[k] for k in (1, 2, 3, 4)} == {
+        1: (3, 0.0), 2: (3, 0.0), 3: (3, 0.0), 4: (5, 1.0)
+    }
 
 
 def test_semantic_dedup_composes_with_trained_centroids(spark):
@@ -972,11 +1055,10 @@ def test_semantic_dedup_composes_with_trained_centroids(spark):
 
 
 def test_semantic_dup_pairs_arrow_string_ids_with_nulls(spark):
-    """ADVICE r4: the Arrow tier must orient (id_a, id_b) exactly like
-    the join form's binary-UTF8 ``id_a < id_b`` for STRING ids
-    (including non-ASCII), and NULL ids must neither crash the pandas
-    sort nor appear in any pair — matching the join form, where the
-    NULL comparison excludes them."""
+    """The pair tasks orient (id_a, id_b) exactly like Spark's
+    binary-UTF8 ``id_a < id_b`` for STRING ids (including non-ASCII),
+    and NULL ids neither crash the pandas sort nor appear in any pair,
+    as Spark's NULL comparison would exclude them."""
     import random
 
     rng = random.Random(7)
@@ -989,20 +1071,19 @@ def test_semantic_dup_pairs_arrow_string_ids_with_nulls(spark):
     emb = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
     cents = [(0, base)]
 
-    expr = D.semantic_dup_pairs(emb, cents, threshold=0.9, use_arrow=False)
-    se = {(r.id_a, r.id_b) for r in expr.collect()}
+    import itertools
+
+    expected = {
+        tuple(sorted(p, key=lambda x: x.encode("utf-8")))
+        for p in itertools.combinations(names, 2)
+    }
     # max_cell=2 tiles the one cell, so off-diagonal tasks orient pairs
     # across two slices
     for max_cell in (D.MAX_TILE_ROWS, 2):
-        arrow = D.semantic_dup_pairs(
-            emb, cents, threshold=0.9, use_arrow=True, max_cell=max_cell
-        )
-        sa = {(r.id_a, r.id_b) for r in arrow.collect()}
-        assert se == sa and len(se) == len(names) * (len(names) - 1) // 2
-        assert all(a is not None and b is not None for a, b in sa)
-        # orientation matches the UTF-8 byte order Spark's < uses
-        for a, b in sa:
-            assert a.encode("utf-8") < b.encode("utf-8")
+        pairs = D.semantic_dup_pairs(emb, cents, threshold=0.9, max_cell=max_cell)
+        # every pair, no NULL id, oriented by the UTF-8 byte order
+        # Spark's < uses
+        assert {(r.id_a, r.id_b) for r in pairs.collect()} == expected
     tiled = D._tiles(
         SIM.ivf_assign(emb, cents, out_col="cid").select(
             "cid", F.col("vec_id").alias("__id"), F.col("embedding").alias("__v")
@@ -1020,8 +1101,8 @@ def test_semantic_dup_pairs_arrow_string_ids_with_nulls(spark):
 
 
 def test_ivf_assign_rejects_int32_overflow_centroid_ids(spark):
-    """ADVICE r4: both ivf_assign forms emit int32 assignments; centroid
-    ids outside int32 must raise instead of silently wrapping."""
+    """ivf_assign emits int32 assignments; centroid ids outside int32
+    must raise instead of silently wrapping."""
     import pytest as _pytest
 
     from go_html_transform_spark.operators.similarity import ivf_assign
@@ -1031,10 +1112,8 @@ def test_ivf_assign_rejects_int32_overflow_centroid_ids(spark):
     )
     bad = [(2**31, [1.0, 0.0])]
     with _pytest.raises(ValueError, match="int32"):
-        ivf_assign(emb, bad, use_arrow=False)
-    with _pytest.raises(ValueError, match="int32"):
-        ivf_assign(emb, bad, use_arrow=True)
-    ok = ivf_assign(emb, [(2**31 - 1, [1.0, 0.0])], use_arrow=False)
+        ivf_assign(emb, bad)
+    ok = ivf_assign(emb, [(2**31 - 1, [1.0, 0.0])])
     assert ok.collect()[0].centroid_id == 2**31 - 1
 
 
@@ -1044,8 +1123,8 @@ def _sem_pairs_set(df):
 
 def test_semantic_pairs_tiling_exact_parity(spark):
     """Hot-cell guard (exact tiling): with max_cell small enough that
-    every cell tiles, the Arrow tier must emit EXACTLY the expression
-    form's pair set — tiling is a task decomposition, never an
+    every cell tiles, the pairs are EXACTLY the untiled ones, cosines
+    included — tiling is a task decomposition, never an
     approximation."""
     import random
 
@@ -1061,15 +1140,10 @@ def test_semantic_pairs_tiling_exact_parity(spark):
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cents = SIM.ivf_lloyd_centroids(emb, k=2, iters=1)
 
-    expr = D.semantic_dup_pairs(emb, cents, threshold=0.9, use_arrow=False)
-    tiledonly = D.semantic_dup_pairs(
-        emb, cents, threshold=0.9, use_arrow=True, max_cell=64
-    )
-    se, st = _sem_pairs_set(expr), _sem_pairs_set(tiledonly)
-    assert set(se) == set(st) and len(se) > 50
-    for k_, (cid_e, cos_e) in se.items():
-        cid_t, cos_t = st[k_]
-        assert cid_e == cid_t and abs(cos_e - cos_t) < 1e-5
+    whole = D.semantic_dup_pairs(emb, cents, threshold=0.9, max_cell=None)
+    tiledonly = D.semantic_dup_pairs(emb, cents, threshold=0.9, max_cell=64)
+    se, st = _sem_pairs_set(whole), _sem_pairs_set(tiledonly)
+    assert se == st and len(se) > 50
 
     # the plan really tiles: more than one task key per hot cell
     assigned = SIM.ivf_assign(emb, cents, out_col="cid").select(
@@ -1082,8 +1156,8 @@ def test_semantic_pairs_tiling_exact_parity(spark):
 
 
 def test_semantic_dup_pairs_arrow_builds_without_spark_jobs(spark):
-    """Building the Arrow tier is lazy: no Spark job runs until the pair
-    frame executes, with or without cells over ``max_cell``."""
+    """Building the pair frame is lazy: no Spark job runs until it
+    executes, with or without cells over ``max_cell``."""
     from test_scale_hygiene import _jobs_in
 
     rng = random.Random(5)
@@ -1096,9 +1170,7 @@ def test_semantic_dup_pairs_arrow_builds_without_spark_jobs(spark):
         pairs, jobs = _jobs_in(
             spark,
             group,
-            lambda: D.semantic_dup_pairs(
-                emb, cents, threshold=0.5, use_arrow=True, max_cell=max_cell
-            ),
+            lambda: D.semantic_dup_pairs(emb, cents, threshold=0.5, max_cell=max_cell),
         )
         assert jobs == [], (max_cell, jobs)
         assert pairs.columns == ["cid", "id_a", "id_b", "cos"]
@@ -1173,7 +1245,7 @@ def _plan_nodes(plan):
 
 
 def test_semantic_dup_pairs_arrow_runs_assignment_once(spark):
-    """The tiled Arrow tier sizes its cells on the cell-keyed exchange
+    """The pair tasks size their cells on the cell-keyed exchange
     itself, so the executed plan evaluates the ``ivf_assign`` Arrow UDF
     once (one ArrowEvalPython), with and without cells over the bound."""
     rng = random.Random(11)
@@ -1183,9 +1255,7 @@ def test_semantic_dup_pairs_arrow_runs_assignment_once(spark):
     )
     cents = [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])]
     for max_cell in (D.MAX_TILE_ROWS, 8):
-        pairs = D.semantic_dup_pairs(
-            emb, cents, threshold=0.5, use_arrow=True, max_cell=max_cell
-        )
+        pairs = D.semantic_dup_pairs(emb, cents, threshold=0.5, max_cell=max_cell)
         assert pairs.collect()
         nodes = _plan_nodes(pairs._jdf.queryExecution().executedPlan())
         assert nodes.count("ArrowEvalPython") == 1, (max_cell, nodes)

@@ -144,7 +144,7 @@ def sunk_three_shards(spark, tmp_path_factory):
     )
     executions = _sql_executions(spark) - before
     nodes = {
-        "kernel": _plan_nodes(spark, executions, "ArrowEvalPython", "_minhash16_impl"),
+        "kernel": _plan_nodes(spark, executions, "ArrowEvalPython", "_minhash_impl"),
         "band_window": _plan_nodes(spark, executions, "Window", "band"),
     }
     return out, stats, nodes

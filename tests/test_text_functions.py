@@ -1,6 +1,7 @@
 """Text-analysis kernels: lang-id, quality, token counts, fingerprint —
 plus fingerprint/rolling-hash determinism."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from go_html_transform_spark.functions import text as TX
@@ -109,33 +110,45 @@ def test_pandas_udf_kernels_match_numpy_and_expr(spark):
     assert out[1][2] == 0.25 and out[4][2] == 0.75 and out[3][2] == 0.0
 
 
-def test_minhash_arrow_kernel_matches_expression(spark):
-    """The vectorized Arrow MinHash kernel must equal the Column-expression
-    form element-for-element, including the empty-row sentinel."""
-    from pyspark.sql import functions as F
+def test_minhash_kernel_widths_match_duckdb(spark):
+    """The MinHash kernel at widths 8, 16 and 32 equals its DuckDB twin
+    ``minhash_signature_sql`` element for element: negative ids hash
+    with a truncating ``%``, NULL elements are skipped, and an empty or
+    NULL array gets the sentinel in every slot."""
+    import duckdb
 
-    from go_html_transform_spark.functions.kernels import minhash16_arrow
-    from go_html_transform_spark.operators.dedup import minhash_signature
-
-    rows = [(1, [5, 5, 900, 23]), (2, []), (3, [1023]), (4, list(range(200)))]
-    df = spark.createDataFrame(rows, "id int, tokens array<int>")
-    both = df.select(
-        "id",
-        minhash_signature(F.col("tokens")).alias("expr_sig"),
-        minhash16_arrow(F.col("tokens")).alias("arrow_sig"),
-    ).collect()
-    for r in both:
-        assert list(r.expr_sig) == list(r.arrow_sig), r.id
-
-    # and on real data
-    doc = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    from go_html_transform_spark.functions.tokenize import tokens_expr
-
-    seq = doc.select(tokens_expr(F.col("text")).alias("tokens"))
-    cmp = seq.select(
-        (minhash_signature(F.col("tokens")) == minhash16_arrow(F.col("tokens"))).alias("eq")
+    from go_html_transform_spark.operators.dedup import (
+        minhash_signature,
+        minhash_signature_sql,
     )
-    assert cmp.filter(~F.col("eq")).count() == 0
+
+    rows = [
+        (1, [5, 5, 900, 23]), (2, []), (3, None), (4, [-3, 5, -9]),
+        (5, [-2147483648, 7]), (6, [1, None, -3]), (7, list(range(-100, 200))),
+        (8, [2147483647]),
+    ]
+    df = spark.createDataFrame(rows, "id int, tokens array<int>")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE t (id INTEGER, tokens INTEGER[])")
+    con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+    for width in (8, 16, 32):
+        got = {
+            r.id: list(r.sig)
+            for r in df.select("id", minhash_signature(F.col("tokens"), width).alias("sig")).collect()
+        }
+        want = {
+            i: list(sig)
+            for i, sig in con.execute(
+                f"SELECT id, {minhash_signature_sql('tokens', width)} FROM t"
+            ).fetchall()
+        }
+        assert got == want, width
+
+    # a batch with a NULL element arrives as float64, which rounds ids
+    # of magnitude >= 2^53: the kernel refuses it instead
+    wide = spark.createDataFrame([(1, [2**60 + 1, None])], "id int, tokens array<bigint>")
+    with pytest.raises(Exception, match="2\\^53"):
+        wide.select(minhash_signature(F.col("tokens"))).collect()
 
 
 def test_quality_score_ppm_matches_double_form(spark):

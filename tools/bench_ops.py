@@ -136,15 +136,12 @@ def main() -> None:
             D.simhash16(F.col("tokens")).alias("sh"),
         )
     ))
-    # Arrow-kernel fast paths (expression forms above are the DuckDB-oracle
-    # twins; these are what production calls — parity pinned in tests)
+    # Arrow-kernel fast path of the text analysis (the expression forms
+    # above are the DuckDB-oracle twins; parity pinned in tests)
     from go_html_transform_spark.functions import kernels as K
 
     timed("text_analysis_kernel", n_doc_big, lambda: drain(
         doc_big.select("doc_id", K.text_analysis_arrow(F.col("text")).alias("ta"))
-    ))
-    timed("minhash_kernel", n_doc_big, lambda: drain(
-        doc_big.select("doc_id", K.minhash16_arrow(F.col("tokens")).alias("mh"))
     ))
     timed("shard_assign", n_doc_big, lambda: drain(
         SH.assign_shards(doc_big.select("doc_id", "doc_key"), F.col("doc_key"), 1024)

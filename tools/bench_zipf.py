@@ -75,19 +75,11 @@ def main() -> None:
     # candidate rate: the number LSH actually has to verify
     n_cand = timed(
         "minhash_candidates",
-        lambda: D.minhash_lsh_candidates(
-            docs, "doc_id", use_arrow=False
-        ).count(),
+        lambda: D.minhash_lsh_candidates(docs, "doc_id").count(),
     )
     out["minhash_candidates"] = n_cand
-    timed(
-        "minhash_candidates_arrow",
-        lambda: D.minhash_lsh_candidates(docs, "doc_id", use_arrow=True).count(),
-    )
 
-    pairs = D.minhash_near_duplicates(
-        docs, "doc_id", threshold=0.8, use_arrow=True
-    ).persist()
+    pairs = D.minhash_near_duplicates(docs, "doc_id", threshold=0.8).persist()
     n_pairs = timed("minhash_near_dup", lambda: pairs.count(), iters=1)
     out["minhash_verified_pairs"] = n_pairs
     # recall on the planted structure: dup doc z...k pairs with z...(k-1)
@@ -105,25 +97,16 @@ def main() -> None:
     sem = timed(
         "semdedup_pairs",
         lambda: D.semantic_dup_pairs(
-            emb, cents, threshold=0.9, id_col="doc_key"
+            emb, cents, threshold=0.9, id_col="doc_key", max_cell=None
         ).count(),
     )
     out["semdedup_pairs"] = sem
-    sem_a = timed(
-        "semdedup_pairs_arrow",
-        lambda: D.semantic_dup_pairs(
-            emb, cents, threshold=0.9, id_col="doc_key", use_arrow=True,
-            max_cell=None,
-        ).count(),
-    )
-    out["semdedup_pairs_arrow"] = sem_a
-    assert sem_a == sem, (sem, sem_a)  # identical pair count, both tiers
     # hot-cell guard on (default max_cell): oversized cells tile
     # exactly, so the pair count equals the unguarded one
     sem_g = timed(
         "semdedup_pairs_guarded",
         lambda: D.semantic_dup_pairs(
-            emb, cents, threshold=0.9, id_col="doc_key", use_arrow=True
+            emb, cents, threshold=0.9, id_col="doc_key"
         ).count(),
     )
     out["semdedup_pairs_guarded"] = sem_g

@@ -314,12 +314,12 @@ def main() -> None:
         ),
         (
             "SemDeDup within-cluster pairs",
-            "MUST: the pair join is an equi-join keyed on (cid, __ti, "
-            "__tj), the tiled cell (SortMerge/ShuffledHash/BroadcastHash "
-            "all acceptable) — NEVER CartesianProduct/BroadcastNestedLoop; "
-            "the cell sizes are a Window on the cell-keyed exchange (no "
-            "count joined back); the assignment itself is a zero-shuffle "
-            "projection (literal codebook argmax).",
+            "MUST: the pairs come from one FlatMapGroupsInPandas task per "
+            "(cid, __ti, __tj), the tiled cell, scored by the cosine "
+            "kernel — NEVER a CartesianProduct/BroadcastNestedLoop or a "
+            "pair join; the cell sizes are a Window on the cell-keyed "
+            "exchange (no count joined back); the assignment is one "
+            "zero-shuffle ArrowEvalPython pass against the codebook.",
             D.semantic_dup_pairs(emb_d, sem_cents, threshold=0.4),
         ),
         (
