@@ -179,6 +179,33 @@ def test_minhash_near_duplicates_arrow_path_identical(spark, corpus):
     assert got == want and got
 
 
+def test_minhash_lsh_candidates_any_width(spark, corpus):
+    """``minhash_lsh_candidates`` runs at widths other than 16: at 8
+    hashes in 2 bands its candidates are exactly the pairs whose DuckDB
+    twin signatures share a band."""
+    import itertools
+
+    import duckdb
+
+    rows = [(r.doc_id, list(r.tokens)) for r in corpus.collect()]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE c (doc_id VARCHAR, tokens INTEGER[])")
+    con.executemany("INSERT INTO c VALUES (?, ?)", rows)
+    sigs = dict(
+        con.execute(f"SELECT doc_id, {D.minhash_signature_sql('tokens', 8)} FROM c").fetchall()
+    )
+    want = {
+        (a, b)
+        for a, b in itertools.combinations(sorted(sigs), 2)
+        if any(sigs[a][k : k + 4] == sigs[b][k : k + 4] for k in (0, 4))
+    }
+    got = {
+        (r.id_a, r.id_b)
+        for r in D.minhash_lsh_candidates(corpus, "doc_id", num_hashes=8, bands=2).collect()
+    }
+    assert got == want and ("d0", "d1") in got
+
+
 def test_simhash_near_for_near_docs(spark, corpus):
     sh = {
         r.doc_id: r.sh

@@ -110,6 +110,38 @@ def test_pandas_udf_kernels_match_numpy_and_expr(spark):
     assert out[1][2] == 0.25 and out[4][2] == 0.75 and out[3][2] == 0.0
 
 
+def test_minhash_arrow_kernel_matches_expression(spark):
+    """The MinHash-16 Arrow kernel equals its DuckDB expression twin
+    ``minhash_signature_sql`` element for element, including the
+    empty-row sentinel, on literal rows and on real documents."""
+    import duckdb
+
+    from go_html_transform_spark.functions.kernels import minhash16_arrow
+    from go_html_transform_spark.operators.dedup import minhash_signature_sql
+
+    def twin(rows):
+        con = duckdb.connect()
+        con.execute("CREATE TABLE t (id BIGINT, tokens INTEGER[])")
+        con.executemany("INSERT INTO t VALUES (?, ?)", rows)
+        return {
+            i: list(sig)
+            for i, sig in con.execute(f"SELECT id, {minhash_signature_sql('tokens')} FROM t").fetchall()
+        }
+
+    rows = [(1, [5, 5, 900, 23]), (2, []), (3, [1023]), (4, list(range(200)))]
+    df = spark.createDataFrame(rows, "id int, tokens array<int>")
+    got = {r.id: list(r.sig) for r in df.select("id", minhash16_arrow(F.col("tokens")).alias("sig")).collect()}
+    assert got == twin(rows)
+
+    # and on real data
+    doc = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    seq = doc.select("doc_id", tokens_expr(F.col("text")).alias("tokens"))
+    out = seq.select("doc_id", "tokens", minhash16_arrow(F.col("tokens")).alias("sig")).collect()
+    assert len(out) > 100
+    want = twin([(r.doc_id, list(r.tokens)) for r in out])
+    assert {r.doc_id: list(r.sig) for r in out} == want
+
+
 def test_minhash_kernel_widths_match_duckdb(spark):
     """The MinHash kernel at widths 8, 16 and 32 equals its DuckDB twin
     ``minhash_signature_sql`` element for element: negative ids hash
